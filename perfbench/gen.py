@@ -352,29 +352,45 @@ def _vocab(rng: random.Random, n: int) -> list[str]:
     syl = ["ka", "to", "ri", "mu", "se", "na", "lo", "pe", "di", "vo", "ze", "gu"]
     words = set()
     while len(words) < n:
-        words.add("".join(rng.choice(syl) for _ in range(rng.randint(2, 4))))
+        words.add("".join(rng.choice(syl) for _ in range(rng.randint(1, 3))))
     return sorted(words)
 
 
+#: shortest source a near clone is made from: appending one word to an
+#: n-word doc gives 3-gram Jaccard (n-2)/(n-1), which LSH (32 hashes, 8
+#: bands) misses with probability (1-J^4)^8: 4e-4 at 10 words, 2e-6 at
+#: 20. Shorter sources are cloned exactly, so a planted clone is never
+#: lost to chance.
+NEAR_CLONE_MIN_WORDS = 20
+
+
 def documents(
-    seed: int, n_seed: int = 3500, n_batches: int = 40, batch_size: int = 100,
+    seed: int, n_seed: int = 3500, n_batches: int = 40, batch_size: int = 500,
     per_batch: dict | None = None,
 ) -> IngestInputs:
-    """Documents of 30-100 words over a 600-word Zipf vocabulary (random
-    pairs share almost no word 3-grams), plus planted clones in every
-    batch: of a stored doc, of an earlier doc of the same batch, and of a
-    doc an earlier batch admitted. Half the clones are exact, half append
-    one word, which keeps Jaccard >= 30/31 so LSH finds them with
-    near-certainty."""
-    per_batch = per_batch or {"store": 4, "same": 3, "prev": 3}
+    """Documents shaped like the sf0.1 ``documents`` table: 10-100 words
+    drawn uniformly from a 30-word vocabulary, a 3,500-doc store and
+    500-doc batches (bench.py's ingest loop takes the same split of the
+    sf0.1 table). Every batch plants 40 clones (8 %): of a stored doc, of
+    an earlier doc of the same batch, and of a doc an earlier batch
+    admitted. On sf0.1, MinHash admission of 500-doc batches against the
+    3,500-doc store finds 30-49 pairs a batch, nine in ten touching the
+    store; random pairs share almost no word 3-grams there as here. Half
+    the clones are exact; the other half append the word "dup", as the
+    sf0.1 near-duplicates do (exact below :data:`NEAR_CLONE_MIN_WORDS`)."""
+    per_batch = per_batch or {"store": 32, "same": 4, "prev": 4}
     rng = random.Random(seed)
-    vocab = _vocab(rng, 600)
-    weights = [1.0 / (r + 10) for r in range(len(vocab))]
+    vocab = _vocab(rng, 30)
     total = n_seed + n_batches * batch_size
     texts: dict[int, str] = {}
 
     def fresh() -> str:
-        return " ".join(rng.choices(vocab, weights, k=rng.randint(30, 100)))
+        return " ".join(rng.choices(vocab, k=rng.randint(10, 100)))
+
+    def clone(src: str) -> str:
+        if rng.random() < 0.5 or src.count(" ") + 1 < NEAR_CLONE_MIN_WORDS:
+            return src
+        return src + " dup"
 
     for d in range(n_seed):
         texts[d] = fresh()
@@ -384,7 +400,7 @@ def documents(
         for d in own:
             texts[d] = fresh()
         for d, (_, s) in cl:
-            texts[d] = texts[s] if rng.random() < 0.5 else texts[s] + " " + rng.choice(vocab)
+            texts[d] = clone(texts[s])
         ids = own + [d for d, _ in cl]
         batches.append(pa.table({"doc_id": pa.array(ids, pa.int64()),
                                  "text": [texts[d] for d in ids]}))
@@ -402,23 +418,25 @@ def documents(
 
 
 def vectors(
-    seed: int, n_seed: int = 1400, n_batches: int = 40, batch_size: int = 100,
-    dim: int = 64, n_clusters: int = 32, per_batch: dict | None = None,
+    seed: int, n_seed: int = 1400, n_batches: int = 40, batch_size: int = 200,
+    dim: int = 64, per_batch: dict | None = None,
 ) -> IngestInputs:
-    """Unit-ish float32 vectors around ``n_clusters`` random centres
-    (members of one cluster have cosine about 0.4, far below the 0.95
-    admission threshold), plus planted near-copies: the source vector with
-    Gaussian noise of 1% of its norm, so cosine stays above 0.999."""
-    per_batch = per_batch or {"store": 4, "same": 3, "prev": 3}
+    """Vectors shaped like the sf0.1 ``embeddings`` table: 64-dim unit
+    vectors in uniformly random directions (there, the median cosine of a
+    pair is 0.0 and the largest of its 2 million pairs 0.60, far below
+    the 0.95 admission threshold), a 1,400-vector store and 200-vector
+    batches (bench.py's split of that table). The sf0.1 table holds no
+    near-copies, so each batch plants 10 (5 %, the near-duplicate rate
+    of the sf0.1 documents): the source vector plus Gaussian noise of 1 %
+    of its norm, which keeps the cosine above 0.999."""
+    per_batch = per_batch or {"store": 6, "same": 2, "prev": 2}
     rng = random.Random(seed)
     nrng = np.random.default_rng(seed)
-    centres = nrng.standard_normal((n_clusters, dim))
-    centres /= np.linalg.norm(centres, axis=1, keepdims=True)
     vecs: dict[int, np.ndarray] = {}
 
     def fresh(n: int) -> np.ndarray:
-        c = centres[nrng.integers(0, n_clusters, n)]
-        return (c + 0.15 * nrng.standard_normal((n, dim))).astype(np.float32)
+        v = nrng.standard_normal((n, dim))
+        return (v / np.linalg.norm(v, axis=1, keepdims=True)).astype(np.float32)
 
     for d, v in enumerate(fresh(n_seed)):
         vecs[d] = v
@@ -438,8 +456,7 @@ def vectors(
     return IngestInputs(
         _vec_table(list(range(n_seed)), vecs), batches, admitted, clones,
         {"seed_vectors": n_seed, "batches": n_batches, "batch_size": batch_size,
-         "dim": dim, "clusters": n_clusters,
-         **{f"clones_{k}_per_batch": v for k, v in per_batch.items()}},
+         "dim": dim, **{f"clones_{k}_per_batch": v for k, v in per_batch.items()}},
     )
 
 

@@ -33,15 +33,10 @@ import traceback  # noqa: E402
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
 
-#: warm-up: each part of the workload runs on its own for WARM_S seconds
-#: and at least WARM_MIN_OPS ops before the timed phase. Latency never
-#: stops drifting within a run's budget (the JIT keeps compiling: the row
-#: diff goes 5.0, 2.5, 2.2, 2.0, 1.8, 1.7 s), so a fixed amount of
-#: warm-up puts every run at the same place on that curve; a stop-when-
-#: flat rule fired at different places and spread the medians more.
-WARM_S, WARM_MIN_OPS = 8.0, 2
-#: fewest ops a timed phase runs, however long they take
-MIN_OPS = 2
+#: fewest ops a timed phase runs, however long they take: three, so
+#: that the median can drop one slow op; an ingest op takes about 11 s,
+#: and the run budget fits only two of those
+MIN_OPS = {"db_diff": 3, "dedup_ingest": 2}
 
 END_TO_END = {"setup_s": "s", "op_p50_s": "s", "items_per_s": "1/s", "cpu_s_per_op": "s"}
 
@@ -130,42 +125,43 @@ class Loop:
         self.problems: list = []
         self.latencies: list = []
 
-    def ops(self, runner):
+    def op(self, runner):
+        """Run one op and count it; None if it raised."""
+        self.attempted += 1
         try:
-            ops = runner()
+            op = runner()
         except Exception:  # an op that raises counts as failed; stop the loop
             traceback.print_exc()
-            self.attempted += 1
             self.failed += 1
             return None
-        for op in ops:
-            self.latencies.append([round(x, 3) for x in op.parts_s or [op.latency_s]])
-            self.attempted += 1
-            if op.problems:
-                self.failed += 1
-                self.problems.extend(op.problems)
-        return ops
+        self.latencies.append([round(x, 3) for x in op.parts_s or [op.latency_s]])
+        if op.problems:
+            self.failed += 1
+            self.problems.extend(op.problems)
+        return op
 
-    def warm_up(self) -> int:
+    def warm_up(self) -> int | None:
+        """Each part runs its fixed number of warm-up ops on its own. A
+        count, not a time: latency follows the JIT, which follows how
+        often the code ran, and a faster program then neither spends the
+        same seconds on more warm-up ops nor starts its timed phase on
+        later ingest batches."""
         n = 0
-        for part in self.w.parts:  # each part warms for the same time
-            t, k = time.perf_counter(), 0
-            while time.perf_counter() - t < WARM_S or k < WARM_MIN_OPS:
-                ops = self.ops(part.run)
-                if ops is None:
-                    return n
-                k += len(ops)
-            n += k
+        for part in self.w.parts:
+            for _ in range(part.warm_ops):
+                if self.op(part.run) is None:
+                    return None
+                n += 1
         return n
 
     def timed(self, seconds: float, runner) -> tuple[list, float] | None:
         ops: list = []
         t = time.perf_counter()
-        while time.perf_counter() - t < seconds or len(ops) < MIN_OPS:
-            got = self.ops(runner)
-            if got is None:
+        while time.perf_counter() - t < seconds or len(ops) < MIN_OPS[self.w.name]:
+            op = self.op(runner)
+            if op is None:
                 return None
-            ops += got
+            ops.append(op)
         return ops, time.perf_counter() - t
 
 
@@ -212,12 +208,14 @@ def _run(args, work: str, base: str) -> dict | None:
         loop = Loop(w)
         t = time.perf_counter()
         n_warm = loop.warm_up()
+        if n_warm is None:
+            return _failed(loop)
         warm_s = time.perf_counter() - t
         if args.trace and w.replay:
             w.snapshot_store()
         setup_s = time.perf_counter() - T0
         cpu0 = proc.cpu_s()
-        got = loop.timed(args.seconds, w.run_ops)
+        got = loop.timed(args.seconds, w.run_op)
         if got is None:
             return _failed(loop)
         ops, wall = got
@@ -278,11 +276,11 @@ def _traced(loop: Loop, w, tr, seconds: float, n_untraced: int) -> list | None:
     t = time.perf_counter()
     i = 0
     while (i < n_untraced) if replay else (
-            time.perf_counter() - t < seconds or i < MIN_OPS):
-        ops = loop.ops(lambda: [w.traced_ops(tr, i)])
-        if ops is None:
+            time.perf_counter() - t < seconds or i < MIN_OPS[w.name]):
+        op = loop.op(lambda: w.traced_op(tr, i))
+        if op is None:
             return None
-        lats.append(ops[0].latency_s)
+        lats.append(op.latency_s)
         i += 1
     return lats
 

@@ -194,8 +194,9 @@ def plan_rows(df, match) -> int:
     """Sum of ``numOutputRows`` over the executed physical plan nodes of
     ``df``'s last action for which ``match(simple_string)`` holds, looking
     through adaptive query stages. Used for counts a layer computes inside
-    one plan (e.g. candidate pairs before verification)."""
-    total = 0
+    one plan (e.g. candidate pairs before verification). Raises if no
+    node matches, so a plan that changed shape cannot read as 0."""
+    total, matched = 0, 0
     todo = [df._jdf.queryExecution().executedPlan()]
     while todo:
         node = todo.pop()
@@ -210,7 +211,10 @@ def plan_rows(df, match) -> int:
             m = node.metrics().get("numOutputRows")
             if m.isDefined():
                 total += int(m.get().value())
+                matched += 1
         ch = node.children()
         for i in range(ch.size()):
             todo.append(ch.apply(i))
+    if not matched:
+        raise RuntimeError("plan_rows: no plan node matched; the plan changed shape")
     return total

@@ -43,10 +43,31 @@ def test_planted_counts():
     assert (status.count("removed"), status.count("added"), status.count("changed")) == (40, 30, 80)
     assert li.target.num_rows == 4000 - 40 + 30
 
-    d = gen.documents(3, n_seed=300, n_batches=4, batch_size=50)
+    d = gen.documents(3, n_seed=300, n_batches=4, batch_size=100)
+    n_clones = sum(v for k, v in d.planted.items() if k.startswith("clones_"))
     for b, adm, cl in zip(d.batches, d.admitted, d.clones):
         ids = b.column("doc_id").to_pylist()
-        assert sorted(adm + cl) == sorted(ids) and len(cl) == 10
+        assert sorted(adm + cl) == sorted(ids) and len(cl) == n_clones
+
+
+def _shingles(text: str) -> set:
+    w = text.split()
+    return {tuple(w[i:i + 3]) for i in range(len(w) - 2)}
+
+
+def test_doc_clones_are_the_only_near_pairs():
+    d = gen.documents(5, n_seed=300, n_batches=2, batch_size=100)
+    rows = [r for t in [d.seed_rows] + d.batches for r in t.to_pylist()]
+    clones = {x for c in d.clones for x in c}
+    orig = [_shingles(r["text"]) for r in rows if r["doc_id"] not in clones]
+    best = max(len(a & b) / len(a | b)
+               for i, a in enumerate(orig) for b in orig[i + 1:])
+    assert best < 0.3  # admission threshold 0.7
+    texts = {r["doc_id"]: r["text"] for r in rows}
+    for c in clones:  # exact, or the source plus one word
+        near = [t for k, t in texts.items() if k != c and
+                texts[c] in (t, t + " dup")]
+        assert near, c
 
 
 def test_vector_clones_are_the_only_near_pairs():
@@ -75,7 +96,7 @@ def test_checker_flags_corrupted_datadiff_and_admission():
     assert check.check_datadiff(bad, li.truth)
     assert check.check_datadiff(li.truth[1:], li.truth)
 
-    d = gen.documents(4, n_seed=200, n_batches=2, batch_size=40)
+    d = gen.documents(4, n_seed=200, n_batches=2, batch_size=100)
     staged = d.batches[1].column("doc_id").to_pylist()
     adm, cl = d.admitted[1], d.clones[1]
     assert check.check_admission(adm, staged, adm, cl) == []

@@ -14,7 +14,8 @@ inputs with :mod:`gen`, and checks every op's output with :mod:`check`.
 
 A part's ``run`` runs its next untraced op (an ingest part: one
 micro-batch); ``traced`` replays one op through the same public calls
-with a span around each call into a layer.
+with a span around each call into a layer. ``warm_ops`` is how many ops
+the part runs on its own before the timed phase.
 """
 
 from __future__ import annotations
@@ -51,6 +52,7 @@ def _parquet_files(path: str) -> int:
 
 class SchemaReport:
     name = "schema_report"
+    warm_ops = 3
 
     def __init__(self, spark, root: str, seed: int):
         self.spark, self.root, self.seed = spark, root, seed
@@ -83,7 +85,7 @@ class SchemaReport:
                 "indexes": len(b.indexes), "fks": len(b.fks),
                 "planted": pair.planted, "findings": len(pair.findings)}
 
-    def run(self) -> list[Op]:
+    def run(self) -> Op:
         from magiceye_spark import diff_schemas, write_report
         from magiceye_spark.snapshot import SchemaSnapshot
 
@@ -92,7 +94,7 @@ class SchemaReport:
         target = SchemaSnapshot.read_parquet(self.spark, self.paths["target"])
         write_report(diff_schemas(base, target), self.report_path, "english")
         lat = time.perf_counter() - t
-        return [Op(lat, self.items, self._check())]
+        return Op(lat, self.items, self._check())
 
     def _check(self) -> list:
         with open(self.report_path, encoding="utf-8") as fh:
@@ -148,6 +150,7 @@ def _pandas(rows, schema):
 
 class TableDatadiff:
     name = "table_datadiff"
+    warm_ops = 3
 
     def __init__(self, spark, root: str, seed: int):
         self.spark, self.root, self.seed = spark, root, seed
@@ -179,11 +182,11 @@ class TableDatadiff:
         d = datadiff.diff_data(base, target, gen.LINEITEM_KEYS)
         d.write.mode("overwrite").parquet(self.out)
 
-    def run(self) -> list[Op]:
+    def run(self) -> Op:
         t = time.perf_counter()
         self._diff()
         lat = time.perf_counter() - t
-        return [Op(lat, self.items, self._check())]
+        return Op(lat, self.items, self._check())
 
     def _check(self) -> list:
         rows = pq.read_table(self.out).to_pylist()
@@ -224,6 +227,7 @@ class _Ingest:
     closed loop and batch ``k`` of the stream is staged batch ``k``."""
 
     TRIGGER = {"processingTime": "100 milliseconds"}
+    warm_ops = 2
     POLL_S = 0.02
     id_col = ""
 
@@ -255,7 +259,7 @@ class _Ingest:
         return (self.spark.readStream.schema(self.schema)
                 .option("maxFilesPerTrigger", "1").parquet(self.src))
 
-    def run(self) -> list[Op]:
+    def run(self) -> Op:
         """Release the next staged batch into the source directory, wait
         for its micro-batch to commit and check what it admitted."""
         k = self.next_batch
@@ -272,7 +276,7 @@ class _Ingest:
             os.path.join(self.sink, f"ingest_batch={k}"), columns=[self.id_col]
         ).to_pylist()]
         self.admitted_stream[k] = sorted(got)
-        return [Op(d["triggerExecution"] / 1000.0, p["numInputRows"], self._check(k, got))]
+        return Op(d["triggerExecution"] / 1000.0, p["numInputRows"], self._check(k, got))
 
     def _wait(self, k: int, timeout_s: float = 170.0) -> dict:
         """The progress report of micro-batch ``k``, once it is committed."""
@@ -366,6 +370,9 @@ class DocDedupIngest(_Ingest):
 
         from magiceye_spark.llmops import sigstore
 
+        # the public calls each sign what they get: delta_pairs_from_index
+        # the batch, minhash_index_add the admitted docs (after re-reading
+        # the params); the streaming loop signs the batch once
         with tr.span("sigstore.read", i):
             idx = sigstore.read_minhash_index(self.spark, self.replay_store)
         with tr.span("sigstore.pairs", i) as c:
@@ -466,10 +473,10 @@ class Workload:
             if isinstance(p, _Ingest):
                 p.stop()
 
-    def run_ops(self) -> list[Op]:
-        return [_combine([p.run()[0] for p in self.parts])]
+    def run_op(self) -> Op:
+        return _combine([p.run() for p in self.parts])
 
-    def traced_ops(self, tr: Tracer, i: int) -> Op:
+    def traced_op(self, tr: Tracer, i: int) -> Op:
         with tr.span("op", i):
             return _combine([p.traced(tr, i) for p in self.parts])
 
