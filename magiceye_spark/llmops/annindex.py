@@ -57,6 +57,7 @@ from magiceye_spark.llmops.simsearch import (
     _best_cells,
     _ivf_centroids,
     _ivf_probe,
+    _local_batch_sides,
     _pq_encode,
     _pq_fit,
     _pq_search,
@@ -95,6 +96,48 @@ def _postings_flat(
         F.col(vec_col).alias("embedding"),
         _best_cells(F.col(vec_col), cents, 1)[0]["cell"].alias("cell"),
     )
+
+
+def _local_assigned(
+    kv: DataFrame, cents: dict[int, list[float]], id_col: str, vec_col: str
+) -> DataFrame | None:
+    """Bounded batches: :func:`_postings_flat`'s (vec_id, embedding, cell)
+    rows computed driver-side (:func:`simsearch._local_batch_sides`, the
+    exact-IEEE replica of the in-plan assignment, pinned against it in
+    tests/test_annindex.py) and shipped as a
+    LocalRelation — the in-plan centroid-literal argmax costs ~0.5 s of
+    plan analysis per action at 32×64. The LocalRelation carries doubles;
+    the embedding is cast back to the source type, which is exact for
+    ``array<float>`` (float32 values widen to doubles losslessly), so an
+    append never changes a stored table's type. None for oversized
+    batches, degenerate scores, or other element types: callers keep the
+    in-plan path for those."""
+    src = kv.schema[vec_col].dataType
+    if src.simpleString() not in ("array<float>", "array<double>"):
+        return None
+    local = _local_batch_sides(kv, cents, 1, id_col, vec_col)
+    if local is None:
+        return None
+    return local[0].withColumn("embedding", F.col("embedding").cast(src))
+
+
+def _write_cells(df: DataFrame, path: str, mode: str, obs=None) -> None:
+    """Write a growing table (postings, rerank) partitioned by cell with
+    ONE file per touched cell: the hash repartition on ``cell`` puts each
+    cell's rows in a single task, and sorting by (cell, vec_id) within
+    partitions satisfies the partitioned writer's ordering, so it adds no
+    sort of its own and each file is vec_id-ordered. Build, append and
+    compaction all write through here, so a cell directory holds one file
+    per write that touched it — never one per write task.
+
+    ``obs``: an ``Observation`` that receives the written row count as
+    ``n``. It is attached above the shuffle: attached below it, an append
+    whose delta is empty (a replayed batch) left the observation unset,
+    and reading it raised."""
+    out = df.repartition("cell").sortWithinPartitions("cell", "vec_id")
+    if obs is not None:
+        out = out.observe(obs, F.count(F.lit(1)).alias("n"))
+    out.write.mode(mode).partitionBy("cell").parquet(path)
 
 
 def recommend_ivf_params(n_vectors: int, dim: int | None = None) -> dict:
@@ -246,10 +289,11 @@ def write_ivf_index(
             spark, rows, "m int, code int, vec array<double>"
         ).coalesce(1).write.mode("overwrite").parquet(os.path.join(path, "codebooks"))
 
-    # encode + write postings, partitioned by cell for probe-time pruning.
+    # encode + write postings, one file per cell for probe-time pruning.
     # explicit spread first: assignment/encoding is CPU-dense on byte-light
     # rows (see the ivf_pq_topk stage-audit note) — a single-file scan
-    # would otherwise serialize the whole encode
+    # would otherwise serialize the whole encode; it runs map-side of the
+    # cell shuffle in _write_cells
     src = postings_from if postings_from is not None else corpus
     spread = src.repartition(
         spark.sparkContext.defaultParallelism, id_col
@@ -263,21 +307,21 @@ def write_ivf_index(
         # the assignment — a second full corpus pass at lake scale)
         flat = _postings_flat(spread, cents, id_col, vec_col).persist()
         try:
-            _pq_encode(
-                flat, cents, books, m_subvectors, "vec_id", "embedding",
-                id_alias="vec_id", cell_col="cell",
-            ).write.mode("overwrite").partitionBy("cell").parquet(
-                os.path.join(path, "postings")
+            _write_cells(
+                _pq_encode(
+                    flat, cents, books, m_subvectors, "vec_id", "embedding",
+                    id_alias="vec_id", cell_col="cell",
+                ),
+                os.path.join(path, "postings"), "overwrite",
             )
-            flat.write.mode("overwrite").partitionBy("cell").parquet(
-                os.path.join(path, "rerank")
-            )
+            _write_cells(flat, os.path.join(path, "rerank"), "overwrite")
         finally:
             flat.unpersist()
     else:
-        _postings_flat(spread, cents, id_col, vec_col).write.mode(
-            "overwrite"
-        ).partitionBy("cell").parquet(os.path.join(path, "postings"))
+        _write_cells(
+            _postings_flat(spread, cents, id_col, vec_col),
+            os.path.join(path, "postings"), "overwrite",
+        )
     return read_ivf_index(spark, path)
 
 
@@ -388,34 +432,12 @@ def _append_vectors(
             "row-for-row with the postings"
         )
     id_col, vec_col = idx.params["id_col"], idx.params["vec_col"]
-    # Bounded deltas (every ingest micro-batch): assign cells DRIVER-side
-    # and ship the assigned rows as a LocalRelation — the in-plan
-    # centroid-literal argmax costs ~0.5 s of plan analysis per action at
-    # 32×64, paid per micro-batch by the appends. Exact-IEEE replica of
-    # the in-plan expression (same fold order — the parity
-    # _local_batch_sides/_postings_flat tests pin it); oversized deltas
-    # and degenerate scores keep the in-plan path below.
-    from magiceye_spark.llmops.simsearch import _local_batch_sides
-
-    local = (
-        _local_batch_sides(
-            new_vectors.select(id_col, vec_col), idx.centroids, 1,
-            id_col, vec_col,
-        )
-        # the LocalRelation declares array<double> — only substitutable
-        # when the source column IS that type (it always is for stores
-        # this module writes; a caller-supplied float corpus keeps the
-        # type-preserving in-plan path so the parquet append can't drift)
-        if new_vectors.schema[vec_col].dataType.simpleString()
-        == "array<double>"
-        else None
-    )
-    if local is not None:
-        flat = local[0]  # (vec_id, embedding, cell) LocalRelation
-    else:
-        spread = new_vectors.select(id_col, vec_col).repartition(
-            spark.sparkContext.defaultParallelism, id_col
-        )
+    # bounded deltas (every ingest micro-batch) are assigned driver-side;
+    # oversized ones keep the in-plan expression behind a CPU spread
+    kv = new_vectors.select(id_col, vec_col)
+    flat = _local_assigned(kv, idx.centroids, id_col, vec_col)
+    if flat is None:
+        spread = kv.repartition(spark.sparkContext.defaultParallelism, id_col)
         flat = _postings_flat(spread, idx.centroids, id_col, vec_col)
     # dedupe BEFORE encoding: rejected re-ingests shouldn't pay the PQ
     # argmin, and the same survivor frame feeds both PQ writes below
@@ -443,19 +465,18 @@ def _append_vectors(
             # The anti-join here is against the RERANK ids, making a
             # crash-replay of the window between the two appends a no-op
             # for this table too.
-            flat.join(
-                idx.rerank.select(
-                    F.col(idx.params["id_col"]).alias("vec_id")
+            _write_cells(
+                flat.join(
+                    idx.rerank.select(
+                        F.col(idx.params["id_col"]).alias("vec_id")
+                    ),
+                    "vec_id",
+                    "left_anti",
                 ),
-                "vec_id",
-                "left_anti",
-            ).write.mode("append").partitionBy("cell").parquet(
-                os.path.join(path, "rerank")
+                os.path.join(path, "rerank"), "append",
             )
         obs = Observation()
-        delta.observe(obs, F.count(F.lit(1)).alias("n")).write.mode(
-            "append"
-        ).partitionBy("cell").parquet(os.path.join(path, "postings"))
+        _write_cells(delta, os.path.join(path, "postings"), "append", obs)
         return int(obs.get["n"])
     finally:
         if idx.pq:
@@ -465,12 +486,12 @@ def _append_vectors(
 def ivf_index_compact(spark: SparkSession, path: str) -> tuple[int, int]:
     """Rewrite the postings table in place, coalescing the small files
     that :func:`ivf_index_add` appends accumulate — THE production issue
-    with append-heavy stores: every add writes ≥1 file per touched cell
-    directory, and after k adds a probe of one cell opens k files, so
-    scan task count (and NameNode/listing pressure at lake scale) grows
-    with ingest history instead of data volume. Compaction reads the
-    postings once and rewrites them partitioned by cell with one file
-    per cell. Returns (files_before, files_after); row content is
+    with append-heavy stores: every add writes one file per touched cell
+    directory, and after k adds a probe of one cell opens up to k files,
+    so scan task count (and NameNode/listing pressure at lake scale)
+    grows with ingest history instead of data volume. Compaction reads
+    the postings once and rewrites them partitioned by cell with one
+    file per cell. Returns (files_before, files_after); row content is
     untouched (pinned in tests).
 
     The rewrite stages into ``postings_compact`` and is promoted by a
@@ -484,14 +505,7 @@ def ivf_index_compact(spark: SparkSession, path: str) -> tuple[int, int]:
         src_dir = os.path.join(path, table)
         tmp_dir = os.path.join(path, f"{table}_compact")
         before = fs_count_files(spark, src_dir)
-        (
-            spark.read.parquet(src_dir)
-            .repartition("cell")
-            .sortWithinPartitions("vec_id")
-            .write.mode("overwrite")
-            .partitionBy("cell")
-            .parquet(tmp_dir)
-        )
+        _write_cells(spark.read.parquet(src_dir), tmp_dir, "overwrite")
         fs_swap_dirs(spark, tmp_dir, src_dir)
         return before, fs_count_files(spark, src_dir)
 
@@ -734,8 +748,6 @@ def delta_ann_pairs_from_index(
     # driver plan-analysis each at 32×64), the repartition barrier, and
     # the probe-cells distinct-collect job per micro-batch. Oversized
     # batches keep the in-plan construction below.
-    from magiceye_spark.llmops.simsearch import _local_batch_sides
-
     local = _local_batch_sides(
         new_vectors.select(id_col, vec_col), index.centroids, n_probe,
         id_col, vec_col,
@@ -837,12 +849,6 @@ def delta_ann_pairs_from_index(
             F.pmod(F.xxhash64("vec_id"), F.lit(salts)).cast("int").alias("salt"),
         )
 
-    # NOTE (r14): fold cosine, not the width-unrolled tree — this plan is
-    # re-analyzed per micro-batch in the ingest loops and the pairs subtree
-    # feeds the closure + two admitted-frame actions, so the unrolled
-    # tree's per-plan analysis/codegen cost is paid several times per
-    # batch (the r13 annindex_ingest_loop regression's fixed-cost class;
-    # same A/B verdict as every other site this round).
     cos = F.round(cosine(F.col("q_vec"), F.col("u_vec")), 6)
 
     def edges(u_side: DataFrame) -> DataFrame:
@@ -964,13 +970,16 @@ def streaming_ann_ingest(
     ``rerank_path`` ∪ the admitted sink ∪ the batch.
 
     ``compact_every``: run :func:`ivf_index_compact` after every Nth
-    batch. Each append writes ≥1 file per touched cell, so probe wall
+    batch. Each append writes one file per touched cell, so probe wall
     grows with ingest history, not data — the r9 store sweep measured the
     probe 1.6-1.7× faster against compacted postings (1 file/cell) at
-    every store size. Compaction between batches is safe: the index is
-    re-read from disk per batch, and the swap is the rename-aside
-    Hadoop-FS promotion. None (default) leaves cadence to an external
-    maintenance job.
+    every store size. Compaction between batches is safe: the growing
+    postings and rerank scans are re-opened per batch, and the swap is
+    the rename-aside Hadoop-FS promotion. The model tables (params,
+    centroids, codebooks) are read once and frozen for the life of the
+    query, so an offline rebuild of the store needs a stream restart —
+    a running loop would keep encoding against the old model. None
+    (default) leaves cadence to an external maintenance job.
 
     Replay safety mirrors the sibling loops: encoding is a pure function
     of the stored model, :func:`ivf_index_add` anti-joins stored vec_ids
@@ -1004,32 +1013,15 @@ def streaming_ann_ingest(
             # of raise_error-ing forever; duplicate (id, vec) rows are
             # harmless (identical candidate rows collapse in the
             # edge-level dropDuplicates), so no corpus-wide dedup runs.
-            # Bounded batches assign cells driver-side (exact-IEEE
-            # replica) — the in-plan centroid-literal argmax otherwise
-            # costs ~0.5 s of plan analysis per micro-batch action.
-            from magiceye_spark.llmops.simsearch import _local_batch_sides
-
             kv = _batch_kv(idx.params, batch_df)
-            local = (
-                _local_batch_sides(kv, idx.centroids, 1, id_col, vec_col)
-                if kv.schema[vec_col].dataType.simpleString()
-                == "array<double>"
-                else None
+            batch_part = _local_assigned(kv, idx.centroids, id_col, vec_col)
+            if batch_part is None:
+                batch_part = _postings_flat(kv, idx.centroids, id_col, vec_col)
+            batch_part = batch_part.select(
+                F.col("vec_id").alias(id_col),
+                F.col("embedding").alias(vec_col),
+                "cell",
             )
-            if local is not None:
-                batch_part = local[0].select(
-                    F.col("vec_id").alias(id_col),
-                    F.col("embedding").alias(vec_col),
-                    "cell",
-                )
-            else:
-                batch_part = _postings_flat(
-                    kv, idx.centroids, id_col, vec_col
-                ).select(
-                    F.col("vec_id").alias(id_col),
-                    F.col("embedding").alias(vec_col),
-                    "cell",
-                )
             # aligned: both sides' `cell` comes from the index's centroids
             return idx.rerank.unionByName(batch_part), True
         # pre-r11 PQ store (no rerank table): corpus-wide assembly from the

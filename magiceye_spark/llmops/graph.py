@@ -717,6 +717,47 @@ r0 AS (SELECT node, deg, 1.0 / (SELECT n FROM nn) AS pagerank FROM deg),"""
 
 # ------------------------------------------------- delta-ingest admission
 
+def _admission_rejects_local(und: DataFrame, stored_ids: DataFrame) -> DataFrame:
+    """The small-graph verdict of :func:`indexed_admission_rejects`, run
+    driver-side over the (persisted, cap-bounded) edge frame ``und``."""
+    from magiceye_spark.io import local_frame
+
+    spark = und.sparkSession
+    labels = _unionfind_components(_edge_tuples(und), "comp_id")
+    if not labels:  # no edges → no components → nothing rejected
+        return local_frame(spark, [], "doc_id long")
+    # stored-membership of the graph's nodes: one bounded semi-join
+    # job (node count ≤ 2·edges ≤ the cap; the scan of stored ids is
+    # the same column the distributed path's labeled-join reads)
+    nodes_f = local_frame(
+        spark, [(int(n),) for n, _ in labels], "doc_id long"
+    )
+    stored = {
+        r[0]
+        for r in stored_ids.select(
+            F.col("doc_id").cast("long").alias("doc_id")
+        )
+        .join(nodes_f, "doc_id", "left_semi")
+        .collect()
+    }
+    has_existing: set = set()
+    min_incoming: dict = {}
+    for node, comp in labels:
+        if node in stored:
+            has_existing.add(comp)
+        else:
+            m = min_incoming.get(comp)
+            if m is None or node < m:
+                min_incoming[comp] = node
+    rejected = [
+        (node,)
+        for node, comp in labels
+        if node not in stored
+        and (comp in has_existing or node != min_incoming[comp])
+    ]
+    return local_frame(spark, sorted(rejected), "doc_id long")
+
+
 def indexed_admission_rejects(pairs: DataFrame, stored_ids: DataFrame) -> DataFrame:
     """The shared closure-verdict core of persistent-store delta admission
     (:func:`sigstore.delta_dedup_admit_indexed`,
@@ -740,51 +781,13 @@ def indexed_admission_rejects(pairs: DataFrame, stored_ids: DataFrame) -> DataFr
     return the rejected ids as a LocalRelation. Same rule, same math,
     byte-identical output (the rule is integer set logic — no floats);
     corpus-scale graphs keep the distributed plan unchanged."""
-    spark = pairs.sparkSession
     und = pairs.select(
         F.col("doc_a").cast("long").alias("doc_a"),
         F.col("doc_b").cast("long").alias("doc_b"),
     ).persist()
-    n_und = und.count()
-    if 2 * n_und <= SMALL_GRAPH_EDGE_CAP:
-        from magiceye_spark.io import local_frame
-
-        edge_rows = _edge_tuples(und)
-        und.unpersist()
-        labels = _unionfind_components(edge_rows, "comp_id")
-        if not labels:  # no edges → no components → nothing rejected
-            return local_frame(spark, [], "doc_id long")
-        # stored-membership of the graph's nodes: one bounded semi-join
-        # job (node count ≤ 2·edges ≤ the cap; the scan of stored ids is
-        # the same column the distributed path's labeled-join reads)
-        nodes_f = local_frame(
-            spark, [(int(n),) for n, _ in labels], "doc_id long"
-        )
-        stored = {
-            r[0]
-            for r in stored_ids.select(
-                F.col("doc_id").cast("long").alias("doc_id")
-            )
-            .join(nodes_f, "doc_id", "left_semi")
-            .collect()
-        }
-        has_existing: set = set()
-        min_incoming: dict = {}
-        for node, comp in labels:
-            if node in stored:
-                has_existing.add(comp)
-            else:
-                m = min_incoming.get(comp)
-                if m is None or node < m:
-                    min_incoming[comp] = node
-        rejected = [
-            (node,)
-            for node, comp in labels
-            if node not in stored
-            and (comp in has_existing or node != min_incoming[comp])
-        ]
-        return local_frame(spark, sorted(rejected), "doc_id long")
     try:
+        if 2 * und.count() <= SMALL_GRAPH_EDGE_CAP:
+            return _admission_rejects_local(und, stored_ids)
         # corpus-scale graph: the distributed closure + verdict joins.
         # connected_components' own select/persist lands on top of the
         # already-persisted edge frame, so its count reads the cache.
@@ -792,6 +795,8 @@ def indexed_admission_rejects(pairs: DataFrame, stored_ids: DataFrame) -> DataFr
             und, src="doc_a", dst="doc_b"
         ).select(F.col("node").alias("doc_id"), "comp_id")
     finally:
+        # every exit — verdict returned, distributed closure built, or a
+        # raise from the collect / semi-join — releases the edge cache
         und.unpersist()
     labeled = comps.join(
         stored_ids.select("doc_id").withColumn("_stored", F.lit(1)),

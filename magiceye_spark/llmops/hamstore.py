@@ -297,8 +297,10 @@ def streaming_hamming_ingest(
     batch — appends accumulate one file per batch and scan/listing cost
     grows with ingest history (the small-files lifecycle the r9 store
     sweep measured on the IVF probe); safe between batches because the
-    index is re-read per batch and the swap is rename-aside. None leaves
-    cadence to an external maintenance job.
+    growing signature scan is re-opened per batch and the swap is
+    rename-aside. The params table is read once and frozen for the life
+    of the query, so an offline rebuild of the store needs a stream
+    restart. None leaves cadence to an external maintenance job.
 
     ``trigger`` defaults to ``{"availableNow": True}`` (drain-what-exists);
     pass ``{"processingTime": "1 minute"}`` for the live loop. Returns the

@@ -331,9 +331,11 @@ def streaming_dedup_ingest(
     count (and listing pressure on a lake) grows with ingest history
     rather than data volume (the r9 store sweep measured the analogous
     IVF probe 1.6-1.7× faster against compacted postings). Safe between
-    batches: the index is re-read per batch and the swap is the
-    rename-aside Hadoop-FS promotion. None (default) leaves cadence to
-    an external maintenance job.
+    batches: the growing signature scan is re-opened per batch and the
+    swap is the rename-aside Hadoop-FS promotion. The params table is
+    read once and frozen for the life of the query, so an offline
+    rebuild of the store needs a stream restart. None (default) leaves
+    cadence to an external maintenance job.
 
     ``trigger``: kwargs for ``DataStreamWriter.trigger`` — defaults to
     ``{"availableNow": True}`` (drain-what-exists, the batch-replay and

@@ -38,36 +38,22 @@ def _emb(
     return read_table(spark, sf_dir, "embeddings", parallelize=parallelize)
 
 
-def dot(a: Column, b: Column, dim: int | None = None) -> Column:
+def dot(a: Column, b: Column) -> Column:
     """Σ aᵢ·bᵢ in double precision, strictly left-to-right (same order both
-    engines → bit-identical results).
-
-    ``dim`` (r13): when the vector width is known driver-side (an index's
-    stored ``dim``, a fitted quantizer's centroid length), the sum is
-    unrolled over GetArrayItem terms — whole-stage-codegen integer
-    indexing instead of the interpreted zip_with+aggregate fold that
-    higher-order functions pay per CANDIDATE pair (measured 15-35% on
-    probe-shaped joins at sf0.1). The unrolled chain starts from the same
-    ``0.0`` seed and adds in the same left-to-right order, so the IEEE
-    result is bit-identical (pinned on the full pair set in tests)."""
-    if dim is None:
-        return F.aggregate(
-            F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-    s = F.lit(0.0)
-    for i in range(dim):
-        s = s + F.get(a, i).cast("double") * F.get(b, i).cast("double")
-    return s
+    engines → bit-identical results)."""
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
+        F.lit(0.0),
+        lambda acc, v: acc + v,
+    )
 
 
-def norm(a: Column, dim: int | None = None) -> Column:
-    return F.sqrt(dot(a, a, dim))
+def norm(a: Column) -> Column:
+    return F.sqrt(dot(a, a))
 
 
-def cosine(a: Column, b: Column, dim: int | None = None) -> Column:
-    return dot(a, b, dim) / (norm(a, dim) * norm(b, dim))
+def cosine(a: Column, b: Column) -> Column:
+    return dot(a, b) / (norm(a) * norm(b))
 
 
 def normalize_embeddings(
@@ -476,12 +462,6 @@ def _ivf_probe(
     built by :func:`_local_probe_rows` (bounded query batches); ``None``
     means the caller ATTEMPTED the local side and it declined — keep the
     in-plan path, do not retry (see ``_LOCAL_UNATTEMPTED``)."""
-    # NOTE (r13): the unrolled-by-dim cosine was A/B'd here and kept OUT —
-    # this probe's candidate volume (broadcast query batch × probed cells)
-    # is too small to amortize the unrolled tree's per-plan codegen cost
-    # (~+1.3 s cold, ~+0.2 s warm at sf0.1); the high-volume sites
-    # (delta admission, bitext knn, hard-negative mining, PQ rerank) keep
-    # the unrolled form.
     q = None if _q_local is _LOCAL_UNATTEMPTED else _q_local
     if _q_local is _LOCAL_UNATTEMPTED:
         local = _local_probe_rows(queries, cents, n_probe, id_col, vec_col)
@@ -993,10 +973,6 @@ def _pq_search(
         .select(
             "query_id",
             "neighbor_id",
-            # NOTE (r14): fold cosine — the rerank candidate list is tiny
-            # (k·rerank rows), so the width-unrolled tree's per-plan cost
-            # dominates: A/B fold 0.76 s vs unroll 1.10 s on the stored-PQ
-            # probe seat (alternating min-of-3 at sf0.1).
             F.round(cosine(F.col("q_vec"), F.col("c_vec")), 6).alias("cosine_sim"),
         )
     )
@@ -1501,11 +1477,6 @@ def hard_negatives_indexed(
         .select(
             "anchor_id",
             "negative_id",
-            # NOTE (r14): fold cosine, not the width-unrolled tree — A/B'd
-            # like _ivf_probe (alternating min-of-3 at sf0.1): fold 2.58 s
-            # vs unroll 3.81 s. The candidate volume never amortizes the
-            # unrolled tree's per-plan analysis/codegen cost at any site
-            # measured this round; results are bit-identical either way.
             F.round(cosine(F.col("a_vec"), F.col("c_vec")), 6).alias(
                 "cosine_sim"
             ),
@@ -1890,13 +1861,6 @@ def bitext_margin_pairs_indexed(
             .select(
                 q_id,
                 c_id,
-                # NOTE (r14): fold cosine, not the width-unrolled tree.
-                # This seat regressed 4.9 → 12.2 s at r13 driver ground
-                # truth with the unroll (the cands subtree — holding BOTH
-                # knn cosines — appears 3× in the logical plan, so the
-                # ~600-node unrolled trees are analyzed 6× per action).
-                # Alternating min-of-3 A/B at sf0.1: fold 3.98 s vs
-                # unroll 6.09 s. Bit-identical results (same IEEE order).
                 F.round(cosine(F.col("q_vec"), F.col("c_vec")), 6).alias(
                     "cosine_sim"
                 ),

@@ -1,6 +1,6 @@
 """Relational analytics rows: the TPC-H query suite over the testdata tables.
 
-Split from the single-file registry in r13; each @register call populates the shared _REGISTRY in magiceye_spark.registry (same driver contract, same keys).
+Split from the single-file registry in r13; each @register call populates the shared _REGISTRY in magiceye_spark.queries (same driver contract, same keys).
 """
 
 from __future__ import annotations
@@ -8,7 +8,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from magiceye_spark import analytics
-from magiceye_spark.registry import register
+from magiceye_spark.queries import register
 
 
 # ------------------------------------------------------------- analytics

@@ -1,6 +1,6 @@
 """Row-level data-diff rows (SURVEY §2.4): keyed/keyless/hash/summary/fingerprint diffs plus profile/DQ over a deterministically perturbed lineitem pair.
 
-Split from the single-file registry in r13; each @register call populates the shared _REGISTRY in magiceye_spark.registry (same driver contract, same keys).
+Split from the single-file registry in r13; each @register call populates the shared _REGISTRY in magiceye_spark.queries (same driver contract, same keys).
 """
 
 from __future__ import annotations
@@ -15,7 +15,7 @@ from magiceye_spark.datadiff import (
     diff_data_summary,
     diff_rows_set,
 )
-from magiceye_spark.registry import register
+from magiceye_spark.queries import register
 
 
 # ------------------------------------------------------------- data diff M4

@@ -1,6 +1,6 @@
 """Event-pipeline rows: sessionization, as-of joins, rollups, JSON property extraction, trends and anomaly statistics over the events stream.
 
-Split from the single-file registry in r13; each @register call populates the shared _REGISTRY in magiceye_spark.registry (same driver contract, same keys).
+Split from the single-file registry in r13; each @register call populates the shared _REGISTRY in magiceye_spark.queries (same driver contract, same keys).
 """
 
 from __future__ import annotations
@@ -12,7 +12,7 @@ from magiceye_spark.llmops import retrieval, simsearch, textstats
 from magiceye_spark.datadiff import (
     diff_data,
 )
-from magiceye_spark.registry import register
+from magiceye_spark.queries import register
 from magiceye_spark.queries.datadiff_rows import (
     SQL_PERTURBED_LINEITEM,
     _CHANGED_LIST,

@@ -1,6 +1,6 @@
 """Post-r3 additions registered past the pinned driver window: privacy audits, corpus curation, calibration, sketch-bound twins, planted-fixture dedup rows.
 
-Split from the single-file registry in r13; each @register call populates the shared _REGISTRY in magiceye_spark.registry (same driver contract, same keys).
+Split from the single-file registry in r13; each @register call populates the shared _REGISTRY in magiceye_spark.queries (same driver contract, same keys).
 """
 
 from __future__ import annotations
@@ -9,7 +9,7 @@ from pyspark.sql import functions as F
 
 from magiceye_spark import analytics, events_ops, io, synthcat
 from magiceye_spark.llmops import dedup, pipeline, simsearch, textstats
-from magiceye_spark.registry import register
+from magiceye_spark.queries import register
 from magiceye_spark.queries.datadiff_rows import (
     SQL_DATADIFF,
     SQL_PERTURBED_LINEITEM,

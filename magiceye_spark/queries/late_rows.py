@@ -4,7 +4,7 @@ rows, sketch-bound twins, and the relational/event/text/embedding rows
 added after the round-3 block.
 
 Split from the single-file registry in r13; each @register call populates
-the shared _REGISTRY in magiceye_spark.registry (same driver contract,
+the shared _REGISTRY in magiceye_spark.queries (same driver contract,
 same keys). New registrations belong in the family module they fit best —
 this module exists so the split preserves historical registration order,
 not as the default destination.
@@ -20,7 +20,7 @@ from magiceye_spark.datadiff import (
     build_scd2,
     scd2_point_in_time,
 )
-from magiceye_spark.registry import register
+from magiceye_spark.queries import register
 from magiceye_spark.queries.llmops_rows import (
     _docs,
     _docs_par,

@@ -1,6 +1,6 @@
 """LLM-data-pipeline rows (SURVEY §2.4 additions): dedup ladder, similarity search / ANN stores + ingest loops, text analysis, multimodal, sketches, streaming twins.
 
-Split from the single-file registry in r13; each @register call populates the shared _REGISTRY in magiceye_spark.registry (same driver contract, same keys).
+Split from the single-file registry in r13; each @register call populates the shared _REGISTRY in magiceye_spark.queries (same driver contract, same keys).
 """
 
 from __future__ import annotations
@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 
 from magiceye_spark import events_ops, io
 from magiceye_spark.llmops import dedup, multimodal, pipeline, simsearch, textstats
-from magiceye_spark.registry import register
+from magiceye_spark.queries import register
 
 
 # ------------------------------------------------------------- LLM ops M5

@@ -1,6 +1,6 @@
 """Schema-diff rows (reference D1-D17 surface): full diff, per-facet diffs, and the localized report over synthetic catalog snapshots.
 
-Split from the single-file registry in r13; each @register call populates the shared _REGISTRY in magiceye_spark.registry (same driver contract, same keys).
+Split from the single-file registry in r13; each @register call populates the shared _REGISTRY in magiceye_spark.queries (same driver contract, same keys).
 """
 
 from __future__ import annotations
@@ -15,7 +15,7 @@ from magiceye_spark.diff.core import (
     diff_tables,
 )
 from magiceye_spark.report import render_findings
-from magiceye_spark.registry import register
+from magiceye_spark.queries import register
 
 
 def _snapshots(spark, sf_dir):
