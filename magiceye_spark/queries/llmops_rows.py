@@ -795,23 +795,30 @@ def _loop_stage(
     pred: str | None = None,
 ) -> str:
     pred = pred if pred is not None else f"{_ANN_ADMIT_COS} >= 0.95"
+    # MATERIALIZED: DuckDB inlines a plain CTE at every reference, so the
+    # all-pairs scan p would be re-run by each step of the recursive r,
+    # and stage 1 again by every reference of stage 2 to its store
     return f"""
-u{k} AS (SELECT * FROM {prev_store} UNION ALL SELECT * FROM {batch}),
-p{k} AS (
+u{k} AS MATERIALIZED (
+  SELECT * FROM {prev_store} UNION ALL SELECT * FROM {batch}
+),
+p{k} AS MATERIALIZED (
   SELECT a.{id_col} AS pa, b.{id_col} AS pb
   FROM u{k} a JOIN u{k} b ON a.{id_col} < b.{id_col}
   WHERE (a.{id_col} IN (SELECT {id_col} FROM {batch})
          OR b.{id_col} IN (SELECT {id_col} FROM {batch}))
     AND {pred}
 ),
-e{k} AS (SELECT pa AS a, pb AS b FROM p{k} UNION SELECT pb, pa FROM p{k}),
+e{k} AS MATERIALIZED (
+  SELECT pa AS a, pb AS b FROM p{k} UNION SELECT pb, pa FROM p{k}
+),
 r{k}(node, comp) AS (
   SELECT DISTINCT a, a FROM e{k}
   UNION
   SELECT e.b, r.comp FROM r{k} r JOIN e{k} e ON e.a = r.node
 ),
 c{k} AS (SELECT node, MIN(comp) AS comp_id FROM r{k} GROUP BY node),
-l{k} AS (
+l{k} AS MATERIALIZED (
   SELECT node, comp_id,
          (node IN (SELECT {id_col} FROM {prev_store})) AS stored
   FROM c{k}
@@ -827,7 +834,7 @@ rej{k} AS (
   WHERE NOT l.stored
     AND (v.has_existing = 1 OR l.node <> v.min_incoming)
 ),
-a{k} AS (
+a{k} AS MATERIALIZED (
   SELECT {id_col}, {payload} FROM {batch}
   WHERE {id_col} NOT IN (SELECT node FROM rej{k})
 )"""

@@ -20,3 +20,28 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return TESTDATA
+
+
+@pytest.fixture(scope="session")
+def registry_sweep(spark, sf_dir):
+    """One pass over every registry query, shared by the registry-wide
+    tests: each query is built once (a build can drain a whole ingest
+    loop), its plan facts are read before it runs, then it is run and
+    compared with its DuckDB oracle.
+
+    Returns ``(oracles_ok, facts)``: ``facts[name]`` holds the plan's
+    single-partition window contexts, CartesianProduct count and Python
+    eval count. A query that fails to build has no entry."""
+    from magiceye_spark import plans
+    from tests.oracle_harness import compare
+
+    facts = {}
+
+    def inspect(name, df):
+        facts[name] = {
+            "windows": plans.single_partition_window_contexts(df),
+            "cartesian": plans.cartesian_product_count(df),
+            "python_evals": plans.python_eval_count(df),
+        }
+
+    return compare(spark, sf_dir, inspect=inspect), facts

@@ -34,7 +34,9 @@ def _rowset(cols, rows):
     return sorted("\x01".join(_canon(r[i]) for i in order) for r in rows)
 
 
-def compare(spark, sf_dir: str, names=None) -> bool:
+def compare(spark, sf_dir: str, names=None, inspect=None) -> bool:
+    """``inspect(name, sdf)``, if given, is called on each built query
+    before it runs, so a caller can read its plan in the same pass."""
     from magiceye_spark import registry
 
     con = duckdb.connect()
@@ -49,12 +51,18 @@ def compare(spark, sf_dir: str, names=None) -> bool:
         # so one failure can't hide the status of everything behind it.
         try:
             sdf = qs[name](spark, sf_dir)
+            if inspect is not None:
+                inspect(name, sdf)
             scols = sdf.columns
             srows = [tuple(r) for r in sdf.collect()]
         except Exception as e:  # noqa: BLE001
             print(f"{name:32s} SPARK ERROR: {type(e).__name__}: {str(e)[:160]}")
             ok = False
             continue
+        finally:
+            # queries such as two_phase_window persist their inputs;
+            # without this the sweep holds every cached frame at once
+            spark.catalog.clearCache()
         # Window-seat lint: the DRIVER's canonicalizer sorts the result with
         # pandas before hashing and crashes on Array/Map/Struct cells
         # ("unhashable type: 'list'" — r10's only red row). This harness

@@ -1,8 +1,7 @@
 """Regression: every registry query must match its DuckDB oracle (the same
 check the driver runs at sf0.01, here at sf0.001 for speed)."""
 
-from tests.oracle_harness import compare
 
-
-def test_all_queries_match_oracles(spark, sf_dir):
-    assert compare(spark, sf_dir)
+def test_all_queries_match_oracles(registry_sweep):
+    oracles_ok, _ = registry_sweep
+    assert oracles_ok

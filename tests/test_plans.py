@@ -122,16 +122,13 @@ def test_bucketed_snapshot_diff_is_shuffle_free(spark):
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
 
 
-def test_no_python_eval_in_any_oracle_query(spark, sf_dir):
+def test_no_python_eval_in_any_oracle_query(registry_sweep):
     """Every oracle-checked operator must run fully JVM-side (the Pandas
     kernels are exactly the rows-only media queries)."""
-    qs, oracles = registry.queries(), registry.oracles()
-    offenders = []
-    for name, fn in qs.items():
-        if name not in oracles:
-            continue
-        if plans.python_eval_count(fn(spark, sf_dir)) > 0:
-            offenders.append(name)
+    _, facts = registry_sweep
+    oracles = registry.oracles()
+    assert set(oracles) <= set(facts), sorted(set(oracles) - set(facts))
+    offenders = [n for n in oracles if facts[n]["python_evals"] > 0]
     assert offenders == []
 
 
@@ -258,7 +255,7 @@ BOUNDED_WINDOW_ALLOWLIST = {
 PYTHON_EVAL_ALLOWLIST = {"media_features", "media_similarity_topk"}
 
 
-def test_no_unpartitioned_window_in_any_registered_query(spark, sf_dir):
+def test_no_unpartitioned_window_in_any_registered_query(registry_sweep):
     """Repo-wide scale gates, one plan sweep over every registered query:
     (1) no single-partition window (the one plan shape that serializes at
     100 TB) outside the calendar-bounded allowlist — the two-phase offsets
@@ -266,21 +263,15 @@ def test_no_unpartitioned_window_in_any_registered_query(spark, sf_dir):
     permitted by the detector itself; (2) no true CartesianProduct
     anywhere (broadcast nested-loop scalar crossJoins are fine and not
     counted); (3) no Python eval outside the declared Arrow kernels."""
-    flagged = {}
-    cartesian = []
-    python_evals = []
-    for name, fn in registry.queries().items():
-        df = fn(spark, sf_dir)
-        contexts = plans.single_partition_window_contexts(df)
-        if contexts:
-            flagged[name] = contexts[0]
-        if plans.cartesian_product_count(df):
-            cartesian.append(name)
-        if name not in PYTHON_EVAL_ALLOWLIST and plans.python_eval_count(df):
-            python_evals.append(name)
-        # two_phase_window (and friends) persist their inputs; without
-        # this the 194-query sweep accumulates every cached frame at once
-        spark.catalog.clearCache()
+    _, facts = registry_sweep
+    names = list(registry.queries())
+    assert set(names) <= set(facts), sorted(set(names) - set(facts))
+    flagged = {n: facts[n]["windows"][0] for n in names if facts[n]["windows"]}
+    cartesian = [n for n in names if facts[n]["cartesian"]]
+    python_evals = [
+        n for n in names
+        if n not in PYTHON_EVAL_ALLOWLIST and facts[n]["python_evals"]
+    ]
     unexpected = set(flagged) - BOUNDED_WINDOW_ALLOWLIST
     stale = BOUNDED_WINDOW_ALLOWLIST - set(flagged)
     assert not unexpected, f"single-task windows in: {sorted(unexpected)}\n" + "\n\n".join(
