@@ -7,7 +7,10 @@ fit-per-call operators leave open. At 100 TB the index is a stored artifact:
 the quantizer is trained once, the corpus is encoded once, and every probe
 afterwards touches only the compact stored tables. Re-fitting per query —
 what `ivf_topk`/`ivf_pq_topk` do — is correct for one-shot jobs but wrong
-for a serving or repeated-batch workload.
+for a serving or repeated-batch workload. The storage lifecycle (params,
+compaction, admission, ingest loop) is :mod:`magiceye_spark.llmops.store`;
+this module supplies the cell assignment, PQ encoding, the cell-partitioned
+append and the probe.
 
 Storage layout under ``path`` (all parquet, all Spark-native):
 
@@ -26,14 +29,10 @@ Storage layout under ``path`` (all parquet, all Spark-native):
                  directory-level partition pruning, no scan of the rest.
 - ``rerank``     PQ only (r11): (vec_id, embedding) PARTITIONED BY cell —
                  the original vectors, kept ONLY for exact-cosine
-                 verification (admission, probe rerank). Probes never
-                 touch it; admission reads just the probed cells'
-                 directories, pruned exactly like the postings. Keeping
-                 a cell-partitioned copy inside the store is what removes
-                 the per-batch corpus-wide rerank shuffle the r10 loop
-                 paid (assembling lake-corpus ∪ sink and deduplicating
-                 ALL of it every micro-batch — store-sized work per
-                 batch); the codes table stays the only artifact a probe
+                 verification (admission, probe rerank). Admission reads
+                 just the probed cells' directories, pruned exactly like
+                 the postings, so no per-batch corpus-wide rerank shuffle
+                 runs; the codes table stays the only artifact a probe
                  scans, so the ~32× hot-set compression is intact.
 
 Determinism: the model is fitted by :func:`simsearch._ivf_centroids` /
@@ -47,12 +46,15 @@ row).
 
 from __future__ import annotations
 
+import functools
 import os
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from magiceye_spark.fsops import fs_exists
+from magiceye_spark.llmops import store
 from magiceye_spark.llmops.simsearch import (
     _best_cells,
     _ivf_centroids,
@@ -70,9 +72,8 @@ _VERSION = "ivf-v1"
 class IvfIndex:
     """A readable IVF(-PQ) index: tiny driver-side model (centroids,
     optional codebooks) + the postings DataFrame (lazy parquet scan when
-    the index came from :func:`read_ivf_index`). ``rerank`` is the PQ
-    store's cell-partitioned originals table (None for flat indexes and
-    pre-r11 PQ stores, which kept originals outside the store)."""
+    read from disk). ``rerank`` is the PQ store's cell-partitioned
+    originals table (None for flat indexes and pre-r11 PQ stores)."""
 
     params: dict
     centroids: dict[int, list[float]]
@@ -102,11 +103,10 @@ def _local_assigned(
     kv: DataFrame, cents: dict[int, list[float]], id_col: str, vec_col: str
 ) -> DataFrame | None:
     """Bounded batches: :func:`_postings_flat`'s (vec_id, embedding, cell)
-    rows computed driver-side (:func:`simsearch._local_batch_sides`, the
-    exact-IEEE replica of the in-plan assignment, pinned against it in
-    tests/test_annindex.py) and shipped as a
-    LocalRelation — the in-plan centroid-literal argmax costs ~0.5 s of
-    plan analysis per action at 32×64. The LocalRelation carries doubles;
+    rows computed driver-side (:func:`simsearch._local_batch_sides`, pinned
+    against the in-plan assignment in tests/test_annindex.py) and shipped
+    as a LocalRelation — the in-plan centroid-literal argmax costs ~0.5 s
+    of plan analysis per action at 32×64. The LocalRelation carries doubles;
     the embedding is cast back to the source type, which is exact for
     ``array<float>`` (float32 values widen to doubles losslessly), so an
     append never changes a stored table's type. None for oversized
@@ -146,10 +146,9 @@ def recommend_ivf_params(n_vectors: int, dim: int | None = None) -> dict:
     store), so a FIXED cell count means per-cell occupancy — and with it
     every probe — grows linearly with the corpus. Sizing
     ``n_centroids ∝ √n`` keeps per-cell occupancy at ~√n, the standard
-    IVF regime (FAISS guidelines put it between √n and 16·√n; we take the
-    nearest power of two to √n, clamped to [4, 65536]) —
-    at 2k vectors that is 32-64 cells (the repo default's regime), at
-    200M it is ~16k cells, not 32.
+    IVF regime (FAISS: between √n and 16·√n; we take the nearest power of
+    two to √n, clamped to [4, 65536]) — 32-64 cells at 2k vectors, ~16k
+    at 200M.
 
     Probe-time sizing stays the caller's: the repo's measured default
     scan fraction is 1/4 — ``n_probe = n_centroids // 4`` (BASELINE.md
@@ -209,9 +208,10 @@ def _fit_model(
 
 
 def _params_dict(
-    dim: int, *, pq: bool, n_centroids: int, m_subvectors: int, n_codes: int,
-    id_col: str, vec_col: str,
+    dim: int, *, pq: bool = False, n_centroids: int = 32, m_subvectors: int = 8,
+    n_codes: int = 16, id_col: str = "vec_id", vec_col: str = "embedding", **_,
 ) -> dict:
+    """The params row; defaults and extra kwargs as :func:`write_ivf_index`."""
     return {
         "version": _VERSION,
         "pq": pq,
@@ -267,27 +267,20 @@ def write_ivf_index(
         dim, pq=pq, n_centroids=n_centroids, m_subvectors=m_subvectors,
         n_codes=n_codes, id_col=id_col, vec_col=vec_col,
     )
-    # model tables via io.local_frame (Arrow LocalRelation): the plain
-    # createDataFrame path pays a ~6 s Python-worker launch PER WRITE
-    from magiceye_spark.io import local_frame
-
-    local_frame(spark, [params]).coalesce(1).write.mode("overwrite").parquet(
-        os.path.join(path, "params")
-    )
-    local_frame(
-        spark,
-        [(c, v) for c, v in sorted(cents.items())],
+    store.write_table(spark, path, "params", [params])
+    store.write_table(
+        spark, path, "centroids", [(c, v) for c, v in sorted(cents.items())],
         "cell int, centroid array<double>",
-    ).coalesce(1).write.mode("overwrite").parquet(os.path.join(path, "centroids"))
+    )
     if pq:
         rows = [
             (mi, ci, vec)
             for mi, book in enumerate(books)
             for ci, vec in enumerate(book)
         ]
-        local_frame(
-            spark, rows, "m int, code int, vec array<double>"
-        ).coalesce(1).write.mode("overwrite").parquet(os.path.join(path, "codebooks"))
+        store.write_table(
+            spark, path, "codebooks", rows, "m int, code int, vec array<double>"
+        )
 
     # encode + write postings, one file per cell for probe-time pruning.
     # explicit spread first: assignment/encoding is CPU-dense on byte-light
@@ -299,12 +292,9 @@ def write_ivf_index(
         spark.sparkContext.defaultParallelism, id_col
     )
     if pq:
-        # two consumers of the same scan+argmin (codes write, rerank
-        # write) — persist the CELL-ASSIGNED frame so the source isn't
-        # re-scanned AND the CPU-dense n_centroids·dim argmax runs ONCE
-        # per row instead of once per write (pre-r13 this persisted the
-        # raw spread, so the codes pass and the rerank pass each re-ran
-        # the assignment — a second full corpus pass at lake scale)
+        # two consumers (codes write, rerank write): persist the
+        # CELL-ASSIGNED frame so the source is scanned and the CPU-dense
+        # n_centroids·dim argmax runs ONCE per row
         flat = _postings_flat(spread, cents, id_col, vec_col).persist()
         try:
             _write_cells(
@@ -325,39 +315,11 @@ def write_ivf_index(
     return read_ivf_index(spark, path)
 
 
-def _open_scans(
-    spark: SparkSession, path: str, params: dict
-) -> tuple[DataFrame, DataFrame | None]:
-    """Fresh lazy scans of the GROWING tables (postings + PQ rerank) — the
-    part of :func:`read_ivf_index` that must re-run per ingest batch so
-    appends/compactions are visible; the model tables above it are
-    immutable (the quantizer is never re-fit) and collect once."""
-    postings = spark.read.parquet(os.path.join(path, "postings")).withColumn(
-        "cell", F.col("cell").cast("int")
-    )
-    rerank = None
-    if params["pq"]:
-        from magiceye_spark.fsops import fs_exists
-
-        rr_dir = os.path.join(path, "rerank")
-        if fs_exists(spark, rr_dir):  # pre-r11 PQ stores have no rerank table
-            # presented under the caller's column names (id_col, vec_col)
-            # + cell, so it plugs into every rerank= consumer unchanged
-            rerank = spark.read.parquet(rr_dir).select(
-                F.col("vec_id").alias(params["id_col"]),
-                F.col("embedding").alias(params["vec_col"]),
-                F.col("cell").cast("int").alias("cell"),
-            )
-    return postings, rerank
-
-
-def read_ivf_index(spark: SparkSession, path: str) -> IvfIndex:
-    """Load an index written by :func:`write_ivf_index`: the model tables
-    (KB-sized) are collected to the driver; postings stay a lazy
-    cell-partitioned parquet scan."""
-    params = spark.read.parquet(os.path.join(path, "params")).first().asDict()
-    if params["version"] != _VERSION:
-        raise ValueError(f"unsupported index version {params['version']!r}")
+def _read_model(spark: SparkSession, path: str) -> dict:
+    """The frozen model tables (params, centroids, codebooks), collected
+    to the driver: the part of :func:`read_ivf_index` an ingest loop
+    collects once."""
+    params = store.read_params(spark, path, _VERSION)
     cents = {
         int(r["cell"]): [float(v) for v in r["centroid"]]
         for r in spark.read.parquet(os.path.join(path, "centroids")).collect()
@@ -370,11 +332,36 @@ def read_ivf_index(spark: SparkSession, path: str) -> IvfIndex:
         books = [[None] * n_codes for _ in range(m)]
         for r in brows:
             books[int(r["m"])][int(r["code"])] = [float(v) for v in r["vec"]]
-    postings, rerank = _open_scans(spark, path, params)
-    return IvfIndex(
-        params=params, centroids=cents, codebooks=books,
-        postings=postings, rerank=rerank,
+    return {"params": params, "centroids": cents, "codebooks": books}
+
+
+def _open_index(spark: SparkSession, path: str, model: dict) -> IvfIndex:
+    """The frozen ``model`` over fresh lazy scans of the GROWING tables
+    (postings + PQ rerank) — the part of :func:`read_ivf_index` an ingest
+    loop re-runs per batch, so appends and compactions are visible."""
+    params = model["params"]
+    postings = spark.read.parquet(os.path.join(path, "postings")).withColumn(
+        "cell", F.col("cell").cast("int")
     )
+    rerank = None
+    rr_dir = os.path.join(path, "rerank")
+    # pre-r11 PQ stores have no rerank table
+    if params["pq"] and fs_exists(spark, rr_dir):
+        # presented under the caller's column names (id_col, vec_col)
+        # + cell, so it plugs into every rerank= consumer unchanged
+        rerank = spark.read.parquet(rr_dir).select(
+            F.col("vec_id").alias(params["id_col"]),
+            F.col("embedding").alias(params["vec_col"]),
+            F.col("cell").cast("int").alias("cell"),
+        )
+    return IvfIndex(postings=postings, rerank=rerank, **model)
+
+
+def read_ivf_index(spark: SparkSession, path: str) -> IvfIndex:
+    """Load an index written by :func:`write_ivf_index`: the model tables
+    (KB-sized) are collected to the driver; postings stay a lazy
+    cell-partitioned parquet scan."""
+    return _open_index(spark, path, _read_model(spark, path))
 
 
 def ivf_index_add(
@@ -386,19 +373,13 @@ def ivf_index_add(
     """Incremental add: assign + encode ONLY the delta against the stored
     model and append to the postings table — the quantizer and codebooks
     are immutable (the FAISS `add` contract: codebook drift would silently
-    invalidate every previously stored code). One pass over the delta,
-    zero touches of existing postings; the returned count rides the write
-    job via ``Observation`` instead of a separate pre-append action.
-
-    ``dedupe_ids``: anti-join the delta against stored vec_ids so a
-    re-ingested batch is a no-op instead of silently inflating posting
-    counts (and every probe that scans the touched cells). Costs one
-    pruned id-column scan of the postings per ingest; for FLAT stores,
-    callers whose ids are new by construction can pass False and own
-    the uniqueness obligation. PQ stores REJECT False (ValueError): the
-    rerank-originals append is anti-joined on id (one original per
-    vec_id by definition), so un-deduped postings would break the
-    documented lockstep invariant rerank.count() == postings.count().
+    invalidate every previously stored code). ``dedupe_ids`` and the
+    returned count follow the idempotent-append contract of
+    :mod:`magiceye_spark.llmops.store`. PQ stores REJECT
+    ``dedupe_ids=False`` (ValueError): the rerank-originals append is
+    anti-joined on id (one original per vec_id by definition), so
+    un-deduped postings would break the lockstep invariant
+    rerank.count() == postings.count().
 
     Because encoding is a pure function of the stored model, add-then-probe
     equals rebuild-then-probe whenever the rebuild would fit the same model
@@ -412,20 +393,12 @@ def _append_vectors(
     idx: IvfIndex, path: str, new_vectors: DataFrame, dedupe_ids: bool = True
 ) -> int:
     """Encode + append a delta against an ALREADY-READ index — the
-    mutation core of :func:`ivf_index_add`, split out so the streaming
-    loop (which reads the index once per batch for admission) does not
-    re-read params + re-collect centroids/codebooks per append. Same
-    semantics as the public add (same PQ guard, anti-joins, lockstep
-    rerank append, Observation-riding count)."""
+    mutation core of :func:`ivf_index_add`, which the streaming loop
+    calls with the index it admitted against."""
     from pyspark.sql import Observation
 
     spark = new_vectors.sparkSession
     if idx.pq and not dedupe_ids:
-        # the rerank-originals append below is anti-joined on id (one
-        # original per vec_id, by definition), so letting the postings
-        # keep duplicate-id rows would silently break the documented
-        # lockstep invariant rerank.count() == postings.count() — and a
-        # duplicated id has no single "the original" for exact rerank.
         raise ValueError(
             "dedupe_ids=False is not supported for PQ stores: the "
             "in-store rerank table is one-row-per-id and must stay "
@@ -485,37 +458,22 @@ def _append_vectors(
 
 def ivf_index_compact(spark: SparkSession, path: str) -> tuple[int, int]:
     """Rewrite the postings table in place, coalescing the small files
-    that :func:`ivf_index_add` appends accumulate — THE production issue
-    with append-heavy stores: every add writes one file per touched cell
-    directory, and after k adds a probe of one cell opens up to k files,
-    so scan task count (and NameNode/listing pressure at lake scale)
-    grows with ingest history instead of data volume. Compaction reads
-    the postings once and rewrites them partitioned by cell with one
-    file per cell. Returns (files_before, files_after); row content is
-    untouched (pinned in tests).
-
-    The rewrite stages into ``postings_compact`` and is promoted by a
-    rename-ASIDE swap through the Hadoop FileSystem API (file:, hdfs:,
-    s3a: — scheme-resolved), so every crash window leaves a complete copy
-    of the postings at a known path; exact per-scheme guarantees are in
-    :mod:`magiceye_spark.fsops`."""
-    from magiceye_spark.fsops import fs_count_files, fs_exists, fs_swap_dirs
-
-    def _rewrite(table: str) -> tuple[int, int]:
-        src_dir = os.path.join(path, table)
-        tmp_dir = os.path.join(path, f"{table}_compact")
-        before = fs_count_files(spark, src_dir)
-        _write_cells(spark.read.parquet(src_dir), tmp_dir, "overwrite")
-        fs_swap_dirs(spark, tmp_dir, src_dir)
-        return before, fs_count_files(spark, src_dir)
-
-    before, after = _rewrite("postings")
-    if fs_exists(spark, os.path.join(path, "rerank")):
-        # the PQ originals table appends in lockstep with the codes and
-        # accumulates the same per-ingest small files
-        rb, ra = _rewrite("rerank")
-        before, after = before + rb, after + ra
-    return before, after
+    that :func:`ivf_index_add` appends accumulate: every add writes one
+    file per touched cell directory, so after k adds a probe of one cell
+    opens up to k files. The rewrite (:func:`store.compact_table`) leaves
+    one file per cell; the PQ ``rerank`` table, appended in lockstep with
+    the codes, is compacted the same way. Returns (files_before,
+    files_after); row content is untouched (pinned in tests)."""
+    tables = ["postings"] + (
+        ["rerank"] if fs_exists(spark, os.path.join(path, "rerank")) else []
+    )
+    counts = [
+        store.compact_table(
+            spark, path, t, lambda rows, tmp, _: _write_cells(rows, tmp, "overwrite")
+        )
+        for t in tables
+    ]
+    return sum(b for b, _ in counts), sum(a for _, a in counts)
 
 
 def ivf_index_stats(index: IvfIndex) -> DataFrame:
@@ -582,10 +540,7 @@ def ivf_index_topk(
     q_local = _local_probe_rows(
         queries, index.centroids, n_probe, id_col, vec_col
     )
-    if q_local is not None:
-        q_frame, cells = q_local
-    else:
-        q_frame, cells = None, _probe_cells(queries, index, n_probe)
+    q_frame, cells = q_local or (None, _probe_cells(queries, index, n_probe))
     assigned = index.postings.where(F.col("cell").isin(cells)).select(
         F.col("vec_id").alias("neighbor_id"),
         F.col("embedding").alias("c_vec"),
@@ -634,10 +589,7 @@ def ivf_pq_index_topk(
         queries, index.centroids, index.codebooks,
         int(index.params["m_subvectors"]), n_probe, id_col, vec_col,
     )
-    if q_local is not None:
-        q_frame, cells = q_local
-    else:
-        q_frame, cells = None, _probe_cells(queries, index, n_probe)
+    q_frame, cells = q_local or (None, _probe_cells(queries, index, n_probe))
     if corpus is None:
         if index.rerank is None:
             raise ValueError(
@@ -658,9 +610,6 @@ def ivf_pq_index_topk(
 
 
 # ---------------------------------------------- delta admission + ingest
-# (the embedding member of the store triad's lifecycle — MinHash text sets:
-# sigstore; Hamming bits: hamstore; the admission RULE is the one shared
-# implementation, graph.indexed_admission_rejects)
 
 
 def delta_ann_pairs_from_index(
@@ -695,26 +644,22 @@ def delta_ann_pairs_from_index(
     ``rerank`` — exact-cosine verification source for PQ indexes. PQ
     postings hold codes, not vectors, so admission (which must verify
     EXACT cosine — ADC distances drift with quantization error) reranks
-    candidates against the ORIGINAL vectors. ``None`` (r11 default) uses
-    the store's own cell-partitioned ``rerank`` table; explicitly passing
-    a frame of (id_col, vec_col) covering every stored vec_id (e.g. the
-    lake corpus the index was built from) is the pre-r11 contract and
-    still supported. Either way the pruned postings contribute only
-    (vec_id, cell) — candidate SCOPING stays the index's job, the
-    ~32×-smaller PQ store is what gets probed — and the rerank join
-    recovers embeddings for just the probed cells' ids. When the rerank
-    frame's ``cell`` column is the INDEX's cell assignment — the store's
-    own table (the ``None`` default), or a caller passing
-    ``_rerank_cell_aligned=True`` (the ingest loop's store ∪ batch
-    union, whose batch side is assigned with the index's centroids) —
-    its scan is statically pruned to the probed cells with the same
-    literal ``isin(cells)`` the postings get, so per-batch rerank work
-    is proportional to the probed slice, not the corpus (the r10
-    verdict's one scale flag). An EXTERNAL frame that merely happens to
-    carry a ``cell`` column is NOT pruned by it (the column is dropped:
-    unrelated values would silently over-prune stored ids).
-    A stored candidate missing from ``rerank`` raises
-    inside the plan (a silently dropped edge would admit a duplicate).
+    candidates against the ORIGINAL vectors. ``None`` uses the store's
+    own cell-partitioned ``rerank`` table; a frame of (id_col, vec_col)
+    covering every stored vec_id (e.g. the lake corpus the index was
+    built from) is also accepted. Either way the pruned postings
+    contribute only (vec_id, cell), and the rerank join recovers
+    embeddings for just the probed cells' ids. When the rerank frame's
+    ``cell`` column is the INDEX's cell assignment — the store's own
+    table, or a caller passing ``_rerank_cell_aligned=True`` (the ingest
+    loop's store ∪ batch union) — its scan is statically pruned to the
+    probed cells with the same literal ``isin(cells)`` the postings get,
+    so per-batch rerank work is proportional to the probed slice. An
+    EXTERNAL frame that merely carries a ``cell`` column is NOT pruned
+    by it (the column is dropped: unrelated values would silently
+    over-prune stored ids). A stored candidate missing from ``rerank``
+    raises inside the plan (a silently dropped edge would admit a
+    duplicate).
     Because :func:`simsearch._pq_fit` derives its coarse quantizer from
     the same :func:`simsearch._ivf_centroids` fit, a PQ index probes the
     SAME cells as its flat twin — so PQ-with-rerank admission equals the
@@ -740,7 +685,6 @@ def delta_ann_pairs_from_index(
     id_col, vec_col = index.params["id_col"], index.params["vec_col"]
     spark = new_vectors.sparkSession
     par = spark.sparkContext.defaultParallelism
-    # barrier the batch before fanning it into the union side + probe side
     # Bounded ingest batches: ONE driver pass yields the assigned side,
     # the probe side, and the probed-cells literal as LocalRelations
     # (simsearch._local_batch_sides — exact-IEEE replica of the in-plan
@@ -783,19 +727,9 @@ def delta_ann_pairs_from_index(
         # (a bare assert_true column would be pruned away by Catalyst).
         rr = rerank
         if _rerank_cell_aligned and "cell" in rr.columns:
-            # a rerank source whose `cell` column is DECLARED to be the
-            # index's cell assignment (the store's own table, or the
-            # ingest loop's store ∪ batch union where the batch side is
-            # assigned with the index's centroids) is statically pruned
-            # to the probed cells — same literal predicate, same
-            # directory-level pruning as the postings.
             rr = rr.where(F.col("cell").isin(cells))
         elif "cell" in rr.columns:
-            # an EXTERNAL corpus that happens to carry an unrelated
-            # `cell` column must not be pruned by it (it would silently
-            # drop stored ids and surface as a bogus missing-vec_id
-            # raise_error downstream, not a contract violation)
-            rr = rr.drop("cell")
+            rr = rr.drop("cell")  # an unrelated `cell` must not prune
         stored = (
             index.postings.where(F.col("cell").isin(cells))
             .select("vec_id", "cell")
@@ -883,26 +817,22 @@ def delta_ann_admit_indexed(
     semantics identical to the MinHash and Hamming stores: an incoming
     vector is admitted iff its cosine-near-dup component over the union
     graph contains no stored vector AND it is the minimum-id incoming
-    member — the verdict rule lives in ONE place
-    (:func:`graph.indexed_admission_rejects`), shared across the triad,
-    so the three modalities' admission semantics cannot drift. PQ
+    member — the verdict rule is applied in ONE place
+    (:func:`store.admit`), shared across the triad, so the three
+    modalities' admission semantics cannot drift. PQ
     indexes verify exact cosine from original vectors — ``rerank``
     defaults to the store's own cell-partitioned table (see
     :func:`delta_ann_pairs_from_index`); flat indexes ignore it. Returns
     the admitted rows of ``new_vectors`` with the caller's columns."""
-    from magiceye_spark.llmops.graph import indexed_admission_rejects
-
-    id_col = index.params["id_col"]
     pairs = delta_ann_pairs_from_index(
         index, new_vectors, threshold, n_probe, salts, rerank=rerank,
         _rerank_cell_aligned=_rerank_cell_aligned,
     )
-    rejected = indexed_admission_rejects(
+    return store.admit(
+        new_vectors,
         pairs.select("doc_a", "doc_b"),
         index.postings.select(F.col("vec_id").alias("doc_id")),
-    )
-    return new_vectors.join(
-        rejected.select(F.col("doc_id").alias(id_col)), id_col, "left_anti"
+        index.params["id_col"],
     )
 
 
@@ -930,70 +860,38 @@ def streaming_ann_ingest(
     model and appended, so batch N+1 deduplicates against everything
     batch N admitted. The store is the state.
 
-    **Cold start** (``bootstrap``, r10; admission parity r11): when no
-    index exists at ``path`` (params or postings missing — the
-    params-only state a crash mid-write leaves behind re-enters here and
-    is idempotent, every bootstrap write is mode=overwrite), the FIRST
-    micro-batch is its own quantizer sample — :func:`_fit_model` fits on
-    the WHOLE batch — and the batch is then admitted through the NORMAL
-    rule against the still-empty store (batch×batch edges only → one
-    min-id survivor per intra-batch near-dup component), matching the
-    sigstore/hamstore bootstrap-from-empty semantics exactly; only the
-    ADMITTED survivors become postings. (r10 admitted batch 0 wholesale,
-    which silently broke the store's no-near-dup invariant on a
-    duplicate-heavy first drop — the r10 verdict's wrong-contract
-    finding.) ``bootstrap`` carries the :func:`write_ivf_index` kwargs
-    (``pq``, ``n_centroids``, ...); ``None`` keeps the pre-r10 contract —
-    a missing store raises, for callers who want a deliberate build step.
-    Compat rule: the model is whatever the first batch taught it — the
-    quantizer is NEVER re-fit on later batches (the FAISS add contract:
-    codebook drift invalidates stored codes), so if the stream's
-    distribution drifts the cells skew (watch
+    **Cold start** (``bootstrap``): when no index exists at ``path``
+    (params or postings missing — the params-only state a crash
+    mid-write leaves behind re-enters here and is idempotent, every
+    bootstrap write is mode=overwrite), the FIRST micro-batch is its own
+    quantizer sample — :func:`_fit_model` fits on the WHOLE batch — and
+    the batch is then admitted through the NORMAL rule against the
+    still-empty store (batch×batch edges only → one min-id survivor per
+    intra-batch near-dup component), matching the sigstore/hamstore
+    bootstrap-from-empty semantics; only the ADMITTED survivors become
+    postings. ``bootstrap`` carries the :func:`write_ivf_index` kwargs
+    (``pq``, ``n_centroids``, ...); ``None`` makes a missing store
+    raise, for callers who want a deliberate build step. The model is
+    whatever the first batch taught it — the quantizer is NEVER re-fit
+    (the FAISS add contract: codebook drift invalidates stored codes),
+    so if the stream's distribution drifts the cells skew (watch
     :func:`ivf_index_stats`'s imbalance) and the remedy is an offline
-    rebuild, not an in-loop re-fit.
+    rebuild.
 
-    **PQ stores** (r11): admission against a PQ index reranks
-    candidates' exact cosine from ORIGINAL vectors the postings don't
-    hold. The store now keeps them itself — ``rerank``, cell-partitioned
-    (written at build/bootstrap, appended in lockstep by
-    :func:`ivf_index_add`) — so the per-batch rerank scan is pruned to
-    the probed cells exactly like the postings, instead of assembling
-    and deduplicating the full lake corpus ∪ sink every micro-batch
-    (the r10 verdict's one scale flag: a per-batch shuffle growing
-    linearly with the corpus). The PQ postings stay the only probed
-    artifact — the 32× compression is intact; rerank joins originals
-    for candidate ids only. The current batch's (id, vector) pairs are
-    always unioned into the rerank source: free for fresh batches and
+    **PQ stores**: admission reranks candidates' exact cosine from the
+    store's cell-partitioned ``rerank`` originals, pruned to the probed
+    cells like the postings. The current batch's (id, vector) pairs are
+    always unioned into the rerank source: free for fresh batches, and
     it makes a replayed batch (whose rows are already stored) a clean
     no-op instead of a raise_error crash loop. Pre-r11 PQ stores (no
-    ``rerank`` table) fall back to the old corpus-wide assembly from
+    ``rerank`` table) fall back to a corpus-wide assembly from
     ``rerank_path`` ∪ the admitted sink ∪ the batch.
 
-    ``compact_every``: run :func:`ivf_index_compact` after every Nth
-    batch. Each append writes one file per touched cell, so probe wall
-    grows with ingest history, not data — the r9 store sweep measured the
-    probe 1.6-1.7× faster against compacted postings (1 file/cell) at
-    every store size. Compaction between batches is safe: the growing
-    postings and rerank scans are re-opened per batch, and the swap is
-    the rename-aside Hadoop-FS promotion. The model tables (params,
-    centroids, codebooks) are read once and frozen for the life of the
-    query, so an offline rebuild of the store needs a stream restart —
-    a running loop would keep encoding against the old model. None
-    (default) leaves cadence to an external maintenance job.
-
-    Replay safety mirrors the sibling loops: encoding is a pure function
-    of the stored model, :func:`ivf_index_add` anti-joins stored vec_ids
-    (re-append is a no-op), and the admitted sink writes
-    ``output_path/ingest_batch=<id>`` with mode=overwrite. Returns the
-    started StreamingQuery; ``trigger`` defaults to availableNow."""
-    from magiceye_spark.fsops import fs_exists
-
-    _model: dict = {}  # params/centroids/codebooks, collected once per loop
-
-    def _store_ready() -> bool:
-        return fs_exists(spark, os.path.join(path, "params")) and fs_exists(
-            spark, os.path.join(path, "postings")
-        )
+    The model tables (params, centroids, codebooks) are the frozen
+    model; the postings and rerank scans are re-opened per batch.
+    Replay safety, ``compact_every`` (:func:`ivf_index_compact`) and
+    ``trigger`` follow :mod:`.store`. Returns the started
+    StreamingQuery."""
 
     def _batch_kv(idx_params: dict, batch_df: DataFrame) -> DataFrame:
         return batch_df.select(idx_params["id_col"], idx_params["vec_col"])
@@ -1006,13 +904,8 @@ def streaming_ann_ingest(
             return None, False
         id_col, vec_col = idx.params["id_col"], idx.params["vec_col"]
         if idx.rerank is not None:
-            # store-side cell-partitioned originals: the pair generator
-            # prunes this scan to the probed cells (it sees the `cell`
-            # column). Union the batch so a crash-replayed batch — whose
-            # rows are already stored — finds its own originals instead
-            # of raise_error-ing forever; duplicate (id, vec) rows are
-            # harmless (identical candidate rows collapse in the
-            # edge-level dropDuplicates), so no corpus-wide dedup runs.
+            # the batch is unioned in (see the docstring); duplicate
+            # (id, vec) rows collapse in the edge-level dropDuplicates
             kv = _batch_kv(idx.params, batch_df)
             batch_part = _local_assigned(kv, idx.centroids, id_col, vec_col)
             if batch_part is None:
@@ -1048,113 +941,64 @@ def streaming_ann_ingest(
                 .select(id_col, vec_col)
             )
         parts.append(_batch_kv(idx.params, batch_df))
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out, False
+        return functools.reduce(DataFrame.unionByName, parts), False
 
-    def _ingest(batch_df: DataFrame, batch_id: int) -> None:
-        if not _store_ready():
-            if bootstrap is None:
-                raise FileNotFoundError(
-                    f"no IVF index at {path}; pass bootstrap= to let the "
-                    "first micro-batch fit the quantizer"
-                )
-            bs = dict(bootstrap)
-            if "n_centroids" not in bs:
-                # size the quantizer to the batch that trains it
-                # (recommend_ivf_params: n_centroids ∝ √n) — the fixed
-                # default of 32 cells is wrong in both directions for a
-                # 10-row smoke batch and a 1M-row production batch
-                bs.update(recommend_ivf_params(batch_df.count()))
-            # fit on the WHOLE batch (it is the quantizer sample), then
-            # admit the batch through the NORMAL rule against the empty
-            # store — triad bootstrap parity: intra-batch near-dup
-            # components keep their min-id survivor only (r11; r10
-            # admitted batch 0 wholesale)
-            fitted = _fit_model(batch_df, **bs)
-            dim, cents, books = fitted
-            params = _params_dict(
-                dim,
-                pq=bool(bs.get("pq", False)),
-                n_centroids=int(bs["n_centroids"]),
-                m_subvectors=int(bs.get("m_subvectors", 8)),
-                n_codes=int(bs.get("n_codes", 16)),
-                id_col=bs.get("id_col", "vec_id"),
-                vec_col=bs.get("vec_col", "embedding"),
+    def _bootstrap(batch_df: DataFrame, batch_id: int) -> bool:
+        if fs_exists(spark, os.path.join(path, "params")) and fs_exists(
+            spark, os.path.join(path, "postings")
+        ):
+            return False
+        if bootstrap is None:
+            raise FileNotFoundError(
+                f"no IVF index at {path}; pass bootstrap= to let the "
+                "first micro-batch fit the quantizer"
             )
-            kv0 = _batch_kv(params, batch_df).limit(0)
-            idx0 = IvfIndex(
-                params=params,
-                centroids=cents,
-                codebooks=books,
-                postings=_pq_encode(
-                    kv0, cents, books, int(params["m_subvectors"]),
-                    params["id_col"], params["vec_col"], id_alias="vec_id",
-                )
-                if params["pq"]
-                else _postings_flat(
-                    kv0, cents, params["id_col"], params["vec_col"]
-                ),
-            )
-            admitted = delta_ann_admit_indexed(
+        bs = dict(bootstrap)
+        if "n_centroids" not in bs:
+            # size the quantizer to the batch that trains it (n_centroids ∝ √n)
+            bs.update(recommend_ivf_params(batch_df.count()))
+        # fit on the WHOLE batch, then admit it against the empty store
+        fitted = _fit_model(batch_df, **bs)
+        dim, cents, books = fitted
+        params = _params_dict(dim, **bs)
+        # the empty store: no postings (the pair generator reads only
+        # vec_id, cell and, for flat stores, the embedding)
+        idx0 = IvfIndex(
+            params=params, centroids=cents, codebooks=books,
+            postings=_postings_flat(
+                _batch_kv(params, batch_df).limit(0), cents,
+                params["id_col"], params["vec_col"],
+            ),
+        )
+        # a crash after the index write replays into the normal path,
+        # where the batch's stored ids label as existing nodes
+        store.admit_sink_append(
+            delta_ann_admit_indexed(
                 idx0, batch_df, threshold, n_probe,
                 rerank=_batch_kv(params, batch_df) if params["pq"] else None,
-            ).persist()  # two consumers: the sink write + the index write
-            try:
-                # sink BEFORE index: a crash between the two replays into
-                # the bootstrap branch again (store not ready) and
-                # overwrites both; a crash AFTER the index write replays
-                # into the normal path, where the verdicts are unchanged
-                # (the batch's stored ids label as existing nodes) and the
-                # sink overwrite re-emits the same admitted set
-                if output_path is not None:
-                    admitted.write.mode("overwrite").parquet(
-                        os.path.join(output_path, f"ingest_batch={batch_id}")
-                    )
-                write_ivf_index(
-                    batch_df, path, postings_from=admitted, _fitted=fitted, **bs
-                )
-            finally:
-                admitted.unpersist()
-            return
-        # model tables (params/centroids/codebooks) are IMMUTABLE for the
-        # life of the store (the FAISS add contract — never re-fit), so
-        # collect them ONCE per loop; only the growing scans re-open per
-        # batch (appends and mid-stream compaction must stay visible)
-        if not _model:
-            idx0 = read_ivf_index(spark, path)
-            _model.update(
-                params=idx0.params,
-                centroids=idx0.centroids,
-                codebooks=idx0.codebooks,
-            )
-            idx = idx0
-        else:
-            postings, rr_scan = _open_scans(spark, path, _model["params"])
-            idx = IvfIndex(postings=postings, rerank=rr_scan, **_model)
+            ),
+            batch_id,
+            output_path,
+            lambda admitted: write_ivf_index(
+                batch_df, path, postings_from=admitted, _fitted=fitted, **bs
+            ),
+        )
+        return True
+
+    def _admit(idx: IvfIndex, batch_df: DataFrame, _, batch_id: int):
         rr, rr_aligned = _rerank_frame(idx, batch_df, batch_id)
-        admitted = delta_ann_admit_indexed(
+        return delta_ann_admit_indexed(
             idx, batch_df, threshold, n_probe,
             rerank=rr, _rerank_cell_aligned=rr_aligned,
-        ).persist()  # two consumers: the sink write + the postings append
-        try:
-            if output_path is not None:
-                admitted.write.mode("overwrite").parquet(
-                    os.path.join(output_path, f"ingest_batch={batch_id}")
-                )
-            # idx was read at the top of this batch; append through the
-            # mutation core instead of re-reading params + re-collecting
-            # the centroid/codebook model tables per micro-batch
-            _append_vectors(idx, path, admitted)
-        finally:
-            admitted.unpersist()
-        if compact_every and (batch_id + 1) % compact_every == 0:
-            ivf_index_compact(spark, path)
+        )
 
-    return (
-        stream.writeStream.foreachBatch(_ingest)
-        .option("checkpointLocation", checkpoint)
-        .trigger(**(trigger or {"availableNow": True}))
-        .start()
+    return store.ingest_loop(
+        stream, checkpoint,
+        read_model=lambda: _read_model(spark, path),
+        open_index=lambda model: _open_index(spark, path, model),
+        admit_batch=_admit,
+        append=lambda idx, _, admitted: _append_vectors(idx, path, admitted),
+        compact=lambda: ivf_index_compact(spark, path),
+        bootstrap=_bootstrap,
+        output_path=output_path, compact_every=compact_every, trigger=trigger,
     )

@@ -761,14 +761,22 @@ def _admission_rejects_local(und: DataFrame, stored_ids: DataFrame) -> DataFrame
 def indexed_admission_rejects(pairs: DataFrame, stored_ids: DataFrame) -> DataFrame:
     """The shared closure-verdict core of persistent-store delta admission
     (:func:`sigstore.delta_dedup_admit_indexed`,
-    :func:`hamstore.delta_hamming_admit_indexed` — one implementation so
-    the admission RULE cannot diverge between stores): given the
-    delta-touching near-dup ``pairs`` (doc_a, doc_b) and the store's
-    ``stored_ids`` (doc_id), return the REJECTED incoming doc_ids — an
-    incoming doc is rejected iff its component over the pair graph
-    contains a stored doc, or it is not the minimum-id incoming member of
-    its all-incoming component. Docs absent from ``pairs`` are singletons
-    and are never rejected (the caller's anti-join admits them).
+    :func:`hamstore.delta_hamming_admit_indexed` and
+    :func:`annindex.delta_ann_admit_indexed`, all through
+    :func:`store.admit` — one implementation so the admission RULE cannot
+    diverge between stores): given the delta-touching near-dup ``pairs``
+    (doc_a, doc_b) and the store's ``stored_ids`` (doc_id), return the
+    REJECTED incoming doc_ids — an incoming doc is rejected iff its
+    component over the pair graph contains a stored doc, or it is not the
+    minimum-id incoming member of its all-incoming component. Docs absent
+    from ``pairs`` are singletons and are never rejected (the caller's
+    anti-join admits them).
+
+    Ids are compared as longs: both paths cast ``doc_a``/``doc_b`` (and
+    the driver-side path the stored ids) with ``cast("long")``, so int
+    and long id columns give the same verdict, and the result is a
+    ``doc_id long`` column either way. Ids must therefore be integral;
+    the anti-join on the caller's id column casts back as needed.
 
     Small-graph fast path (r14): per-batch admission graphs are tiny
     (delta-touching edges only), yet the label/verdict joins below cost
@@ -780,7 +788,9 @@ def indexed_admission_rejects(pairs: DataFrame, stored_ids: DataFrame) -> DataFr
     stored-membership of the graph's nodes with ONE semi-join job, and
     return the rejected ids as a LocalRelation. Same rule, same math,
     byte-identical output (the rule is integer set logic — no floats);
-    corpus-scale graphs keep the distributed plan unchanged."""
+    corpus-scale graphs keep the distributed plan unchanged. The cap is
+    read from ``SMALL_GRAPH_EDGE_CAP`` at call time, so a test can force
+    either path; tests/test_graph.py pins both on the same graphs."""
     und = pairs.select(
         F.col("doc_a").cast("long").alias("doc_a"),
         F.col("doc_b").cast("long").alias("doc_b"),

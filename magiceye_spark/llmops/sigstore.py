@@ -8,12 +8,15 @@ expression over longs) instead of re-shingling petabytes of text. The
 reference has no dedup surface (schema-diff CLI); this is part of the
 §2.4 LLM-pipeline mandate's delta-ingest lifecycle —
 ``delta_dedup_admit`` covers the one-shot batch shape, this module the
-repeated-ingest shape.
+repeated-ingest shape. It is one of the two banded-signature stores of
+:mod:`magiceye_spark.llmops.store`, which holds the storage lifecycle
+(params, idempotent append, compaction, admission, ingest loop); this
+module supplies the MinHash signing, banding and Jaccard verify.
 
 Storage layout under ``path`` (parquet):
 - ``params``      one row: version, num_hashes, bands, shingle_n, threshold.
-- ``signatures``  (doc_id, sig array<long>[num_hashes], shingles
-                  array<long>) — the only table; band buckets are
+- ``signatures``  (doc_id, shingles array<long>, sig array<long>
+                  [num_hashes]) — the only table; band buckets are
                   re-derived from ``sig`` on read (cheap map-side
                   xxhash64 over slices), so no banding layout decision
                   is baked into the store.
@@ -22,10 +25,8 @@ Store sizing (the honest 100 TB arithmetic): the ``sig`` column is
 ``num_hashes`` longs per doc (256 B at the default 32); ``shingles``
 is one long per distinct shingle — ~8 bytes/token, roughly 1-2% of the
 text bytes it replaces, and it is what lets candidate verification run
-EXACT Jaccard without ever re-reading text. Pipelines that can accept
-estimated-Jaccard admission could drop the column and verify from
-signatures alone, but that changes semantics (collision-probability
-estimate vs exact set overlap), so this store keeps the exact contract.
+EXACT Jaccard without ever re-reading text (verifying from signatures
+alone would change semantics to a collision-probability estimate).
 
 Determinism: shingle hashes and the affine MinHash family are seed-fixed
 xxhash64 expressions (:func:`dedup.minhash_signatures`), so pairs
@@ -37,28 +38,35 @@ over the union with the same LSH pair generator).
 
 from __future__ import annotations
 
-import os
-from dataclasses import dataclass
-
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from magiceye_spark.fsops import fs_count_files, fs_swap_dirs
+from magiceye_spark.llmops import store
 from magiceye_spark.llmops.dedup import (
-    _lsh_pairs_from_sigs,
-    _salted_band_cands_one_sided,
     _banded_from_sigs,
+    _lsh_pairs_from_sigs,
     _verify_candidates,
     minhash_signatures,
 )
 
-_VERSION = "minhash-v1"
+_KIND = store.SignatureKind(
+    version="minhash-v1",
+    columns=("shingles", "sig"),
+    banded=lambda sigs, p: _banded_from_sigs(
+        sigs, int(p["num_hashes"]), int(p["bands"])
+    ),
+    payload=("shingles", "sh_a", "sh_b"),
+    bound=lambda p, t: float(t if t is not None else p["threshold"]),
+    verify=_verify_candidates,
+    count_col="n_docs",
+)
+
+MinhashIndex = store.SignatureIndex
 
 
-@dataclass
-class MinhashIndex:
-    params: dict
-    signatures: DataFrame  # lazy parquet scan when read from disk
+def _sign(docs: DataFrame, params: dict, text_col: str) -> DataFrame:
+    return minhash_signatures(
+        docs, int(params["num_hashes"]), int(params["shingle_n"]), text_col
+    )
 
 
 def write_minhash_index(
@@ -72,34 +80,17 @@ def write_minhash_index(
     text_col: str = "text",
 ) -> MinhashIndex:
     """Shingle + sign the corpus once and persist. One corpus pass."""
-    spark = docs.sparkSession
     params = {
-        "version": _VERSION,
-        "num_hashes": num_hashes,
-        "bands": bands,
-        "shingle_n": shingle_n,
-        "threshold": float(threshold),
+        "version": _KIND.version, "num_hashes": num_hashes, "bands": bands,
+        "shingle_n": shingle_n, "threshold": float(threshold),
     }
-    from magiceye_spark.io import local_frame
-
-    # Arrow LocalRelation, not plain createDataFrame (a ~6 s Python-worker
-    # launch per tiny write otherwise — io.local_frame docstring)
-    local_frame(spark, [params]).coalesce(1).write.mode("overwrite").parquet(
-        os.path.join(path, "params")
-    )
-    minhash_signatures(docs, num_hashes, shingle_n, text_col).write.mode(
-        "overwrite"
-    ).parquet(os.path.join(path, "signatures"))
-    return read_minhash_index(spark, path)
+    store.write_signatures(_sign(docs, params, text_col), path, _KIND, params)
+    return read_minhash_index(docs.sparkSession, path)
 
 
 def read_minhash_index(spark: SparkSession, path: str) -> MinhashIndex:
-    params = spark.read.parquet(os.path.join(path, "params")).first().asDict()
-    if params["version"] != _VERSION:
-        raise ValueError(f"unsupported index version {params['version']!r}")
-    return MinhashIndex(
-        params=params,
-        signatures=spark.read.parquet(os.path.join(path, "signatures")),
+    return store.open_signatures(
+        spark, path, store.read_params(spark, path, _KIND.version)
     )
 
 
@@ -114,67 +105,22 @@ def minhash_index_add(
     hash family is seed-fixed, so appended signatures are exactly what a
     full rebuild would produce for those docs (pinned in tests).
 
-    ``dedupe_ids``: anti-join the delta against the stored doc_ids so a
-    re-ingested batch is a no-op instead of silently duplicating store
-    rows (which would multiply every downstream join on stored ids). The
-    anti-join scans one pruned column of the store per ingest; callers
-    whose ingest ids are new by construction (the common production
-    contract) can pass False to skip that scan — they then OWN the
-    uniqueness obligation. Returned count rides the write job via
-    ``Observation`` — one pass over the delta, no pre-append count action."""
+    ``dedupe_ids`` and the returned count follow the idempotent-append
+    contract of :mod:`magiceye_spark.llmops.store`: the anti-join scans
+    one pruned column of the store per ingest, and the count rides the
+    write job."""
     idx = read_minhash_index(spark, path)
-    delta = minhash_signatures(
-        new_docs,
-        int(idx.params["num_hashes"]),
-        int(idx.params["shingle_n"]),
-        text_col,
+    return store.append_signatures(
+        idx, path, _sign(new_docs, idx.params, text_col), _KIND, dedupe_ids
     )
-    return _append_signatures(idx, path, delta, dedupe_ids=dedupe_ids)
-
-
-def _append_signatures(
-    idx: MinhashIndex, path: str, sig_rows: DataFrame, dedupe_ids: bool = True
-) -> int:
-    """Append an ALREADY-SIGNED frame to an ALREADY-READ index — the
-    store-mutation core of :func:`minhash_index_add`, split out so the
-    streaming loop (which has both in hand per batch: it signed the batch
-    for admission and read the index to admit against) does not re-read
-    the params table and re-run the shingle+MinHash pass over the
-    admitted docs a second time per micro-batch. Semantics identical to
-    the public add: same idempotence anti-join, same Observation-riding
-    count (signatures are a seed-fixed pure function of text, so the
-    appended rows are byte-identical either way — pinned in tests)."""
-    from pyspark.sql import Observation
-
-    delta = sig_rows.select("doc_id", "shingles", "sig")
-    if dedupe_ids:
-        delta = delta.join(
-            idx.signatures.select("doc_id"), "doc_id", "left_anti"
-        )
-    obs = Observation()
-    delta.observe(obs, F.count(F.lit(1)).alias("n")).write.mode("append").parquet(
-        os.path.join(path, "signatures")
-    )
-    return int(obs.get["n"])
 
 
 def minhash_index_compact(spark: SparkSession, path: str) -> tuple[int, int]:
     """Coalesce the signature files that repeated :func:`minhash_index_add`
-    appends accumulate (same small-files lifecycle issue as
-    :func:`annindex.ivf_index_compact`): one staged rewrite hashed on
-    doc_id, then a rename-aside swap through the Hadoop FileSystem API
-    (works on file:, hdfs:, s3a: — see :func:`magiceye_spark.fsops.fs_swap_dirs`
-    for the exact crash-window guarantees per scheme). Returns
+    appends accumulate: one staged rewrite hashed on doc_id, swapped in
+    rename-aside (:func:`store.compact_table`). Returns
     (files_before, files_after); rows untouched (pinned in tests)."""
-    sig_dir = os.path.join(path, "signatures")
-    tmp_dir = os.path.join(path, "signatures_compact")
-
-    before = fs_count_files(spark, sig_dir)
-    sigs = spark.read.parquet(sig_dir)
-    n_out = max(1, min(spark.sparkContext.defaultParallelism, before))
-    sigs.repartition(n_out, "doc_id").write.mode("overwrite").parquet(tmp_dir)
-    fs_swap_dirs(spark, tmp_dir, sig_dir)
-    return before, fs_count_files(spark, sig_dir)
+    return store.compact_signatures(spark, path)
 
 
 def lsh_pairs_from_index(
@@ -188,45 +134,20 @@ def lsh_pairs_from_index(
         index.signatures,
         int(p["num_hashes"]),
         int(p["bands"]),
-        float(threshold if threshold is not None else p["threshold"]),
+        _KIND.bound(p, threshold),
     )
 
 
 def band_bucket_stats(index: MinhashIndex, bucket_cap: int = 2000) -> DataFrame:
-    """Store-health diagnostic completing the triad's symmetry
-    (:func:`hamstore.band_bucket_stats`, :func:`annindex.ivf_index_stats`):
-    per LSH band, the bucket-occupancy distribution that sizes the
-    hot-bucket salt guard — an operator checks ``max_bucket`` /
-    ``n_hot_buckets`` before trusting per-batch admission latency,
-    because one near-constant corpus region (template farm) drops
-    thousands of docs into a single (band, bucket) and every ingest
-    batch then pays ceil(b/cap) salted tasks on it. Buckets are the SAME
-    xxhash64-over-signature-slices the candidate join uses (so the
-    numbers describe the actual join groups); xxhash64 has no DuckDB
-    twin, so this row is pytest-pinned rather than SQL-oracled (the
-    Hamming sibling's band fold is SQL-expressible and hash-checked).
+    """Store-health diagnostic (:func:`store.band_bucket_stats`; the
+    siblings are :func:`hamstore.band_bucket_stats` and
+    :func:`annindex.ivf_index_stats`). Buckets are the SAME
+    xxhash64-over-signature-slices the candidate join uses; xxhash64 has
+    no DuckDB twin, so this row is pytest-pinned rather than SQL-oracled
+    (the Hamming sibling's band fold is SQL-expressible and hash-checked).
     Output: (band_id, n_docs, n_buckets, max_bucket, n_hot_buckets) —
     one groupBy over a column-pruned store scan, ``bands`` rows."""
-    p = index.params
-    per = (
-        _banded_from_sigs(
-            index.signatures, int(p["num_hashes"]), int(p["bands"])
-        )
-        .groupBy("band_id", "bucket")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    return (
-        per.groupBy("band_id")
-        .agg(
-            F.sum("n").cast("bigint").alias("n_docs"),
-            F.count(F.lit(1)).cast("bigint").alias("n_buckets"),
-            F.max("n").cast("bigint").alias("max_bucket"),
-            F.sum(F.when(F.col("n") > bucket_cap, 1).otherwise(0))
-            .cast("bigint")
-            .alias("n_hot_buckets"),
-        )
-        .orderBy("band_id")
-    )
+    return store.band_bucket_stats(index, _KIND, bucket_cap)
 
 
 def delta_pairs_from_index(
@@ -234,7 +155,6 @@ def delta_pairs_from_index(
     new_docs: DataFrame,
     threshold: float | None = None,
     text_col: str = "text",
-    _sigs: DataFrame | None = None,
 ) -> DataFrame:
     """Near-dup pairs TOUCHING the delta: delta×stored and delta×delta —
     the edges admission needs (stored×stored edges cannot change a delta
@@ -242,53 +162,33 @@ def delta_pairs_from_index(
     enters through an edge incident to an incoming doc, so
     has-existing-contact and min-incoming are decided by delta-touching
     edges alone — the reduction the parity test validates). Only the
-    delta is shingled; the stored side contributes band buckets derived
-    from its signatures.
+    delta is shingled, once (:func:`store.delta_barrier`); the stored
+    side contributes band buckets derived from its signatures
+    (:func:`store.delta_pairs`).
 
     Output (doc_a, doc_b, jaccard) with doc_a < doc_b, like every pair
-    generator.
+    generator."""
+    delta = store.delta_barrier(_sign(new_docs, index.params, text_col), _KIND)
+    return store.delta_pairs(index, delta, _KIND, threshold)
 
-    ``_sigs`` (internal, streaming loop): the batch's ALREADY-SIGNED
-    (and persisted) signature frame — skips the signing pass and its
-    barrier below, since a persisted frame is its own materialization
-    barrier for the three consuming branches."""
-    p = index.params
-    num_hashes, bands = int(p["num_hashes"]), int(p["bands"])
-    thr = float(threshold if threshold is not None else p["threshold"])
-    if _sigs is not None:
-        delta_sigs = _sigs.select("doc_id", "shingles", "sig")
-    else:
-        # Explicit-count repartition barrier on the DELTA signatures: the
-        # frame fans into three plan branches (the union's bucket-size agg,
-        # the union join side, the delta join side), and without a barrier
-        # each branch re-runs the shingling+MinHash expressions over the
-        # batch text — the per-batch fixed cost the r8 store sweep
-        # measured. Behind the exchange the three subtrees share ONE
-        # ReusedExchange, so the batch is shingled once per ingest (the
-        # _salted_band_sides barrier discipline); the STORED side
-        # deliberately stays barrier-free — its banding is xxhash64 over
-        # stored slices, where two column-pruned scans beat shuffling
-        # bands×|store| rows per batch.
-        delta_sigs = minhash_signatures(
-            new_docs, num_hashes, int(p["shingle_n"]), text_col
-        ).repartition(
-            new_docs.sparkSession.sparkContext.defaultParallelism, "doc_id"
-        )
-    # ONE-SIDED salted band join: delta side vs the full union (stored +
-    # delta, so delta×delta collisions are found too). Every candidate has
-    # a delta member by construction — no stored×stored pair is ever
-    # GENERATED, so per-batch candidate cost is linear in the delta at
-    # fixed store bucket occupancy instead of paying the store's internal
-    # near-dup structure on every ingest (the r7 defect: both sides came
-    # from the union and stored×stored pairs were filtered post-join).
-    union_banded = _banded_from_sigs(
-        index.signatures.unionByName(delta_sigs), num_hashes, bands
-    )
-    delta_banded = _banded_from_sigs(delta_sigs, num_hashes, bands)
-    touching = _salted_band_cands_one_sided(
-        delta_banded, union_banded, 2000, "shingles", "sh_a", "sh_b"
-    )
-    return _verify_candidates(touching, thr)
+
+def delta_dedup_admit_indexed(
+    index: MinhashIndex,
+    new_docs: DataFrame,
+    threshold: float | None = None,
+    text_col: str = "text",
+) -> DataFrame:
+    """Delta-ingest admission against the STORE: an incoming doc is
+    admitted iff its near-dup component over the union graph contains no
+    stored doc AND it is the minimum-id incoming member (singletons
+    trivially qualify) — the closure semantics of
+    :func:`graph.delta_dedup_admit`, fed by :func:`delta_pairs_from_index`
+    edges. Returns the admitted rows of ``new_docs`` with the CALLER's
+    columns — the module only requires (doc_id, <text_col>), so the
+    projection must not assume any corpus schema beyond that. Only the
+    batch is shingled; the closure runs over delta-touching edges only."""
+    pairs = delta_pairs_from_index(index, new_docs, threshold, text_col)
+    return store.admit(new_docs, pairs, index.signatures.select("doc_id"))
 
 
 def streaming_dedup_ingest(
@@ -303,124 +203,34 @@ def streaming_dedup_ingest(
     trigger: dict | None = None,
 ):
     """The CONTINUOUS ingest loop over the persistent store — the shape a
-    100 TB crawl pipeline actually runs: every micro-batch is admitted
-    against the store (:func:`delta_dedup_admit_indexed`, one-sided band
-    join: only the batch is shingled) and the admitted docs' signatures
-    are APPENDED, so batch N+1 deduplicates against everything batch N
-    admitted — cross-batch duplicates are rejected without any
-    stream-stream join or unbounded operator state. The store IS the
-    state, living in parquet rather than the state store: no watermark
-    bounds it, restarts re-read it for free, and the same store serves
-    batch jobs between streaming runs.
+    100 TB crawl pipeline actually runs: every micro-batch is signed once,
+    admitted against the store (:func:`delta_dedup_admit_indexed`'s
+    one-sided band join, over the persisted signatures) and the admitted
+    docs' signatures are APPENDED, so batch N+1 deduplicates against
+    everything batch N admitted — cross-batch duplicates are rejected
+    without any stream-stream join or unbounded operator state. The store
+    IS the state, living in parquet rather than the state store: no
+    watermark bounds it, restarts re-read it for free, and the same store
+    serves batch jobs between streaming runs.
 
-    Replay safety (foreachBatch reruns a batch after a crash before the
-    checkpoint commits): the store append is idempotent because
-    :func:`minhash_index_add` anti-joins stored doc_ids, and the
-    admitted-docs sink writes ``output_path/ingest_batch=<id>`` with
-    mode=overwrite — a replayed batch overwrites its own directory
-    instead of duplicating. Admission itself is deterministic given the
-    store contents, and a replayed batch sees at worst a store that
-    already contains its own signatures — its docs then anti-join away in
-    the add and its admission verdicts are unchanged (its own stored
-    signatures can only form components through edges its first run
-    already saw... they ARE its first run's admitted set, which is
-    exactly what the overwrite re-emits; pinned in tests).
-
-    ``compact_every``: run :func:`minhash_index_compact` after every Nth
-    batch — appends accumulate one file per batch, so signature-scan task
-    count (and listing pressure on a lake) grows with ingest history
-    rather than data volume (the r9 store sweep measured the analogous
-    IVF probe 1.6-1.7× faster against compacted postings). Safe between
-    batches: the growing signature scan is re-opened per batch and the
-    swap is the rename-aside Hadoop-FS promotion. The params table is
-    read once and frozen for the life of the query, so an offline
-    rebuild of the store needs a stream restart. None (default) leaves
-    cadence to an external maintenance job.
-
-    ``trigger``: kwargs for ``DataStreamWriter.trigger`` — defaults to
-    ``{"availableNow": True}`` (drain-what-exists, the batch-replay and
-    test shape); pass ``{"processingTime": "1 minute"}`` for the live
-    continuous loop over a growing source. Returns the started
+    The sink receives the admitted rows of the batch. Replay safety,
+    ``compact_every`` (:func:`minhash_index_compact`) and ``trigger``
+    follow :mod:`.store`. Returns the started
     StreamingQuery."""
-
-    _params: dict = {}  # immutable params row, collected once per loop
-
-    def _ingest(batch_df: DataFrame, batch_id: int) -> None:
-        # params (hash family/bands/threshold) are immutable for the life
-        # of the store — collect once per loop; only the growing
-        # signatures scan re-opens per batch (appends/compaction visible)
-        if not _params:
-            _params.update(read_minhash_index(spark, path).params)
-        idx = MinhashIndex(
-            params=_params,
-            signatures=spark.read.parquet(os.path.join(path, "signatures")),
-        )
-        # sign the batch ONCE per micro-batch and persist: admission's
-        # pair generator and the store append both consume these rows
-        # (pre-r13 the append re-ran the shingle+MinHash pass over the
-        # admitted docs AND re-read the params table — two of the loop's
-        # three per-batch passes over batch text for one result, since
-        # signatures are a seed-fixed pure function of text)
-        sigs = minhash_signatures(
-            batch_df,
-            int(idx.params["num_hashes"]),
-            int(idx.params["shingle_n"]),
-            text_col,
-        ).persist()
-        try:
-            admitted = delta_dedup_admit_indexed(
-                idx, batch_df, threshold, text_col, _sigs=sigs
-            ).persist()  # two consumers: the sink write + the id semi-join
-            try:
-                if output_path is not None:
-                    admitted.write.mode("overwrite").parquet(
-                        os.path.join(output_path, f"ingest_batch={batch_id}")
-                    )
-                _append_signatures(
-                    idx,
-                    path,
-                    sigs.join(
-                        admitted.select("doc_id"), "doc_id", "left_semi"
-                    ),
-                )
-            finally:
-                admitted.unpersist()
-        finally:
-            sigs.unpersist()
-        if compact_every and (batch_id + 1) % compact_every == 0:
-            minhash_index_compact(spark, path)
-
-    return (
-        docs_stream.writeStream.foreachBatch(_ingest)
-        .option("checkpointLocation", checkpoint)
-        .trigger(**(trigger or {"availableNow": True}))
-        .start()
+    return store.ingest_loop(
+        docs_stream, checkpoint,
+        read_model=lambda: read_minhash_index(spark, path).params,
+        open_index=lambda params: store.open_signatures(spark, path, params),
+        sign=lambda params, batch: _sign(batch, params, text_col),
+        admit_batch=lambda idx, batch, sigs, _: store.admit(
+            batch,
+            store.delta_pairs(idx, sigs, _KIND, threshold),
+            idx.signatures.select("doc_id"),
+        ),
+        append=lambda idx, sigs, admitted: store.append_signatures(
+            idx, path, sigs.join(admitted.select("doc_id"), "doc_id", "left_semi"),
+            _KIND,
+        ),
+        compact=lambda: minhash_index_compact(spark, path),
+        output_path=output_path, compact_every=compact_every, trigger=trigger,
     )
-
-
-def delta_dedup_admit_indexed(
-    index: MinhashIndex,
-    new_docs: DataFrame,
-    threshold: float | None = None,
-    text_col: str = "text",
-    _sigs: DataFrame | None = None,
-) -> DataFrame:
-    """Delta-ingest admission against the STORE: an incoming doc is
-    admitted iff its near-dup component over the union graph contains no
-    stored doc AND it is the minimum-id incoming member (singletons
-    trivially qualify) — the closure semantics of
-    :func:`graph.delta_dedup_admit`, fed by :func:`delta_pairs_from_index`
-    edges. Returns the admitted rows of ``new_docs`` with the CALLER's
-    columns — the module only requires (doc_id, <text_col>), so the
-    projection must not assume any corpus schema beyond that.
-
-    This is the per-batch production shape: only the batch is shingled,
-    the store contributes map-side band buckets, and the closure runs
-    over delta-touching edges only."""
-    from magiceye_spark.llmops.graph import indexed_admission_rejects
-
-    pairs = delta_pairs_from_index(index, new_docs, threshold, text_col, _sigs)
-    rejected = indexed_admission_rejects(
-        pairs, index.signatures.select("doc_id")
-    )
-    return new_docs.join(rejected, "doc_id", "left_anti")

@@ -389,49 +389,16 @@ def _local_probe_rows(
 ):
     """Flat-probe sibling of :func:`_local_pq_query_side`: for BOUNDED
     query batches, the exploded (query_id, q_vec, cell) probe frame as an
-    Arrow LocalRelation plus the distinct probed-cell list, computed
-    driver-side in exactly the in-plan fold orders (same guards: None
-    when over the cap / non-finite / exact-zero scores)."""
-    import math
-
-    rows = queries.select(id_col, vec_col).limit(_LOCAL_QUERY_CAP + 1).collect()
-    if len(rows) > _LOCAL_QUERY_CAP:
+    Arrow LocalRelation plus the distinct probed-cell list, ranked by
+    :func:`_local_ranked_cells` (None when it declines)."""
+    ranked = _local_ranked_cells(queries, cents, id_col, vec_col)
+    if ranked is None:
         return None
-    cmat = [cents[i] for i in sorted(cents)]
-    dim = len(cmat[0])
-    cnorms = []
-    for c in cmat:
-        s = 0.0
-        for v in c:
-            s += float(v) * float(v)
-        cnorms.append(math.sqrt(s))
-    out = []
-    for r in rows:
-        qid, vec = r[0], [float(v) for v in r[1]]
-        if len(vec) != dim:
-            return None
-        s = 0.0
-        for v in vec:
-            s += v * v
-        nrm = math.sqrt(s)
-        pairs = []
-        for ci, c in enumerate(cmat):
-            d = 0.0
-            for j in range(dim):
-                d += vec[j] * float(c[j])
-            den = nrm * cnorms[ci]
-            if den == 0.0:
-                # zero-norm query or centroid: Python float division
-                # RAISES where Spark's double division yields NaN/Inf —
-                # fall back to the in-plan path as the docstring promises
-                return None
-            score = d / den
-            if not math.isfinite(score) or score == 0.0:
-                return None
-            pairs.append((score, ci))
-        pairs.sort()
-        for _, cell in list(reversed(pairs))[:n_probe]:
-            out.append((qid, vec, int(cell)))
+    out = [
+        (qid, vec, cell)
+        for qid, vec, _, pairs in ranked
+        for _, cell in pairs[:n_probe]
+    ]
     from magiceye_spark.io import local_frame
 
     id_type = queries.schema[id_col].dataType.simpleString()
@@ -729,6 +696,64 @@ def _pq_encode(
 _LOCAL_QUERY_CAP = 1024
 
 
+def _local_ranked_cells(
+    frame: DataFrame, cents: dict[int, list[float]], id_col: str, vec_col: str
+):
+    """Driver-side replica of :func:`_best_cells`' ranking, shared by the
+    bounded local query and batch sides: per row of ``frame``,
+    (id, vec, norm, [(score, cell), ...]) with every centroid ranked by
+    descending (score, cell). Plain Python floats in EXACTLY the fold
+    order of the in-plan expressions (0.0-seeded left-to-right sums,
+    dot/(norm·norm) cosine) — Python floats ARE IEEE doubles, so scores
+    are bit-identical (pinned in tests/test_annindex.py). Exact 0.0
+    scores rank the same on both sides: a 0.0-seeded fold never yields
+    -0.0 (+0.0 + -0.0 = +0.0), and equal scores tie-break on ``cell`` in
+    both Spark's struct ordering and Python's tuple sort.
+
+    None — callers keep the in-plan path — when the frame exceeds
+    :data:`_LOCAL_QUERY_CAP` rows, a vector's dimension differs from the
+    centroids', a norm is zero (Python float division raises where
+    Spark's yields NaN/Inf) or a score is non-finite (NaN ordering
+    differs between the engines)."""
+    import math
+
+    rows = frame.select(id_col, vec_col).limit(_LOCAL_QUERY_CAP + 1).collect()
+    if len(rows) > _LOCAL_QUERY_CAP:
+        return None
+    cmat = [[float(v) for v in cents[i]] for i in sorted(cents)]
+    dim = len(cmat[0])
+    cnorms = []
+    for c in cmat:
+        s = 0.0
+        for v in c:
+            s += v * v
+        cnorms.append(math.sqrt(s))
+    out = []
+    for r in rows:
+        vec = [float(v) for v in r[1]]
+        if len(vec) != dim:
+            return None
+        s = 0.0
+        for v in vec:
+            s += v * v
+        nrm = math.sqrt(s)
+        pairs = []
+        for ci, c in enumerate(cmat):
+            d = 0.0
+            for j in range(dim):
+                d += vec[j] * c[j]
+            den = nrm * cnorms[ci]
+            if den == 0.0:
+                return None
+            score = d / den
+            if not math.isfinite(score):
+                return None
+            pairs.append((score, ci))
+        pairs.sort(reverse=True)
+        out.append((r[0], vec, nrm, pairs))
+    return out
+
+
 def _local_pq_query_side(
     queries: DataFrame,
     cents: dict[int, list[float]],
@@ -741,58 +766,17 @@ def _local_pq_query_side(
     """Driver-side replica of the _pq_search query side for BOUNDED query
     batches: per query, the probe-cell top-n and the m×n_codes ADC LUT,
     computed with plain Python floats in EXACTLY the fold order of the
-    in-plan expressions (0.0-seeded left-to-right sums, dot/(norm·norm)
-    cosine, (score, cell) struct ordering) — Python floats ARE IEEE
-    doubles, so the values are bit-identical (pinned in tests). Returns
-    the exploded (query_id, _lut, cell, _cell_dot) frame as an Arrow
-    LocalRelation, or None when the batch exceeds the cap / a score is
-    non-finite (zero vectors: NaN ordering differs between engines — the
-    in-plan path keeps those exactly as before)."""
-    import math
-
-    rows = queries.select(id_col, vec_col).limit(_LOCAL_QUERY_CAP + 1).collect()
-    if len(rows) > _LOCAL_QUERY_CAP:
+    in-plan expressions (probe cells from :func:`_local_ranked_cells`; the
+    LUT 0.0-seeded left-to-right sums) — Python floats ARE IEEE doubles,
+    so the values are bit-identical (pinned in tests). Returns the
+    exploded (query_id, _lut, cell, _cell_dot) frame as an Arrow
+    LocalRelation, or None when the ranking declines."""
+    ranked = _local_ranked_cells(queries, cents, id_col, vec_col)
+    if ranked is None:
         return None
-    cmat = [cents[i] for i in sorted(cents)]
-    dim = len(cmat[0])
-    sub_d = dim // m_subvectors
-    cnorms = []
-    for c in cmat:
-        s = 0.0
-        for v in c:
-            s += float(v) * float(v)
-        cnorms.append(math.sqrt(s))
+    sub_d = len(cents[min(cents)]) // m_subvectors
     out = []
-    for r in rows:
-        qid, vec = r[0], [float(v) for v in r[1]]
-        if len(vec) != dim:
-            return None
-        s = 0.0
-        for v in vec:
-            s += v * v
-        nrm = math.sqrt(s)
-        pairs = []
-        for ci, c in enumerate(cmat):
-            d = 0.0
-            for j in range(dim):
-                d += vec[j] * float(c[j])
-            den = nrm * cnorms[ci]
-            if den == 0.0:
-                # zero-norm query or centroid: Python float division
-                # RAISES where Spark's double division yields NaN/Inf —
-                # fall back to the in-plan path as the docstring promises
-                return None
-            score = d / den
-            # non-finite: NaN ordering differs between Python and Spark's
-            # double ordering; exact ±0.0: Spark sorts -0.0 < 0.0, Python
-            # ties them — both vanishingly rare for real cosines, handled
-            # by falling back to the in-plan path rather than risking a
-            # different probe order
-            if not math.isfinite(score) or score == 0.0:
-                return None
-            pairs.append((score, ci))
-        pairs.sort()
-        top = list(reversed(pairs))[:n_probe]
+    for qid, vec, nrm, pairs in ranked:
         nq = [v / nrm for v in vec]
         lut = []
         for mi in range(m_subvectors):
@@ -803,7 +787,7 @@ def _local_pq_query_side(
                     s += nq[mi * sub_d + j] * float(code_row[j])
                 row_l.append(s)
             lut.append(row_l)
-        for score, cell in top:
+        for score, cell in pairs[:n_probe]:
             out.append((qid, lut, int(cell), float(score)))
     from magiceye_spark.io import local_frame
 
@@ -830,50 +814,17 @@ def _local_batch_sides(
     side (q_id, q_vec, cell), and the distinct probed-cell list, all as
     Arrow LocalRelations — replacing two centroid-literal embeddings, the
     repartition barrier, and the probe-cells distinct-collect job per
-    micro-batch. Same exact-IEEE fold orders and the same fallback guards
-    (None when over the cap / non-finite / exact-zero scores)."""
-    import math
-
-    rows = batch.select(id_col, vec_col).limit(_LOCAL_QUERY_CAP + 1).collect()
-    if len(rows) > _LOCAL_QUERY_CAP:
+    micro-batch. Ranked by :func:`_local_ranked_cells` (None when it
+    declines)."""
+    ranked = _local_ranked_cells(batch, cents, id_col, vec_col)
+    if ranked is None:
         return None
-    cmat = [cents[i] for i in sorted(cents)]
-    dim = len(cmat[0])
-    cnorms = []
-    for c in cmat:
-        s = 0.0
-        for v in c:
-            s += float(v) * float(v)
-        cnorms.append(math.sqrt(s))
-    assigned, probes = [], []
-    for r in rows:
-        rid, vec = r[0], [float(v) for v in r[1]]
-        if len(vec) != dim:
-            return None
-        s = 0.0
-        for v in vec:
-            s += v * v
-        nrm = math.sqrt(s)
-        pairs = []
-        for ci, c in enumerate(cmat):
-            d = 0.0
-            for j in range(dim):
-                d += vec[j] * float(c[j])
-            den = nrm * cnorms[ci]
-            if den == 0.0:
-                # zero-norm query or centroid: Python float division
-                # RAISES where Spark's double division yields NaN/Inf —
-                # fall back to the in-plan path as the docstring promises
-                return None
-            score = d / den
-            if not math.isfinite(score) or score == 0.0:
-                return None
-            pairs.append((score, ci))
-        pairs.sort()
-        top = list(reversed(pairs))
-        assigned.append((rid, vec, int(top[0][1])))
-        for _, cell in top[:n_probe]:
-            probes.append((rid, vec, int(cell)))
+    assigned = [(rid, vec, pairs[0][1]) for rid, vec, _, pairs in ranked]
+    probes = [
+        (rid, vec, cell)
+        for rid, vec, _, pairs in ranked
+        for _, cell in pairs[:n_probe]
+    ]
     from magiceye_spark.io import local_frame
 
     spark = batch.sparkSession

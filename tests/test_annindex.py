@@ -38,9 +38,8 @@ def _parity_batch(spark, vec_type):
     """Centroids and a batch built to stress the argmax: exact score ties
     between cells (cells 0 and 1 are permutations of each other, so an
     all-equal vector scores them bit-identically), near-zero norms (down
-    to float32 subnormals) and random directions. Every vector and
-    centroid is dense: an exact 0.0 score makes the driver side decline
-    (see the zero-vector test)."""
+    to float32 subnormals) and random directions. Exact 0.0 scores are
+    covered by :func:`_axis_batch`."""
     dim = 8
     rng = random.Random(11)
     cents = {
@@ -60,6 +59,23 @@ def _parity_batch(spark, vec_type):
         [1e-20 * rng.gauss(0.0, 1.0) for _ in range(dim)],
     ]
     vecs += [[rng.gauss(0.0, 1.0) for _ in range(dim)] for _ in range(60)]
+    batch = local_frame(
+        spark,
+        [(i, v) for i, v in enumerate(vecs)],
+        "vec_id long, embedding array<double>",
+    ).withColumn("embedding", F.col("embedding").cast(vec_type))
+    return batch, cents
+
+
+def _axis_batch(spark, vec_type):
+    """Axis-aligned centroids and vectors: most scores are exactly 0.0,
+    and the zeros tie across cells (a vector along axis 0 scores 0.0
+    against every other axis centroid)."""
+    dim = 4
+    axes = [[1.0 if j == i else 0.0 for j in range(dim)] for i in range(dim)]
+    cents = dict(enumerate(axes + [[0.0, 0.0, 1.0, 1.0]]))
+    vecs = axes + [[-v for v in a] for a in axes]
+    vecs += [[2.0, 0.0, 0.0, 0.0], [0.0, 3.0, 0.0, -3.0], [0.0, 0.0, 0.5, 0.5]]
     batch = local_frame(
         spark,
         [(i, v) for i, v in enumerate(vecs)],
@@ -99,6 +115,39 @@ def test_local_batch_sides_match_in_plan(spark):
         want_p = _rows(_in_plan_probes(batch, cents, 2))
         assert _rows(probes) == want_p, vec_type
         assert cells == sorted({r[2] for r in want_p})
+        # exact 0.0 scores and 0.0 ties keep the driver side, and rank
+        # like the in-plan sort
+        batch, cents = _axis_batch(spark, vec_type)
+        local = simsearch._local_batch_sides(
+            batch, cents, 2, "vec_id", "embedding"
+        )
+        assert local is not None, vec_type
+        assigned, probes, cells = local
+        want = _rows(annindex._postings_flat(batch, cents, "vec_id", "embedding"))
+        assert _rows(assigned) == want, vec_type
+        want_p = _rows(_in_plan_probes(batch, cents, 2))
+        assert _rows(probes) == want_p, vec_type
+        assert cells == sorted({r[2] for r in want_p})
+
+
+def test_local_query_sides_keep_exact_zero_scores(spark):
+    """The flat-probe and PQ query sides share the batch side's ranking:
+    on axis-aligned input (exact 0.0 scores that tie) they keep the
+    driver-side path and probe the in-plan cells."""
+    batch, cents = _axis_batch(spark, "array<double>")
+    want = _rows(_in_plan_probes(batch, cents, 3))
+    frame, cells = simsearch._local_probe_rows(
+        batch, cents, 3, "vec_id", "embedding"
+    )
+    assert _rows(frame) == want
+    books = [[[1.0, 0.0], [0.0, 1.0]], [[1.0, 1.0], [0.0, -1.0]]]
+    pq_frame, pq_cells = simsearch._local_pq_query_side(
+        batch, cents, books, 2, 3, "vec_id", "embedding"
+    )
+    assert pq_cells == cells == sorted({r[2] for r in want})
+    assert _rows(pq_frame.select("query_id", "cell")) == [
+        (r[0], r[2]) for r in want
+    ]
 
 
 def test_local_batch_sides_decline_zero_vector(spark):
