@@ -57,11 +57,12 @@ from magiceye_spark.fsops import fs_exists
 from magiceye_spark.llmops import store
 from magiceye_spark.llmops.simsearch import (
     _best_cells,
+    _cell_sides,
     _ivf_centroids,
     _ivf_probe,
-    _local_batch_sides,
     _pq_encode,
     _pq_fit,
+    _pq_query_side,
     _pq_search,
 )
 
@@ -97,28 +98,6 @@ def _postings_flat(
         F.col(vec_col).alias("embedding"),
         _best_cells(F.col(vec_col), cents, 1)[0]["cell"].alias("cell"),
     )
-
-
-def _local_assigned(
-    kv: DataFrame, cents: dict[int, list[float]], id_col: str, vec_col: str
-) -> DataFrame | None:
-    """Bounded batches: :func:`_postings_flat`'s (vec_id, embedding, cell)
-    rows computed driver-side (:func:`simsearch._local_batch_sides`, pinned
-    against the in-plan assignment in tests/test_annindex.py) and shipped
-    as a LocalRelation — the in-plan centroid-literal argmax costs ~0.5 s
-    of plan analysis per action at 32×64. The LocalRelation carries doubles;
-    the embedding is cast back to the source type, which is exact for
-    ``array<float>`` (float32 values widen to doubles losslessly), so an
-    append never changes a stored table's type. None for oversized
-    batches, degenerate scores, or other element types: callers keep the
-    in-plan path for those."""
-    src = kv.schema[vec_col].dataType
-    if src.simpleString() not in ("array<float>", "array<double>"):
-        return None
-    local = _local_batch_sides(kv, cents, 1, id_col, vec_col)
-    if local is None:
-        return None
-    return local[0].withColumn("embedding", F.col("embedding").cast(src))
 
 
 def _write_cells(df: DataFrame, path: str, mode: str, obs=None) -> None:
@@ -317,8 +296,9 @@ def write_ivf_index(
 
 def _read_model(spark: SparkSession, path: str) -> dict:
     """The frozen model tables (params, centroids, codebooks), collected
-    to the driver: the part of :func:`read_ivf_index` an ingest loop
-    collects once."""
+    to the driver, and whether the store has a PQ ``rerank`` table (pre-r11
+    PQ stores have none): the part of :func:`read_ivf_index` an ingest
+    loop reads once."""
     params = store.read_params(spark, path, _VERSION)
     cents = {
         int(r["cell"]): [float(v) for v in r["centroid"]]
@@ -332,7 +312,10 @@ def _read_model(spark: SparkSession, path: str) -> dict:
         books = [[None] * n_codes for _ in range(m)]
         for r in brows:
             books[int(r["m"])][int(r["code"])] = [float(v) for v in r["vec"]]
-    return {"params": params, "centroids": cents, "codebooks": books}
+    return {
+        "params": params, "centroids": cents, "codebooks": books,
+        "rerank": params["pq"] and fs_exists(spark, os.path.join(path, "rerank")),
+    }
 
 
 def _open_index(spark: SparkSession, path: str, model: dict) -> IvfIndex:
@@ -344,17 +327,17 @@ def _open_index(spark: SparkSession, path: str, model: dict) -> IvfIndex:
         "cell", F.col("cell").cast("int")
     )
     rerank = None
-    rr_dir = os.path.join(path, "rerank")
-    # pre-r11 PQ stores have no rerank table
-    if params["pq"] and fs_exists(spark, rr_dir):
+    if model["rerank"]:
         # presented under the caller's column names (id_col, vec_col)
         # + cell, so it plugs into every rerank= consumer unchanged
-        rerank = spark.read.parquet(rr_dir).select(
+        rerank = spark.read.parquet(os.path.join(path, "rerank")).select(
             F.col("vec_id").alias(params["id_col"]),
             F.col("embedding").alias(params["vec_col"]),
             F.col("cell").cast("int").alias("cell"),
         )
-    return IvfIndex(postings=postings, rerank=rerank, **model)
+    return IvfIndex(
+        params, model["centroids"], model["codebooks"], postings, rerank
+    )
 
 
 def read_ivf_index(spark: SparkSession, path: str) -> IvfIndex:
@@ -397,21 +380,16 @@ def _append_vectors(
     calls with the index it admitted against."""
     from pyspark.sql import Observation
 
-    spark = new_vectors.sparkSession
     if idx.pq and not dedupe_ids:
         raise ValueError(
             "dedupe_ids=False is not supported for PQ stores: the "
             "in-store rerank table is one-row-per-id and must stay "
             "row-for-row with the postings"
         )
-    id_col, vec_col = idx.params["id_col"], idx.params["vec_col"]
-    # bounded deltas (every ingest micro-batch) are assigned driver-side;
-    # oversized ones keep the in-plan expression behind a CPU spread
-    kv = new_vectors.select(id_col, vec_col)
-    flat = _local_assigned(kv, idx.centroids, id_col, vec_col)
-    if flat is None:
-        spread = kv.repartition(spark.sparkContext.defaultParallelism, id_col)
-        flat = _postings_flat(spread, idx.centroids, id_col, vec_col)
+    # bounded deltas (every ingest micro-batch) are assigned driver-side
+    flat = _cell_sides(
+        new_vectors, idx.centroids, 1, idx.params["id_col"], idx.params["vec_col"]
+    ).assigned
     # dedupe BEFORE encoding: rejected re-ingests shouldn't pay the PQ
     # argmin, and the same survivor frame feeds both PQ writes below
     if dedupe_ids:
@@ -499,29 +477,6 @@ def ivf_index_stats(index: IvfIndex) -> DataFrame:
     )
 
 
-def _probe_cells(queries: DataFrame, index: IvfIndex, n_probe: int) -> list[int]:
-    """The distinct cells this query batch will probe — at most
-    n_centroids ints, collected so the postings filter is a LITERAL
-    ``cell IN (...)`` predicate that prunes parquet partitions at planning
-    time (directory-level, before any file is opened). The collect is
-    bounded by the query batch — the deliberate, tiny driver step that
-    buys scan pruning a join-on-cell could never get."""
-    vec_col = index.params["vec_col"]
-    rows = (
-        queries.select(
-            F.explode(
-                F.transform(
-                    _best_cells(F.col(vec_col), index.centroids, n_probe),
-                    lambda s: s["cell"],
-                )
-            ).alias("cell")
-        )
-        .distinct()
-        .collect()
-    )
-    return sorted(int(r["cell"]) for r in rows)
-
-
 def ivf_index_topk(
     index: IvfIndex, queries: DataFrame, k: int = 10, n_probe: int = 8
 ) -> DataFrame:
@@ -531,31 +486,16 @@ def ivf_index_topk(
     code (`_ivf_probe`), so stored-vs-fit equivalence is structural."""
     if index.pq:
         raise ValueError("PQ index: use ivf_pq_index_topk (rerank needs vectors)")
-    id_col, vec_col = index.params["id_col"], index.params["vec_col"]
-    # ONE bounded driver pass yields both the probed-cells pruning literal
-    # and the probe frame as a LocalRelation (see _local_probe_rows);
-    # oversized batches fall back to the separate collect + in-plan probes
-    from magiceye_spark.llmops.simsearch import _local_probe_rows
-
-    q_local = _local_probe_rows(
-        queries, index.centroids, n_probe, id_col, vec_col
+    sides = _cell_sides(
+        queries, index.centroids, n_probe,
+        index.params["id_col"], index.params["vec_col"],
     )
-    q_frame, cells = q_local or (None, _probe_cells(queries, index, n_probe))
-    assigned = index.postings.where(F.col("cell").isin(cells)).select(
+    assigned = index.postings.where(F.col("cell").isin(sides.cells)).select(
         F.col("vec_id").alias("neighbor_id"),
         F.col("embedding").alias("c_vec"),
         "cell",
     )
-    return _ivf_probe(
-        assigned,
-        queries.select(F.col(id_col), F.col(vec_col)),
-        index.centroids,
-        k,
-        n_probe,
-        id_col,
-        vec_col,
-        _q_local=q_frame,
-    )
+    return _ivf_probe(assigned, sides.probes, k)
 
 
 def ivf_pq_index_topk(
@@ -578,18 +518,11 @@ def ivf_pq_index_topk(
         raise ValueError("flat index: use ivf_index_topk")
     rerank = rerank if rerank is not None else 10 * k
     id_col, vec_col = index.params["id_col"], index.params["vec_col"]
-    # ONE bounded driver pass over the query batch yields BOTH the
-    # probed-cells literal (postings/rerank partition pruning) and the
-    # ADC query side as a LocalRelation (see _local_pq_query_side);
-    # oversized batches fall back to the separate cells collect + the
-    # in-plan query-side construction.
-    from magiceye_spark.llmops.simsearch import _local_pq_query_side
-
-    q_local = _local_pq_query_side(
-        queries, index.centroids, index.codebooks,
-        int(index.params["m_subvectors"]), n_probe, id_col, vec_col,
+    m = int(index.params["m_subvectors"])
+    q = _pq_query_side(
+        queries, index.centroids, index.codebooks, m, n_probe, id_col, vec_col
     )
-    q_frame, cells = q_local or (None, _probe_cells(queries, index, n_probe))
+    cells = q.cells
     if corpus is None:
         if index.rerank is None:
             raise ValueError(
@@ -603,9 +536,7 @@ def ivf_pq_index_topk(
         F.col("vec_id").alias("neighbor_id"), "cell", "codes"
     )
     return _pq_search(
-        enc, corpus, queries, index.centroids, index.codebooks,
-        int(index.params["m_subvectors"]), k, n_probe, rerank, id_col, vec_col,
-        _q_local=q_frame,
+        enc, corpus, queries, q.probes, m, k, rerank, id_col, vec_col
     )
 
 
@@ -683,44 +614,10 @@ def delta_ann_pairs_from_index(
             "flat index for the admission store"
         )
     id_col, vec_col = index.params["id_col"], index.params["vec_col"]
-    spark = new_vectors.sparkSession
-    par = spark.sparkContext.defaultParallelism
-    # Bounded ingest batches: ONE driver pass yields the assigned side,
-    # the probe side, and the probed-cells literal as LocalRelations
-    # (simsearch._local_batch_sides — exact-IEEE replica of the in-plan
-    # expressions), replacing two centroid-literal embeddings (~0.5 s of
-    # driver plan-analysis each at 32×64), the repartition barrier, and
-    # the probe-cells distinct-collect job per micro-batch. Oversized
-    # batches keep the in-plan construction below.
-    local = _local_batch_sides(
-        new_vectors.select(id_col, vec_col), index.centroids, n_probe,
-        id_col, vec_col,
-    )
-    if local is not None:
-        batch_assigned, probes_nosalt, cells = local
-    else:
-        # barrier the batch before fanning it into the union side + probe
-        # side (the sibling stores' delta-barrier discipline)
-        batch = new_vectors.select(id_col, vec_col).repartition(par, id_col)
-        batch_assigned = _postings_flat(batch, index.centroids, id_col, vec_col)
-        # ONE probe-side frame serves both the cells literal (distinct-
-        # collect below — the same bounded driver step _probe_cells ran
-        # over its own copy of the assignment expression) and the
-        # candidate join's probe rows.
-        probes_nosalt = batch.select(
-            F.col(id_col).alias("q_id"),
-            F.col(vec_col).alias("q_vec"),
-            F.explode(
-                F.transform(
-                    _best_cells(F.col(vec_col), index.centroids, n_probe),
-                    lambda s: s["cell"],
-                )
-            ).alias("cell"),
-        )
-        cells = sorted(
-            int(r["cell"])
-            for r in probes_nosalt.select("cell").distinct().collect()
-        )
+    # the batch's assigned (union) side, probe side and probed-cells
+    # literal, driver-side when the batch is bounded
+    sides = _cell_sides(new_vectors, index.centroids, n_probe, id_col, vec_col)
+    cells = sides.cells
     if index.pq:
         # cell scoping from the compact PQ postings; vectors from rerank.
         # The when/otherwise keeps the raise_error expression REFERENCED
@@ -761,7 +658,7 @@ def delta_ann_pairs_from_index(
         stored = index.postings.where(F.col("cell").isin(cells)).select(
             "vec_id", "embedding", "cell"
         )
-    probes = probes_nosalt.withColumn(
+    probes = sides.probes.withColumn(
         "salt", F.explode(F.sequence(F.lit(0), F.lit(salts - 1)))
     )
 
@@ -799,7 +696,7 @@ def delta_ann_pairs_from_index(
 
     return (
         edges(side(stored))
-        .unionByName(edges(side(batch_assigned)))
+        .unionByName(edges(side(sides.assigned)))
         .dropDuplicates(["doc_a", "doc_b"])
     )
 
@@ -888,10 +785,12 @@ def streaming_ann_ingest(
     ``rerank_path`` ∪ the admitted sink ∪ the batch.
 
     The model tables (params, centroids, codebooks) are the frozen
-    model; the postings and rerank scans are re-opened per batch.
-    Replay safety, ``compact_every`` (:func:`ivf_index_compact`) and
-    ``trigger`` follow :mod:`.store`. Returns the started
-    StreamingQuery."""
+    model, read with the presence of the rerank table once per query;
+    the postings and rerank scans are re-opened per batch. The store is
+    looked for only until the model is read, so a store removed under a
+    running query fails the next batch. Replay safety, ``compact_every``
+    (:func:`ivf_index_compact`) and ``trigger`` follow :mod:`.store`.
+    Returns the started StreamingQuery."""
 
     def _batch_kv(idx_params: dict, batch_df: DataFrame) -> DataFrame:
         return batch_df.select(idx_params["id_col"], idx_params["vec_col"])
@@ -906,11 +805,9 @@ def streaming_ann_ingest(
         if idx.rerank is not None:
             # the batch is unioned in (see the docstring); duplicate
             # (id, vec) rows collapse in the edge-level dropDuplicates
-            kv = _batch_kv(idx.params, batch_df)
-            batch_part = _local_assigned(kv, idx.centroids, id_col, vec_col)
-            if batch_part is None:
-                batch_part = _postings_flat(kv, idx.centroids, id_col, vec_col)
-            batch_part = batch_part.select(
+            batch_part = _cell_sides(
+                batch_df, idx.centroids, 1, id_col, vec_col
+            ).assigned.select(
                 F.col("vec_id").alias(id_col),
                 F.col("embedding").alias(vec_col),
                 "cell",

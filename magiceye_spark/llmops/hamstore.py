@@ -196,20 +196,31 @@ def streaming_hamming_ingest(
     and a text-loop-over-image-store mixup is shape-silent; it is checked
     once, when the params are read.
 
-    The sink receives the batch's own rows for the admitted ids.
+    The sink receives the batch's own rows for the admitted ids. Each
+    batch is admitted by :func:`delta_hamming_admit_indexed`'s rule over
+    the persisted signatures, without its repartition barrier.
     Replay safety, ``compact_every`` (:func:`hamming_index_compact`) and
     ``trigger`` follow :mod:`.store`. Returns the started
     StreamingQuery."""
     from magiceye_spark.llmops.dedup import simhash_signatures
 
     sign = sign_fn if sign_fn is not None else simhash_signatures
+
+    def read_model() -> dict:
+        params = read_hamming_index(spark, path, kind=kind).params
+        _KIND.bound(params, max_hamming)  # range-check once per query
+        return params
+
     return store.ingest_loop(
         stream, checkpoint,
-        read_model=lambda: read_hamming_index(spark, path, kind=kind).params,
+        read_model=read_model,
         open_index=lambda params: store.open_signatures(spark, path, params),
         sign=lambda _, batch: sign(batch),
-        admit_batch=lambda idx, _, sigs, __: delta_hamming_admit_indexed(
-            idx, sigs, max_hamming
+        # the loop persists the signed batch, so no delta_barrier here
+        admit_batch=lambda idx, _, sigs, __: store.admit(
+            sigs,
+            store.delta_pairs(idx, sigs, _KIND, max_hamming),
+            idx.signatures.select("doc_id"),
         ),
         append=lambda idx, _, admitted: store.append_signatures(
             idx, path, admitted, _KIND

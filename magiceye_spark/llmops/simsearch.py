@@ -20,9 +20,13 @@ signatures at scale.
 
 from __future__ import annotations
 
+from dataclasses import dataclass
+
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
+
+from magiceye_spark.io import local_frame
 
 
 def _emb(
@@ -371,79 +375,15 @@ def _best_cells(vec: Column, cents: dict[int, list[float]], n: int) -> Column:
     return F.slice(F.reverse(F.array_sort(pairs)), 1, n)
 
 
-#: sentinel distinguishing "caller never attempted the local query side"
-#: (probe helpers should try it themselves) from "caller attempted and it
-#: returned None" (over cap / degenerate scores — retrying would run a
-#: SECOND bounded collect job per call, and on a non-deterministic query
-#: frame could succeed with probe cells not covered by the caller's
-#: already-collected pruning literal, silently dropping candidates).
-_LOCAL_UNATTEMPTED = object()
-
-
-def _local_probe_rows(
-    queries: DataFrame,
-    cents: dict[int, list[float]],
-    n_probe: int,
-    id_col: str,
-    vec_col: str,
-):
-    """Flat-probe sibling of :func:`_local_pq_query_side`: for BOUNDED
-    query batches, the exploded (query_id, q_vec, cell) probe frame as an
-    Arrow LocalRelation plus the distinct probed-cell list, ranked by
-    :func:`_local_ranked_cells` (None when it declines)."""
-    ranked = _local_ranked_cells(queries, cents, id_col, vec_col)
-    if ranked is None:
-        return None
-    out = [
-        (qid, vec, cell)
-        for qid, vec, _, pairs in ranked
-        for _, cell in pairs[:n_probe]
-    ]
-    from magiceye_spark.io import local_frame
-
-    id_type = queries.schema[id_col].dataType.simpleString()
-    frame = local_frame(
-        queries.sparkSession,
-        out,
-        f"query_id {id_type}, q_vec array<double>, cell int",
-    )
-    return frame, sorted({c for _, _, c in out})
-
-
-def _ivf_probe(
-    assigned: DataFrame,
-    queries: DataFrame,
-    cents: dict[int, list[float]],
-    k: int,
-    n_probe: int,
-    id_col: str,
-    vec_col: str,
-    _q_local=_LOCAL_UNATTEMPTED,
-) -> DataFrame:
+def _ivf_probe(assigned: DataFrame, probes: DataFrame, k: int) -> DataFrame:
     """Probe phase shared by the fit-per-call path (:func:`ivf_topk`) and
     the stored-index path (:func:`magiceye_spark.llmops.annindex.ivf_index_topk`):
     ``assigned`` is the cell-assigned corpus (neighbor_id, c_vec, cell),
-    whether just computed or read back from parquet. One code path means
+    whether just computed or read back from parquet, and ``probes`` the
+    query batch's probe side from :func:`_cell_sides`. One code path means
     probe-from-stored is structurally identical to probe-from-fit — the
-    equivalence the index tests pin. ``_q_local``: a probe frame already
-    built by :func:`_local_probe_rows` (bounded query batches); ``None``
-    means the caller ATTEMPTED the local side and it declined — keep the
-    in-plan path, do not retry (see ``_LOCAL_UNATTEMPTED``)."""
-    q = None if _q_local is _LOCAL_UNATTEMPTED else _q_local
-    if _q_local is _LOCAL_UNATTEMPTED:
-        local = _local_probe_rows(queries, cents, n_probe, id_col, vec_col)
-        q = local[0] if local is not None else None
-    if q is None:
-        q = queries.select(
-            F.col(id_col).alias("query_id"),
-            F.col(vec_col).alias("q_vec"),
-            F.explode(
-                F.transform(
-                    _best_cells(F.col(vec_col), cents, n_probe),
-                    lambda s: s["cell"],
-                )
-            ).alias("cell"),
-        )
+    equivalence the index tests pin."""
+    q = probes.withColumnRenamed("q_id", "query_id")
     scored = (
         assigned.join(F.broadcast(q), "cell")
         .where(F.col("query_id") != F.col("neighbor_id"))
@@ -514,7 +454,9 @@ def ivf_topk(
         F.col(vec_col).alias("c_vec"),
         _best_cells(F.col(vec_col), cents, 1)[0]["cell"].alias("cell"),
     )
-    return _ivf_probe(c, queries, cents, k, n_probe, id_col, vec_col)
+    return _ivf_probe(
+        c, _cell_sides(queries, cents, n_probe, id_col, vec_col).probes, k
+    )
 
 
 def _train_pq_codebooks(
@@ -687,36 +629,42 @@ def _pq_encode(
     return enc.select(id_alias, "cell", codes.alias("codes"))
 
 
-#: query batches at or below this size get their probe cells and ADC
-#: lookup tables computed DRIVER-side (the FAISS shape: LUTs are per-query
-#: model math, not data-parallel work) and shipped as a LocalRelation —
-#: removing the centroid/codebook literal trees, their per-plan analysis
-#: and codegen, and the interpreted per-row LUT folds from the query side
-#: entirely. Strictly bounded: bigger batches keep the in-plan path.
+#: query and batch frames at or below this size are ranked against the
+#: centroids DRIVER-side (the FAISS shape: probe cells and ADC lookup
+#: tables are per-query model math, not data-parallel work) and shipped as
+#: a LocalRelation — removing the centroid/codebook literal trees, their
+#: per-plan analysis and codegen, and the interpreted per-row LUT folds
+#: entirely. Strictly bounded: bigger frames keep the in-plan path.
 _LOCAL_QUERY_CAP = 1024
 
 
 def _local_ranked_cells(
     frame: DataFrame, cents: dict[int, list[float]], id_col: str, vec_col: str
 ):
-    """Driver-side replica of :func:`_best_cells`' ranking, shared by the
-    bounded local query and batch sides: per row of ``frame``,
-    (id, vec, norm, [(score, cell), ...]) with every centroid ranked by
-    descending (score, cell). Plain Python floats in EXACTLY the fold
-    order of the in-plan expressions (0.0-seeded left-to-right sums,
-    dot/(norm·norm) cosine) — Python floats ARE IEEE doubles, so scores
-    are bit-identical (pinned in tests/test_annindex.py). Exact 0.0
-    scores rank the same on both sides: a 0.0-seeded fold never yields
-    -0.0 (+0.0 + -0.0 = +0.0), and equal scores tie-break on ``cell`` in
-    both Spark's struct ordering and Python's tuple sort.
+    """Driver-side replica of :func:`_best_cells`' ranking, the one kernel
+    behind the two side builders, :func:`_cell_sides` and
+    :func:`_pq_query_side`: per row of ``frame``, (id, vec, norm,
+    [(score, cell), ...]) with every centroid ranked by descending
+    (score, cell). Plain Python floats in EXACTLY the fold order of the
+    in-plan expressions (0.0-seeded left-to-right sums, dot/(norm·norm)
+    cosine) — Python floats ARE IEEE doubles, so scores are bit-identical
+    (pinned in tests/test_annindex.py). Exact 0.0 scores rank the same on
+    both sides: a 0.0-seeded fold never yields -0.0 (+0.0 + -0.0 = +0.0),
+    and equal scores tie-break on ``cell`` in both Spark's struct
+    ordering and Python's tuple sort.
 
-    None — callers keep the in-plan path — when the frame exceeds
-    :data:`_LOCAL_QUERY_CAP` rows, a vector's dimension differs from the
-    centroids', a norm is zero (Python float division raises where
-    Spark's yields NaN/Inf) or a score is non-finite (NaN ordering
-    differs between the engines)."""
+    None — the builders take the in-plan path — when the vectors are not
+    ``array<float>`` or ``array<double>`` (checked before any job), the
+    frame exceeds :data:`_LOCAL_QUERY_CAP` rows, a vector's dimension
+    differs from the centroids', a norm is zero (Python float division
+    raises where Spark's yields NaN/Inf) or a score is non-finite (NaN
+    ordering differs between the engines)."""
     import math
 
+    if frame.schema[vec_col].dataType.simpleString() not in (
+        "array<float>", "array<double>"
+    ):
+        return None
     rows = frame.select(id_col, vec_col).limit(_LOCAL_QUERY_CAP + 1).collect()
     if len(rows) > _LOCAL_QUERY_CAP:
         return None
@@ -754,7 +702,102 @@ def _local_ranked_cells(
     return out
 
 
-def _local_pq_query_side(
+@dataclass
+class _Sides:
+    """A side builder's output: ``probes``, one row per (row, probed
+    cell); ``assigned``, each row in its nearest cell (:func:`_cell_sides`
+    only); and :attr:`cells`."""
+
+    probes: DataFrame
+    assigned: DataFrame | None = None
+    _cells: list[int] | None = None
+
+    @property
+    def cells(self) -> list[int]:
+        """The distinct probed cells, sorted: a literal list, so a stored
+        index's ``cell IN (...)`` filter prunes partitions at planning
+        time. The driver-side path has it already; the in-plan path
+        collects it on first read (one bounded job), so a caller that
+        never reads it pays no job."""
+        if self._cells is None:
+            self._cells = sorted(
+                int(r["cell"])
+                for r in self.probes.select("cell").distinct().collect()
+            )
+        return self._cells
+
+
+def _barrier(frame: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+    """The in-plan sides' input, repartitioned once on id: the sides and
+    the probed-cells collect all read it, and behind the exchange the
+    source is scanned once and the work spreads over every core."""
+    return frame.select(id_col, vec_col).repartition(
+        frame.sparkSession.sparkContext.defaultParallelism, id_col
+    )
+
+
+def _cell_sides(
+    frame: DataFrame,
+    cents: dict[int, list[float]],
+    n_probe: int,
+    id_col: str,
+    vec_col: str,
+) -> _Sides:
+    """The IVF sides of a batch or query frame: ``assigned`` (vec_id,
+    embedding, cell) — the :func:`annindex._postings_flat` rows — and
+    ``probes`` (q_id, q_vec, cell) — one row per each of a row's
+    ``n_probe`` nearest cells. The ONE place the index probe, the delta
+    admission, the append and the ingest loop's rerank source choose
+    between the two paths:
+
+    - bounded frames are ranked by :func:`_local_ranked_cells` and both
+      sides ship as Arrow LocalRelations (no centroid-literal argmax,
+      ~0.5 s of plan analysis per action at 32×64, and no probed-cells
+      job). ``q_vec`` is double; the assigned embedding is cast back to
+      the source type, which is exact (float32 widens to double
+      losslessly), so an append never changes a stored table's type;
+    - otherwise both sides are the in-plan expressions over
+      :func:`_barrier`."""
+    ranked = _local_ranked_cells(frame, cents, id_col, vec_col)
+    if ranked is None:
+        kv = _barrier(frame, id_col, vec_col)
+        vec = F.col(vec_col)
+        return _Sides(
+            assigned=kv.select(
+                F.col(id_col).alias("vec_id"),
+                vec.alias("embedding"),
+                _best_cells(vec, cents, 1)[0]["cell"].alias("cell"),
+            ),
+            probes=kv.select(
+                F.col(id_col).alias("q_id"),
+                vec.alias("q_vec"),
+                F.explode(
+                    F.transform(_best_cells(vec, cents, n_probe), lambda s: s["cell"])
+                ).alias("cell"),
+            ),
+        )
+    spark = frame.sparkSession
+    id_type = frame.schema[id_col].dataType.simpleString()
+    probes = [
+        (rid, vec, cell) for rid, vec, _, pairs in ranked for _, cell in pairs[:n_probe]
+    ]
+    assigned = local_frame(
+        spark,
+        [(rid, vec, pairs[0][1]) for rid, vec, _, pairs in ranked],
+        f"vec_id {id_type}, embedding array<double>, cell int",
+    )
+    return _Sides(
+        probes=local_frame(
+            spark, probes, f"q_id {id_type}, q_vec array<double>, cell int"
+        ),
+        assigned=assigned.withColumn(
+            "embedding", F.col("embedding").cast(frame.schema[vec_col].dataType)
+        ),
+        _cells=sorted({c for _, _, c in probes}),
+    )
+
+
+def _pq_query_side(
     queries: DataFrame,
     cents: dict[int, list[float]],
     books: list[list[list[float]]],
@@ -762,19 +805,45 @@ def _local_pq_query_side(
     n_probe: int,
     id_col: str,
     vec_col: str,
-):
-    """Driver-side replica of the _pq_search query side for BOUNDED query
-    batches: per query, the probe-cell top-n and the m×n_codes ADC LUT,
-    computed with plain Python floats in EXACTLY the fold order of the
-    in-plan expressions (probe cells from :func:`_local_ranked_cells`; the
-    LUT 0.0-seeded left-to-right sums) — Python floats ARE IEEE doubles,
-    so the values are bit-identical (pinned in tests). Returns the
-    exploded (query_id, _lut, cell, _cell_dot) frame as an Arrow
-    LocalRelation, or None when the ranking declines."""
+) -> _Sides:
+    """The ADC query side of a PQ search as ``probes`` (query_id, _lut,
+    cell, _cell_dot): per query and each of its ``n_probe`` nearest cells,
+    the m×n_codes lookup table of the normalized query's subvector dot
+    products with the codebooks, and its cosine to the cell. Bounded
+    batches are computed driver-side from :func:`_local_ranked_cells`,
+    the LUT in the in-plan fold order (0.0-seeded left-to-right sums, so
+    bit-identical — pinned in tests), and ship as a LocalRelation;
+    otherwise the in-plan expressions over :func:`_barrier`."""
+    sub_d = len(cents[min(cents)]) // m_subvectors
     ranked = _local_ranked_cells(queries, cents, id_col, vec_col)
     if ranked is None:
-        return None
-    sub_d = len(cents[min(cents)]) // m_subvectors
+        _, books_lit = _pq_model_literals(cents, books)
+        nq = _pq_normalized(F.col(vec_col))
+        lut = F.transform(
+            F.sequence(F.lit(0), F.lit(m_subvectors - 1)),
+            lambda mi: F.transform(
+                F.get(books_lit, mi),
+                lambda row: F.aggregate(
+                    F.zip_with(
+                        F.slice(nq, mi * sub_d + 1, sub_d), row, lambda a, b: a * b
+                    ),
+                    F.lit(0.0),
+                    lambda acc, x: acc + x,
+                ),
+            ),
+        )
+        return _Sides(
+            probes=_barrier(queries, id_col, vec_col).select(
+                F.col(id_col).alias("query_id"),
+                lut.alias("_lut"),
+                F.explode(_best_cells(F.col(vec_col), cents, n_probe)).alias("_p"),
+            ).select(
+                "query_id",
+                "_lut",
+                F.col("_p")["cell"].alias("cell"),
+                F.col("_p")["score"].alias("_cell_dot"),
+            )
+        )
     out = []
     for qid, vec, nrm, pairs in ranked:
         nq = [v / nrm for v in vec]
@@ -789,119 +858,34 @@ def _local_pq_query_side(
             lut.append(row_l)
         for score, cell in pairs[:n_probe]:
             out.append((qid, lut, int(cell), float(score)))
-    from magiceye_spark.io import local_frame
-
     id_type = queries.schema[id_col].dataType.simpleString()
-    frame = local_frame(
-        queries.sparkSession,
-        out,
-        f"query_id {id_type}, _lut array<array<double>>, "
-        "cell int, _cell_dot double",
+    return _Sides(
+        probes=local_frame(
+            queries.sparkSession,
+            out,
+            f"query_id {id_type}, _lut array<array<double>>, "
+            "cell int, _cell_dot double",
+        ),
+        _cells=sorted({c for _, _, c, _ in out}),
     )
-    return frame, sorted({int(c) for _, _, c, _ in out})
-
-
-def _local_batch_sides(
-    batch: DataFrame,
-    cents: dict[int, list[float]],
-    n_probe: int,
-    id_col: str,
-    vec_col: str,
-):
-    """Delta-admission sibling of :func:`_local_probe_rows`: for a BOUNDED
-    ingest batch, ONE driver pass yields the cell-ASSIGNED side
-    (vec_id, embedding, cell — the union/edge side), the exploded probe
-    side (q_id, q_vec, cell), and the distinct probed-cell list, all as
-    Arrow LocalRelations — replacing two centroid-literal embeddings, the
-    repartition barrier, and the probe-cells distinct-collect job per
-    micro-batch. Ranked by :func:`_local_ranked_cells` (None when it
-    declines)."""
-    ranked = _local_ranked_cells(batch, cents, id_col, vec_col)
-    if ranked is None:
-        return None
-    assigned = [(rid, vec, pairs[0][1]) for rid, vec, _, pairs in ranked]
-    probes = [
-        (rid, vec, cell)
-        for rid, vec, _, pairs in ranked
-        for _, cell in pairs[:n_probe]
-    ]
-    from magiceye_spark.io import local_frame
-
-    spark = batch.sparkSession
-    id_type = batch.schema[id_col].dataType.simpleString()
-    a_frame = local_frame(
-        spark, assigned,
-        f"vec_id {id_type}, embedding array<double>, cell int",
-    )
-    p_frame = local_frame(
-        spark, probes,
-        f"q_id {id_type}, q_vec array<double>, cell int",
-    )
-    return a_frame, p_frame, sorted({c for _, _, c in probes})
 
 
 def _pq_search(
     enc: DataFrame,
     corpus: DataFrame,
     queries: DataFrame,
-    cents: dict[int, list[float]],
-    books: list[list[list[float]]],
+    q: DataFrame,
     m_subvectors: int,
     k: int,
-    n_probe: int,
     rerank: int,
     id_col: str,
     vec_col: str,
-    _q_local=_LOCAL_UNATTEMPTED,
 ) -> DataFrame:
     """ADC candidate scan over a code table + exact rerank — shared by
     :func:`ivf_pq_topk` (codes just encoded) and the stored-index path
-    (codes read back from parquet). ``corpus`` supplies full vectors for
-    the rerank join only; the candidate scan touches codes alone.
-    ``_q_local``: a query-side frame already built by
-    :func:`_local_pq_query_side` (the stored-index path computes it first
-    to prune the postings scan by the same cells)."""
-    dim = len(next(iter(cents.values())))
-    sub_d = dim // m_subvectors
-
-    # ---- query side: probe cells + per-subspace LUTs (broadcast-sized).
-    # Bounded batches ship as a driver-computed LocalRelation (bit-exact
-    # replica — see _local_pq_query_side); larger ones keep the in-plan
-    # literal/HOF construction below.
-    q = None if _q_local is _LOCAL_UNATTEMPTED else _q_local
-    if _q_local is _LOCAL_UNATTEMPTED:
-        local = _local_pq_query_side(
-            queries, cents, books, m_subvectors, n_probe, id_col, vec_col
-        )
-        q = local[0] if local is not None else None
-    if q is None:
-        _, books_lit = _pq_model_literals(cents, books)
-        nq = _pq_normalized(F.col(vec_col))
-        probes = _best_cells(F.col(vec_col), cents, n_probe)
-        lut = F.transform(
-            F.sequence(F.lit(0), F.lit(m_subvectors - 1)),
-            lambda mi: F.transform(
-                F.get(books_lit, mi),
-                lambda row: F.aggregate(
-                    F.zip_with(
-                        F.slice(nq, mi * sub_d + 1, sub_d), row, lambda a, b: a * b
-                    ),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x,
-                ),
-            ),
-        )
-        q = queries.select(
-            F.col(id_col).alias("query_id"),
-            lut.alias("_lut"),
-            F.explode(probes).alias("_p"),
-        ).select(
-            "query_id",
-            "_lut",
-            F.col("_p")["cell"].alias("cell"),
-            F.col("_p")["score"].alias("_cell_dot"),
-        )
-
+    (codes read back from parquet). ``q`` is the ADC query side built by
+    :func:`_pq_query_side`; ``corpus`` supplies full vectors for the
+    rerank join only; the candidate scan touches codes alone."""
     # ---- ADC scan over codes only; keep `rerank` finalists per query
     adc = F.col("_cell_dot") + sum(
         F.get(F.get("_lut", mi), F.get("codes", mi)) for mi in range(m_subvectors)
@@ -999,9 +983,11 @@ def ivf_pq_topk(
         corpus.sparkSession.sparkContext.defaultParallelism, id_col
     )
     enc = _pq_encode(corpus, cents, books, m_subvectors, id_col, vec_col)
+    q = _pq_query_side(
+        queries, cents, books, m_subvectors, n_probe, id_col, vec_col
+    ).probes
     return _pq_search(
-        enc, corpus, queries, cents, books, m_subvectors, k, n_probe, rerank,
-        id_col, vec_col,
+        enc, corpus, queries, q, m_subvectors, k, rerank, id_col, vec_col
     )
 
 

@@ -158,15 +158,17 @@ def ingest_loop(
       to ``append(index, signed, admitted)``.
     - ``compact()`` runs after every ``compact_every``-th batch.
 
-    ``bootstrap(batch, batch_id)``, tried first on every batch, returns
-    True when it consumed the batch (the store did not exist yet).
+    ``bootstrap(batch, batch_id)``, tried first on each batch until the
+    model is read, returns True when it consumed the batch (the store did
+    not exist yet). After that no batch checks for the store again: a
+    store removed under a running query fails the next batch.
     Returns the started StreamingQuery."""
     model: dict = {}
 
     def _ingest(batch_df: DataFrame, batch_id: int) -> None:
-        if bootstrap is not None and bootstrap(batch_df, batch_id):
-            return
         if not model:
+            if bootstrap is not None and bootstrap(batch_df, batch_id):
+                return
             model.update(read_model())
         idx = open_index(model)
         signed = sign(model, batch_df).persist() if sign is not None else None

@@ -1,6 +1,8 @@
-"""IVF(-PQ) store writes: the driver-side cell assignment of bounded
-batches against its in-plan twin, and the one-file-per-touched-cell
-layout of every write of the growing tables."""
+"""IVF(-PQ) sides and store writes: the driver-side sides of bounded
+batches and queries (simsearch._cell_sides, simsearch._pq_query_side)
+against their in-plan twins, the in-plan side forced at every caller,
+and the one-file-per-touched-cell layout of every write of the growing
+tables."""
 
 import os
 import random
@@ -97,37 +99,36 @@ def _in_plan_probes(batch, cents, n_probe):
     )
 
 
-def test_local_batch_sides_match_in_plan(spark):
-    """simsearch._local_batch_sides is an exact replica of the in-plan
-    assignment (annindex._postings_flat) and probe expressions: same
-    ids, vectors and cells, for float and double batches."""
+def _driver_sides(batch, cents, n_probe):
+    """simsearch._cell_sides on its driver-side path (asserted taken)."""
+    assert simsearch._local_ranked_cells(batch, cents, "vec_id", "embedding")
+    return simsearch._cell_sides(batch, cents, n_probe, "vec_id", "embedding")
+
+
+def test_cell_sides_match_in_plan(spark):
+    """The driver-side batch sides of simsearch._cell_sides are an exact
+    replica of the in-plan assignment (annindex._postings_flat) and probe
+    expressions: same ids, vectors and cells, for float and double
+    batches."""
     for vec_type in ("array<float>", "array<double>"):
         batch, cents = _parity_batch(spark, vec_type)
-        local = simsearch._local_batch_sides(
-            batch, cents, 2, "vec_id", "embedding"
-        )
-        assert local is not None, vec_type
-        assigned, probes, cells = local
+        sides = _driver_sides(batch, cents, 2)
         want = _rows(annindex._postings_flat(batch, cents, "vec_id", "embedding"))
-        assert _rows(assigned) == want, vec_type
+        assert _rows(sides.assigned) == want, vec_type
         # the tie resolves to the highest tied cell on both sides
         assert [r[2] for r in want if r[0] < 4] == [1, 1, 1, 1]
         want_p = _rows(_in_plan_probes(batch, cents, 2))
-        assert _rows(probes) == want_p, vec_type
-        assert cells == sorted({r[2] for r in want_p})
+        assert _rows(sides.probes) == want_p, vec_type
+        assert sides.cells == sorted({r[2] for r in want_p})
         # exact 0.0 scores and 0.0 ties keep the driver side, and rank
         # like the in-plan sort
         batch, cents = _axis_batch(spark, vec_type)
-        local = simsearch._local_batch_sides(
-            batch, cents, 2, "vec_id", "embedding"
-        )
-        assert local is not None, vec_type
-        assigned, probes, cells = local
+        sides = _driver_sides(batch, cents, 2)
         want = _rows(annindex._postings_flat(batch, cents, "vec_id", "embedding"))
-        assert _rows(assigned) == want, vec_type
+        assert _rows(sides.assigned) == want, vec_type
         want_p = _rows(_in_plan_probes(batch, cents, 2))
-        assert _rows(probes) == want_p, vec_type
-        assert cells == sorted({r[2] for r in want_p})
+        assert _rows(sides.probes) == want_p, vec_type
+        assert sides.cells == sorted({r[2] for r in want_p})
 
 
 def test_local_query_sides_keep_exact_zero_scores(spark):
@@ -136,33 +137,102 @@ def test_local_query_sides_keep_exact_zero_scores(spark):
     driver-side path and probe the in-plan cells."""
     batch, cents = _axis_batch(spark, "array<double>")
     want = _rows(_in_plan_probes(batch, cents, 3))
-    frame, cells = simsearch._local_probe_rows(
-        batch, cents, 3, "vec_id", "embedding"
-    )
-    assert _rows(frame) == want
+    sides = _driver_sides(batch, cents, 3)
+    assert _rows(sides.probes) == want
     books = [[[1.0, 0.0], [0.0, 1.0]], [[1.0, 1.0], [0.0, -1.0]]]
-    pq_frame, pq_cells = simsearch._local_pq_query_side(
+    pq = simsearch._pq_query_side(
         batch, cents, books, 2, 3, "vec_id", "embedding"
     )
-    assert pq_cells == cells == sorted({r[2] for r in want})
-    assert _rows(pq_frame.select("query_id", "cell")) == [
+    assert pq.cells == sides.cells == sorted({r[2] for r in want})
+    assert _rows(pq.probes.select("query_id", "cell")) == [
         (r[0], r[2]) for r in want
     ]
 
 
-def test_local_batch_sides_decline_zero_vector(spark):
-    """A zero vector has no cosine: the driver side declines (None) and
-    callers keep the in-plan path."""
+def test_cell_sides_decline_zero_vector(spark):
+    """A zero vector has no cosine: the driver-side ranking declines
+    (None) and the builder's in-plan sides equal the in-plan reference.
+    Its cosine divides by zero, which raises under ANSI mode on both
+    sides alike, so the sides are built and compared with ANSI off."""
     batch, cents = _parity_batch(spark, "array<double>")
     zero = local_frame(
         spark, [(999, [0.0] * 8)], "vec_id long, embedding array<double>"
     )
+    batch = batch.unionByName(zero)
     assert (
-        simsearch._local_batch_sides(
-            batch.unionByName(zero), cents, 2, "vec_id", "embedding"
-        )
+        simsearch._local_ranked_cells(batch, cents, "vec_id", "embedding")
         is None
     )
+    ansi = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "false")
+    try:
+        sides = simsearch._cell_sides(batch, cents, 2, "vec_id", "embedding")
+        assert _rows(sides.assigned) == _rows(
+            annindex._postings_flat(batch, cents, "vec_id", "embedding")
+        )
+        want_p = _rows(_in_plan_probes(batch, cents, 2))
+        assert _rows(sides.probes) == want_p
+        assert sides.cells == sorted({r[2] for r in want_p})
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", ansi)
+
+
+def test_pq_local_query_side_matches_in_plan(spark, tmp_path):
+    """r13 optimization: bounded query batches get their probe cells and
+    ADC LUTs computed driver-side (LocalRelation) instead of via the
+    in-plan centroid/codebook literal expressions. The two paths must be
+    BIT-identical — the driver replica runs the same IEEE fold orders —
+    including the probed-cell set that prunes the postings scan."""
+    from magiceye_spark.llmops import annindex, simsearch
+
+    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet").select(
+        "vec_id", "embedding"
+    )
+    idx = annindex.write_ivf_index(
+        emb, str(tmp_path / "pqidx"), pq=True, n_centroids=8
+    )
+    q = emb.where(F.col("vec_id") < 6)
+    fast = sorted(
+        tuple(r)
+        for r in annindex.ivf_pq_index_topk(idx, q, None, k=5, n_probe=3).collect()
+    )
+    cap = simsearch._LOCAL_QUERY_CAP
+    simsearch._LOCAL_QUERY_CAP = 0  # force the in-plan query side
+    try:
+        slow = sorted(
+            tuple(r)
+            for r in annindex.ivf_pq_index_topk(
+                idx, q, None, k=5, n_probe=3
+            ).collect()
+        )
+    finally:
+        simsearch._LOCAL_QUERY_CAP = cap
+    assert fast == slow and len(fast) > 0
+
+
+def test_flat_index_probe_matches_in_plan(spark, tmp_path):
+    """Flat-probe sibling of the PQ local-query-side parity pin."""
+    from magiceye_spark.llmops import annindex, simsearch
+
+    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet").select(
+        "vec_id", "embedding"
+    )
+    idx = annindex.write_ivf_index(emb, str(tmp_path / "flatidx"), n_centroids=8)
+    q = emb.where(F.col("vec_id") < 6)
+    fast = sorted(
+        tuple(r)
+        for r in annindex.ivf_index_topk(idx, q, k=5, n_probe=3).collect()
+    )
+    cap = simsearch._LOCAL_QUERY_CAP
+    simsearch._LOCAL_QUERY_CAP = 0
+    try:
+        slow = sorted(
+            tuple(r)
+            for r in annindex.ivf_index_topk(idx, q, k=5, n_probe=3).collect()
+        )
+    finally:
+        simsearch._LOCAL_QUERY_CAP = cap
+    assert fast == slow and len(fast) > 0
 
 
 def _build(spark, corpus, path, pq):
@@ -172,19 +242,25 @@ def _build(spark, corpus, path, pq):
     )
 
 
-def test_index_add_local_path_equals_in_plan(spark, sf_dir, tmp_path, monkeypatch):
-    """ivf_index_add stores the same postings and rerank rows whether the
-    delta is assigned driver-side or in-plan, and keeps the embedding
-    type of the source (array<float> stays array<float>)."""
+def _spy_ranking(monkeypatch):
+    """Record, per call of the driver-side ranking, whether it ranked."""
     seen = []
-    real = annindex._local_batch_sides
+    real = simsearch._local_ranked_cells
 
     def spy(*a, **k):
         out = real(*a, **k)
         seen.append(out is not None)
         return out
 
-    monkeypatch.setattr(annindex, "_local_batch_sides", spy)
+    monkeypatch.setattr(simsearch, "_local_ranked_cells", spy)
+    return seen
+
+
+def test_index_add_local_path_equals_in_plan(spark, sf_dir, tmp_path, monkeypatch):
+    """ivf_index_add stores the same postings and rerank rows whether the
+    delta is assigned driver-side or in-plan, and keeps the embedding
+    type of the source (array<float> stays array<float>)."""
+    seen = _spy_ranking(monkeypatch)
     cap = simsearch._LOCAL_QUERY_CAP
     for pq, vec_type in ((True, "array<float>"), (False, "array<double>")):
         corpus = _embs(spark, sf_dir).withColumn(
@@ -213,6 +289,87 @@ def test_index_add_local_path_equals_in_plan(spark, sf_dir, tmp_path, monkeypatc
         else:
             typed = local.postings.schema["embedding"].dataType
         assert typed.simpleString() == vec_type
+
+
+# ------------------------------------------- forced in-plan at every caller
+
+def test_delta_pairs_in_plan_equal_local(spark, sf_dir, tmp_path, monkeypatch):
+    """delta_ann_pairs_from_index returns the same pairs on its in-plan
+    path (cap 0) as on the driver-side path, for flat and PQ indexes and
+    for float and double batches."""
+    seen = _spy_ranking(monkeypatch)
+    cap = simsearch._LOCAL_QUERY_CAP
+    for pq in (False, True):
+        for vec_type in ("array<float>", "array<double>"):
+            corpus = _embs(spark, sf_dir).withColumn(
+                "embedding", F.col("embedding").cast(vec_type)
+            )
+            p = str(tmp_path / f"{pq}-{vec_type[6:11]}")
+            _build(spark, corpus, p, pq)
+            idx = annindex.read_ivf_index(spark, p)
+            # near-copies of stored rows plus fresh rows: batch×stored
+            # and batch×batch edges
+            batch = corpus.where(F.col("vec_id") >= 250).unionByName(
+                corpus.where(F.col("vec_id") < 20).select(
+                    (F.col("vec_id") + 1_000_000).alias("vec_id"), "embedding"
+                )
+            )
+            got = {}
+            for how in ("local", "in_plan"):
+                monkeypatch.setattr(
+                    simsearch, "_LOCAL_QUERY_CAP", cap if how == "local" else 0
+                )
+                seen.clear()
+                got[how] = _rows(annindex.delta_ann_pairs_from_index(
+                    idx, batch, threshold=0.9, n_probe=3
+                ))
+                assert seen == [how == "local"], (pq, vec_type, how, seen)
+            assert got["local"] == got["in_plan"], (pq, vec_type)
+            assert len(got["local"]) >= 20, (pq, vec_type)
+
+
+def test_pq_ingest_batch_in_plan_equal_local(spark, sf_dir, tmp_path, monkeypatch):
+    """One streaming_ann_ingest PQ micro-batch admits the same ids and
+    stores the same postings and rerank rows with every side in-plan
+    (cap 0: the rerank source, the delta pairs and the append) as on the
+    driver-side path."""
+    from magiceye_spark.streaming import drain
+
+    seen = _spy_ranking(monkeypatch)
+    cap = simsearch._LOCAL_QUERY_CAP
+    corpus = _embs(spark, sf_dir)
+    built = str(tmp_path / "built")
+    _build(spark, corpus, built, pq=True)
+    src = str(tmp_path / "src")
+    corpus.where(F.col("vec_id") >= 250).unionByName(
+        corpus.where(F.col("vec_id") < 20).select(
+            (F.col("vec_id") + 1_000_000).alias("vec_id"), "embedding"
+        )
+    ).coalesce(1).write.parquet(src)
+    runs = {}
+    for how in ("local", "in_plan"):
+        monkeypatch.setattr(
+            simsearch, "_LOCAL_QUERY_CAP", cap if how == "local" else 0
+        )
+        p, out = str(tmp_path / how), str(tmp_path / f"{how}-out")
+        shutil.copytree(built, p)
+        seen.clear()
+        drain(annindex.streaming_ann_ingest(
+            spark, p, spark.readStream.schema(corpus.schema).parquet(src),
+            str(tmp_path / f"{how}-ckpt"), threshold=0.95, n_probe=3,
+            output_path=out,
+        ), 300)
+        assert seen and set(seen) == {how == "local"}, (how, seen)
+        idx = annindex.read_ivf_index(spark, p)
+        runs[how] = [
+            _rows(spark.read.parquet(out).select("vec_id")),
+            _rows(idx.postings),
+            _rows(idx.rerank),
+        ]
+    assert runs["local"] == runs["in_plan"]
+    admitted = runs["local"][0]
+    assert 0 < len(admitted) < corpus.count() - 250 + 20
+    assert all(r[0] < 1_000_000 for r in admitted)  # the copies are rejected
 
 
 # ------------------------------------------------------------ file layout

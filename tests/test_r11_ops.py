@@ -14,7 +14,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from magiceye_spark import plans
-from magiceye_spark.llmops import annindex
+from magiceye_spark.llmops import annindex, simsearch
 from magiceye_spark.streaming import drain
 
 
@@ -99,7 +99,9 @@ def test_admission_rerank_scan_prunes_to_probed_cells(spark, sf_dir, tmp_path):
         pq=True, n_centroids=16,
     )
     batch = emb.where(F.col("vec_id") == 400)  # one vector → 2 probed cells
-    cells = annindex._probe_cells(batch, idx, 2)
+    cells = simsearch._cell_sides(
+        batch, idx.centroids, 2, "vec_id", "embedding"
+    ).cells
     assert len(cells) == 2
     pairs = annindex.delta_ann_pairs_from_index(
         idx, batch, threshold=0.95, n_probe=2

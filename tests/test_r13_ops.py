@@ -240,61 +240,3 @@ def test_quality_score_half_boundary_engine_identical(spark):
     con.sql("CREATE TABLE documents AS SELECT 1 AS doc_id, '" + text + "' AS text")
     oracle = con.sql(textstats.SQL_QUALITY).fetchone()
     assert oracle[1] == 0.4883
-
-
-def test_pq_local_query_side_matches_in_plan(spark, tmp_path):
-    """r13 optimization: bounded query batches get their probe cells and
-    ADC LUTs computed driver-side (LocalRelation) instead of via the
-    in-plan centroid/codebook literal expressions. The two paths must be
-    BIT-identical — the driver replica runs the same IEEE fold orders —
-    including the probed-cell set that prunes the postings scan."""
-    from magiceye_spark.llmops import annindex, simsearch
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet").select(
-        "vec_id", "embedding"
-    )
-    idx = annindex.write_ivf_index(
-        emb, str(tmp_path / "pqidx"), pq=True, n_centroids=8
-    )
-    q = emb.where(F.col("vec_id") < 6)
-    fast = sorted(
-        tuple(r)
-        for r in annindex.ivf_pq_index_topk(idx, q, None, k=5, n_probe=3).collect()
-    )
-    cap = simsearch._LOCAL_QUERY_CAP
-    simsearch._LOCAL_QUERY_CAP = 0  # force the in-plan query side
-    try:
-        slow = sorted(
-            tuple(r)
-            for r in annindex.ivf_pq_index_topk(
-                idx, q, None, k=5, n_probe=3
-            ).collect()
-        )
-    finally:
-        simsearch._LOCAL_QUERY_CAP = cap
-    assert fast == slow and len(fast) > 0
-
-
-def test_flat_local_probe_rows_match_in_plan(spark, tmp_path):
-    """Flat-probe sibling of the PQ local-query-side parity pin."""
-    from magiceye_spark.llmops import annindex, simsearch
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet").select(
-        "vec_id", "embedding"
-    )
-    idx = annindex.write_ivf_index(emb, str(tmp_path / "flatidx"), n_centroids=8)
-    q = emb.where(F.col("vec_id") < 6)
-    fast = sorted(
-        tuple(r)
-        for r in annindex.ivf_index_topk(idx, q, k=5, n_probe=3).collect()
-    )
-    cap = simsearch._LOCAL_QUERY_CAP
-    simsearch._LOCAL_QUERY_CAP = 0
-    try:
-        slow = sorted(
-            tuple(r)
-            for r in annindex.ivf_index_topk(idx, q, k=5, n_probe=3).collect()
-        )
-    finally:
-        simsearch._LOCAL_QUERY_CAP = cap
-    assert fast == slow and len(fast) > 0

@@ -152,7 +152,7 @@ def test_probe_prunes_postings_partitions(spark, sf_dir, tmp_path):
     m = re.search(r"PartitionFilters: \[([^\]]*)\]", plan)
     assert m and "cell" in m.group(1), plan
     # probing 2 of 16 cells: the pruned scan reads a strict subset
-    cells = annindex._probe_cells(q, idx, 2)
+    cells = simsearch._cell_sides(q, idx.centroids, 2, "vec_id", "embedding").cells
     assert len(cells) == 2
 
 

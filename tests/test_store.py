@@ -122,3 +122,67 @@ def test_failed_micro_batch_leaks_no_cache(
         drain(q, 300)
     assert seen and seen[0] > before
     assert _persisted(spark) == before
+
+
+def test_hamming_loop_admits_without_barrier(spark, sf_dir, tmp_path, monkeypatch):
+    """The Hamming loop admits over the signed batch the loop persisted:
+    no second repartition of the signatures (store.delta_barrier, which
+    direct callers with lazily signed frames still get)."""
+    path = str(tmp_path / "store")
+    read = _build_hamming(spark, sf_dir, path)
+    rows = _docs(spark, sf_dir).where(F.col("doc_id").between(100, 199))
+    src = str(tmp_path / "src")
+    rows.coalesce(1).write.parquet(src)
+
+    def boom(*args, **kwargs):
+        raise RuntimeError("delta_barrier called")
+
+    monkeypatch.setattr(store, "delta_barrier", boom)
+    out = str(tmp_path / "out")
+    drain(_start_loop(
+        spark, "hamming", path, spark.readStream.schema(rows.schema).parquet(src),
+        str(tmp_path / "ckpt"), out,
+    ), 300)
+    n_adm = spark.read.parquet(out).count()
+    assert 0 < n_adm <= 100
+    assert read().signatures.count() == 100 + n_adm
+
+
+def test_ivf_loop_probes_filesystem_only_until_model_read(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """A cold-start IVF loop looks for the store (params, postings, the
+    PQ rerank table) only until it has read the model: batch 0
+    bootstraps, batch 1 reads the model, and no later batch makes a
+    filesystem probe."""
+    events = []
+    real_exists = annindex.fs_exists
+    real_admit = annindex.delta_ann_admit_indexed
+
+    def exists(*a, **k):
+        events.append("fs")
+        return real_exists(*a, **k)
+
+    def admit(*a, **k):
+        events.append("admit")
+        return real_admit(*a, **k)
+
+    monkeypatch.setattr(annindex, "fs_exists", exists)
+    monkeypatch.setattr(annindex, "delta_ann_admit_indexed", admit)
+    emb = _embs(spark, sf_dir)
+    src = str(tmp_path / "src")
+    for lo in (0, 100, 200, 300):  # four single-file micro-batches
+        emb.where(F.col("vec_id").between(lo, lo + 99)).coalesce(1).write.mode(
+            "append"
+        ).parquet(src)
+    drain(annindex.streaming_ann_ingest(
+        spark, str(tmp_path / "ivf"),
+        spark.readStream.schema(emb.schema).option("maxFilesPerTrigger", "1")
+        .parquet(src),
+        str(tmp_path / "ckpt"), bootstrap={"pq": True, "n_centroids": 4},
+    ), 300)
+    # one admission per batch; batch 1 admits after reading the model
+    admits = [i for i, e in enumerate(events) if e == "admit"]
+    assert len(admits) == 4, events
+    assert "fs" in events[:admits[1]]
+    assert "fs" not in events[admits[1]:], events
