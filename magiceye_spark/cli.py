@@ -639,13 +639,12 @@ def cmd_ingest(args: argparse.Namespace) -> int:
     are appended, so later batches dedup against earlier ones. Every store
     bootstraps empty: MinHash/Hamming write an empty index up front; ivf
     defers to the loop's cold-start (r10) — the FIRST micro-batch is its
-    own quantizer sample (``--bootstrap-from`` still seeds a pre-fit
-    model instead when given). Either way the fitted model is FROZEN
-    after that (the FAISS add contract)."""
+    own quantizer sample (``--bootstrap-from`` seeds a missing store with
+    a pre-fit model instead). Either way the fitted model is FROZEN
+    after that (the FAISS add contract). An existing ivf store whose pq
+    flag differs from ``--pq``, or a PQ store without its rerank table,
+    exits 2."""
     import os as _os
-
-    from pyspark.sql import functions as F
-    from pyspark.errors import AnalysisException
 
     from magiceye_spark import fsops
     from magiceye_spark.session import get_spark
@@ -713,12 +712,18 @@ def cmd_ingest(args: argparse.Namespace) -> int:
     else:  # ivf
         from magiceye_spark.llmops import annindex
 
+        # postings mark a complete store, as in the loop's cold start: a
+        # build cut before them is rebuilt, not refused
+        exists = exists and fsops.fs_exists(
+            spark, _os.path.join(args.store_path, "postings")
+        )
         if exists:
-            stored_pq = bool(
-                spark.read.parquet(
-                    _os.path.join(args.store_path, "params")
-                ).first()["pq"]
-            )
+            try:
+                model = annindex._read_model(spark, args.store_path)
+            except ValueError as e:
+                print(f"ingest: {e}", file=sys.stderr)
+                return 2
+            stored_pq = bool(model["params"]["pq"])
             if stored_pq != args.pq:
                 print(
                     f"ingest: store at {args.store_path} is "
@@ -727,111 +732,6 @@ def cmd_ingest(args: argparse.Namespace) -> int:
                     file=sys.stderr,
                 )
                 return 2
-            if args.pq and not fsops.fs_exists(
-                spark, _os.path.join(args.store_path, "rerank")
-            ):
-                # pre-r11 PQ store: its originals live OUTSIDE the store —
-                # in the corpus it was seeded from AND/OR the admitted
-                # sink of prior ingests (a cold-bootstrapped legacy store
-                # has ONLY the sink). Resuming with a gap would
-                # raise_error mid-stream the moment an uncovered stored
-                # candidate needs exact-cosine verification (the r10
-                # advice's resume trap) — so verify COVERAGE up front:
-                # every stored vec_id must appear in seed ∪ existing
-                # sink. One pruned id-column scan + anti-join, paid once
-                # per resume; flag presence alone is not proof (a seeded
-                # legacy store resumed with only --out, or a missing
-                # sink dir, would pass a flag check and still crash).
-                sources = []
-                if args.bootstrap_from:
-                    sources.append(
-                        spark.read.parquet(args.bootstrap_from).select("vec_id")
-                    )
-                # A prior sink covers a stored id ONLY through partitions
-                # whose ingest_batch can never be an in-flight batch id of
-                # THIS run: the rerank assembly excludes the current
-                # batch's partition (crash-replay hygiene) and each drained
-                # batch OVERWRITES its partition — so on a fresh checkpoint
-                # (batch ids restart at 0) the prior run's colliding
-                # partitions are first unreadable, then destroyed (r12
-                # advice). availableNow replays at most
-                # ceil(n_src_files / maxFilesPerTrigger) batch ids; a
-                # resumed checkpoint continues past them (collision-free);
-                # --follow on a fresh checkpoint grows without bound, so
-                # no prior partition is safe.
-                if args.out and fsops.fs_exists(spark, args.out):
-                    if not fsops.fs_exists(spark, args.checkpoint):
-                        if args.follow:
-                            replay_bound = None  # unbounded batch ids
-                        else:
-                            n_files = max(1, len(static.inputFiles()))
-                            replay_bound = -(-n_files // max(
-                                1, args.max_files_per_trigger
-                            ))
-                    else:
-                        replay_bound = 0
-                    if replay_bound is None:
-                        print(
-                            f"ingest: checkpoint {args.checkpoint} is fresh "
-                            f"and --follow is set — prior sink {args.out} "
-                            "partitions will eventually collide with "
-                            "replayed batch ids (excluded from rerank "
-                            "assembly, then overwritten), so the sink "
-                            "counts for NO rerank coverage; reuse the "
-                            "prior run's checkpoint to resume",
-                            file=sys.stderr,
-                        )
-                    else:
-                        try:
-                            sink_ids = (
-                                spark.read.option("basePath", args.out)
-                                .parquet(args.out)
-                            )
-                            if replay_bound:
-                                print(
-                                    f"ingest: fresh checkpoint — sink "
-                                    f"partitions ingest_batch < "
-                                    f"{replay_bound} collide with batch "
-                                    "ids this drain will replay and are "
-                                    "NOT counted as rerank coverage "
-                                    "(colliding partitions get "
-                                    "overwritten); reuse the prior "
-                                    "checkpoint to keep them",
-                                    file=sys.stderr,
-                                )
-                                sink_ids = sink_ids.where(
-                                    F.col("ingest_batch") >= replay_bound
-                                )
-                            sources.append(sink_ids.select("vec_id"))
-                        except AnalysisException:
-                            pass  # empty/unreadable sink covers nothing
-                stored_ids = spark.read.parquet(
-                    _os.path.join(args.store_path, "postings")
-                ).select("vec_id")
-                covered = sources[0] if sources else None
-                for s in sources[1:]:
-                    covered = covered.unionByName(s)
-                missing = (
-                    stored_ids.count()
-                    if covered is None
-                    else stored_ids.join(covered, "vec_id", "left_anti").count()
-                )
-                if missing:
-                    print(
-                        f"ingest: PQ store at {args.store_path} predates "
-                        "the in-store rerank table and "
-                        f"{missing} stored vector(s) have no original in "
-                        "the given sources — pass --bootstrap-from <seed "
-                        "parquet> (the corpus the store was seeded from) "
-                        "and/or --out <the PRIOR admitted sink> WITH the "
-                        "prior run's --checkpoint (a fresh checkpoint "
-                        "replays batch ids from 0, which excludes and "
-                        "overwrites colliding sink partitions) so every "
-                        "stored id is covered (r11+ stores carry their "
-                        "originals and resume without either)",
-                        file=sys.stderr,
-                    )
-                    return 2
         if not exists and args.bootstrap_from:
             # size the quantizer to the seed that trains it — the same
             # recommend_ivf_params(√n) rule the in-loop cold-start applies;
@@ -843,15 +743,11 @@ def cmd_ingest(args: argparse.Namespace) -> int:
         # with no pre-built store and no seed, the loop's cold-start fits
         # the quantizer on the first micro-batch (annindex.streaming_ann_
         # ingest bootstrap contract) — an empty drain just never fires it.
-        # A PQ store keeps its ORIGINALS itself (the cell-partitioned
-        # rerank table, r11) — --bootstrap-from/--out only feed the rerank
-        # for pre-r11 stores that lack it.
         q = annindex.streaming_ann_ingest(
             spark, args.store_path, stream, args.checkpoint,
             threshold=args.threshold, output_path=args.out,
             compact_every=args.compact_every, trigger=trigger,
             bootstrap={"pq": True} if args.pq else {},
-            rerank_path=args.bootstrap_from,
         )
         read_n = lambda: annindex.read_ivf_index(  # noqa: E731
             spark, args.store_path
@@ -1041,9 +937,9 @@ def main(argv: list[str] | None = None) -> int:
                        help="streaming checkpoint directory")
     p_ing.add_argument("--out", help="write admitted rows per batch here")
     p_ing.add_argument("--bootstrap-from",
-                       help="seed corpus parquet for a missing store "
-                       "(optional for --store ivf since the r10 "
-                       "cold-start; without it the first micro-batch "
+                       help="seed corpus parquet for a missing store; "
+                       "an existing store ignores it (optional for "
+                       "--store ivf: without it the first micro-batch "
                        "fits the quantizer)")
     p_ing.add_argument("--pq", action="store_true",
                        help="ivf only (exit 2 otherwise): bootstrap a "

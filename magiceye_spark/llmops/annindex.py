@@ -27,13 +27,18 @@ Storage layout under ``path`` (all parquet, all Spark-native):
                  Partitioning by cell is the scale story: a probe of
                  n_probe cells reads n_probe/n_centroids of the files —
                  directory-level partition pruning, no scan of the rest.
-- ``rerank``     PQ only (r11): (vec_id, embedding) PARTITIONED BY cell —
-                 the original vectors, kept ONLY for exact-cosine
+- ``rerank``     every PQ store: (vec_id, embedding) PARTITIONED BY cell
+                 — the original vectors, kept ONLY for exact-cosine
                  verification (admission, probe rerank). Admission reads
                  just the probed cells' directories, pruned exactly like
                  the postings, so no per-batch corpus-wide rerank shuffle
                  runs; the codes table stays the only artifact a probe
-                 scans, so the ~32× hot-set compression is intact.
+                 scans, so the ~32× hot-set compression is intact. Every
+                 build and append writes ``rerank`` BEFORE ``postings``,
+                 so at every crash point the rerank ids cover the
+                 postings ids. A PQ store without the table cannot be
+                 read (:func:`_read_model` raises): rebuild it with
+                 :func:`write_ivf_index` from the original vectors.
 
 Determinism: the model is fitted by :func:`simsearch._ivf_centroids` /
 :func:`simsearch._pq_fit` (bounded TakeOrdered samples, fixed-iteration
@@ -46,7 +51,6 @@ row).
 
 from __future__ import annotations
 
-import functools
 import os
 from dataclasses import dataclass
 
@@ -74,7 +78,7 @@ class IvfIndex:
     """A readable IVF(-PQ) index: tiny driver-side model (centroids,
     optional codebooks) + the postings DataFrame (lazy parquet scan when
     read from disk). ``rerank`` is the PQ store's cell-partitioned
-    originals table (None for flat indexes and pre-r11 PQ stores)."""
+    originals table, which every PQ store has (None for flat indexes)."""
 
     params: dict
     centroids: dict[int, list[float]]
@@ -234,7 +238,10 @@ def write_ivf_index(
 
     PQ stores also persist ``rerank`` — the original vectors partitioned
     by cell — so admission's exact-cosine verification scans only the
-    probed cells (see the module docstring's storage layout)."""
+    probed cells (see the module docstring's storage layout). It is
+    written before ``postings``, the table whose presence marks a
+    complete store, so a crash between the two writes leaves a store
+    that the ingest loop's cold start rebuilds."""
     spark = corpus.sparkSession
     dim, cents, books = _fitted if _fitted is not None else _fit_model(
         corpus, pq=pq, n_centroids=n_centroids, kmeans_iters=kmeans_iters,
@@ -271,11 +278,12 @@ def write_ivf_index(
         spark.sparkContext.defaultParallelism, id_col
     )
     if pq:
-        # two consumers (codes write, rerank write): persist the
+        # two consumers (rerank write, codes write): persist the
         # CELL-ASSIGNED frame so the source is scanned and the CPU-dense
         # n_centroids·dim argmax runs ONCE per row
         flat = _postings_flat(spread, cents, id_col, vec_col).persist()
         try:
+            _write_cells(flat, os.path.join(path, "rerank"), "overwrite")
             _write_cells(
                 _pq_encode(
                     flat, cents, books, m_subvectors, "vec_id", "embedding",
@@ -283,7 +291,6 @@ def write_ivf_index(
                 ),
                 os.path.join(path, "postings"), "overwrite",
             )
-            _write_cells(flat, os.path.join(path, "rerank"), "overwrite")
         finally:
             flat.unpersist()
     else:
@@ -296,10 +303,17 @@ def write_ivf_index(
 
 def _read_model(spark: SparkSession, path: str) -> dict:
     """The frozen model tables (params, centroids, codebooks), collected
-    to the driver, and whether the store has a PQ ``rerank`` table (pre-r11
-    PQ stores have none): the part of :func:`read_ivf_index` an ingest
-    loop reads once."""
+    to the driver: the part of :func:`read_ivf_index` an ingest loop reads
+    once. The one check that a PQ store has its ``rerank`` table: without
+    it admission and probe rerank have no original vectors, so the store
+    is refused (ValueError) rather than half-read."""
     params = store.read_params(spark, path, _VERSION)
+    if params["pq"] and not fs_exists(spark, os.path.join(path, "rerank")):
+        raise ValueError(
+            f"PQ store at {path} has no rerank table (the original vectors "
+            "its admission and probe rerank verify against); rebuild it "
+            "with write_ivf_index from the original vectors"
+        )
     cents = {
         int(r["cell"]): [float(v) for v in r["centroid"]]
         for r in spark.read.parquet(os.path.join(path, "centroids")).collect()
@@ -312,10 +326,7 @@ def _read_model(spark: SparkSession, path: str) -> dict:
         books = [[None] * n_codes for _ in range(m)]
         for r in brows:
             books[int(r["m"])][int(r["code"])] = [float(v) for v in r["vec"]]
-    return {
-        "params": params, "centroids": cents, "codebooks": books,
-        "rerank": params["pq"] and fs_exists(spark, os.path.join(path, "rerank")),
-    }
+    return {"params": params, "centroids": cents, "codebooks": books}
 
 
 def _open_index(spark: SparkSession, path: str, model: dict) -> IvfIndex:
@@ -327,7 +338,7 @@ def _open_index(spark: SparkSession, path: str, model: dict) -> IvfIndex:
         "cell", F.col("cell").cast("int")
     )
     rerank = None
-    if model["rerank"]:
+    if params["pq"]:
         # presented under the caller's column names (id_col, vec_col)
         # + cell, so it plugs into every rerank= consumer unchanged
         rerank = spark.read.parquet(os.path.join(path, "rerank")).select(
@@ -405,14 +416,17 @@ def _append_vectors(
     else:
         delta = flat
     try:
-        if idx.pq and idx.rerank is not None:
+        if idx.pq:
             # keep the store's cell-partitioned originals in lockstep with
             # the codes — admission's rerank scan prunes to probed cells
             # only because every stored id's original lives under its cell.
-            # This append runs BEFORE the postings append: appending to the
-            # postings refreshes that path's file-listing cache, so a later
-            # re-evaluation of `flat` (anti-joined against the postings)
-            # would see its own batch as already stored and append nothing.
+            # This append runs BEFORE the postings append, so the rerank
+            # ids cover the postings ids at every crash point (admission
+            # needs an original for every stored candidate); and appending
+            # to the postings refreshes that path's file-listing cache, so
+            # a later re-evaluation of `flat` (anti-joined against the
+            # postings) would see its own batch as already stored and
+            # append nothing.
             # The anti-join here is against the RERANK ids, making a
             # crash-replay of the window between the two appends a no-op
             # for this table too.
@@ -510,7 +524,7 @@ def ivf_pq_index_topk(
     8-bytes-per-vector code table for the ADC stage, then exact rerank of
     the finalists from original vectors. ``corpus`` may be any
     full-vector source covering the stored ids (the lake table the index
-    was built from); ``None`` (r11) uses the store's own cell-partitioned
+    was built from); ``None`` uses the store's own cell-partitioned
     ``rerank`` table, pruned to the probed cells — the finalists all come
     from probed cells, so the rerank scan reads n_probe/n_centroids of
     the originals instead of the whole corpus."""
@@ -524,11 +538,6 @@ def ivf_pq_index_topk(
     )
     cells = q.cells
     if corpus is None:
-        if index.rerank is None:
-            raise ValueError(
-                "no corpus given and this PQ store has no rerank table "
-                "(pre-r11 store) — pass corpus= (the original-vector source)"
-            )
         corpus = index.rerank.where(F.col("cell").isin(cells)).select(
             id_col, vec_col
         )
@@ -550,7 +559,6 @@ def delta_ann_pairs_from_index(
     n_probe: int = 8,
     salts: int = 4,
     rerank: DataFrame | None = None,
-    _rerank_cell_aligned: bool = False,
 ) -> DataFrame:
     """Cosine near-dup pairs TOUCHING the batch (batch×stored and
     batch×batch) against a stored index — the one-sided
@@ -576,21 +584,17 @@ def delta_ann_pairs_from_index(
     postings hold codes, not vectors, so admission (which must verify
     EXACT cosine — ADC distances drift with quantization error) reranks
     candidates against the ORIGINAL vectors. ``None`` uses the store's
-    own cell-partitioned ``rerank`` table; a frame of (id_col, vec_col)
-    covering every stored vec_id (e.g. the lake corpus the index was
-    built from) is also accepted. Either way the pruned postings
-    contribute only (vec_id, cell), and the rerank join recovers
-    embeddings for just the probed cells' ids. When the rerank frame's
-    ``cell`` column is the INDEX's cell assignment — the store's own
-    table, or a caller passing ``_rerank_cell_aligned=True`` (the ingest
-    loop's store ∪ batch union) — its scan is statically pruned to the
+    own cell-partitioned ``rerank`` table, statically pruned to the
     probed cells with the same literal ``isin(cells)`` the postings get,
-    so per-batch rerank work is proportional to the probed slice. An
-    EXTERNAL frame that merely carries a ``cell`` column is NOT pruned
-    by it (the column is dropped: unrelated values would silently
-    over-prune stored ids). A stored candidate missing from ``rerank``
-    raises inside the plan (a silently dropped edge would admit a
-    duplicate).
+    so per-batch rerank work is proportional to the probed slice. A
+    frame of (id_col, vec_col) covering every stored vec_id (e.g. the
+    lake corpus the index was built from) is also accepted; a ``cell``
+    column it carries is dropped, not used to prune (unrelated values
+    would silently over-prune stored ids). Either way the pruned
+    postings contribute only (vec_id, cell), and the rerank join
+    recovers embeddings for just the probed cells' ids. A stored
+    candidate missing from ``rerank`` raises inside the plan (a silently
+    dropped edge would admit a duplicate).
     Because :func:`simsearch._pq_fit` derives its coarse quantizer from
     the same :func:`simsearch._ivf_centroids` fit, a PQ index probes the
     SAME cells as its flat twin — so PQ-with-rerank admission equals the
@@ -602,17 +606,6 @@ def delta_ann_pairs_from_index(
     at 6 (the repo's dot-product discipline)."""
     from magiceye_spark.llmops.simsearch import cosine
 
-    if index.pq and rerank is None:
-        rerank = index.rerank
-        _rerank_cell_aligned = True  # the store's own table, by definition
-    if index.pq and rerank is None:
-        raise ValueError(
-            "PQ index: delta admission verifies exact cosine against stored "
-            "vectors, which PQ postings do not hold — this store has no "
-            "rerank table (pre-r11 store), so pass rerank= (the "
-            "original-vector corpus covering every stored vec_id) or use a "
-            "flat index for the admission store"
-        )
     id_col, vec_col = index.params["id_col"], index.params["vec_col"]
     # the batch's assigned (union) side, probe side and probed-cells
     # literal, driver-side when the batch is bounded
@@ -622,11 +615,10 @@ def delta_ann_pairs_from_index(
         # cell scoping from the compact PQ postings; vectors from rerank.
         # The when/otherwise keeps the raise_error expression REFERENCED
         # (a bare assert_true column would be pruned away by Catalyst).
-        rr = rerank
-        if _rerank_cell_aligned and "cell" in rr.columns:
-            rr = rr.where(F.col("cell").isin(cells))
-        elif "cell" in rr.columns:
-            rr = rr.drop("cell")  # an unrelated `cell` must not prune
+        if rerank is None:
+            rr = index.rerank.where(F.col("cell").isin(cells))
+        else:
+            rr = rerank.drop("cell")  # an unrelated `cell` must not prune
         stored = (
             index.postings.where(F.col("cell").isin(cells))
             .select("vec_id", "cell")
@@ -708,7 +700,6 @@ def delta_ann_admit_indexed(
     n_probe: int = 8,
     salts: int = 4,
     rerank: DataFrame | None = None,
-    _rerank_cell_aligned: bool = False,
 ) -> DataFrame:
     """Delta-ingest admission against the stored index, closure
     semantics identical to the MinHash and Hamming stores: an incoming
@@ -722,8 +713,7 @@ def delta_ann_admit_indexed(
     :func:`delta_ann_pairs_from_index`); flat indexes ignore it. Returns
     the admitted rows of ``new_vectors`` with the caller's columns."""
     pairs = delta_ann_pairs_from_index(
-        index, new_vectors, threshold, n_probe, salts, rerank=rerank,
-        _rerank_cell_aligned=_rerank_cell_aligned,
+        index, new_vectors, threshold, n_probe, salts, rerank=rerank
     )
     return store.admit(
         new_vectors,
@@ -744,7 +734,6 @@ def streaming_ann_ingest(
     output_path: str | None = None,
     compact_every: int | None = None,
     trigger: dict | None = None,
-    rerank_path: str | None = None,
     bootstrap: dict | None = None,
 ):
     """The CONTINUOUS embedding-ingest loop over a stored IVF(-PQ) index —
@@ -777,68 +766,20 @@ def streaming_ann_ingest(
 
     **PQ stores**: admission reranks candidates' exact cosine from the
     store's cell-partitioned ``rerank`` originals, pruned to the probed
-    cells like the postings. The current batch's (id, vector) pairs are
-    always unioned into the rerank source: free for fresh batches, and
-    it makes a replayed batch (whose rows are already stored) a clean
-    no-op instead of a raise_error crash loop. Pre-r11 PQ stores (no
-    ``rerank`` table) fall back to a corpus-wide assembly from
-    ``rerank_path`` ∪ the admitted sink ∪ the batch.
+    cells like the postings. Every build and append writes ``rerank``
+    before ``postings``, so every stored candidate — a replayed batch's
+    own rows included — has its original in the table at any crash
+    point, and a crash between the cold start's two writes leaves no
+    ``postings``, so the next run cold-starts again. A PQ store without
+    a ``rerank`` table fails the first batch (:func:`_read_model`).
 
     The model tables (params, centroids, codebooks) are the frozen
-    model, read with the presence of the rerank table once per query;
-    the postings and rerank scans are re-opened per batch. The store is
-    looked for only until the model is read, so a store removed under a
-    running query fails the next batch. Replay safety, ``compact_every``
-    (:func:`ivf_index_compact`) and ``trigger`` follow :mod:`.store`.
+    model, read once per query; the postings and rerank scans are
+    re-opened per batch. The store is looked for only until the model is
+    read, so a store removed under a running query fails the next batch.
+    Replay safety, ``compact_every`` (:func:`ivf_index_compact`) and
+    ``trigger`` follow :mod:`.store`.
     Returns the started StreamingQuery."""
-
-    def _batch_kv(idx_params: dict, batch_df: DataFrame) -> DataFrame:
-        return batch_df.select(idx_params["id_col"], idx_params["vec_col"])
-
-    def _rerank_frame(idx: IvfIndex, batch_df: DataFrame, batch_id: int):
-        """Returns (frame, cell_aligned): cell_aligned declares the
-        frame's `cell` column as the index's own assignment, enabling
-        the probed-cell static prune in the pair generator."""
-        if not idx.pq:
-            return None, False
-        id_col, vec_col = idx.params["id_col"], idx.params["vec_col"]
-        if idx.rerank is not None:
-            # the batch is unioned in (see the docstring); duplicate
-            # (id, vec) rows collapse in the edge-level dropDuplicates
-            batch_part = _cell_sides(
-                batch_df, idx.centroids, 1, id_col, vec_col
-            ).assigned.select(
-                F.col("vec_id").alias(id_col),
-                F.col("embedding").alias(vec_col),
-                "cell",
-            )
-            # aligned: both sides' `cell` comes from the index's centroids
-            return idx.rerank.unionByName(batch_part), True
-        # pre-r11 PQ store (no rerank table): corpus-wide assembly from the
-        # external seed corpus ∪ the admitted sink ∪ the batch — kept for
-        # back-compat; new stores never take this branch
-        if rerank_path is None and output_path is None:
-            raise ValueError(
-                "PQ store has no rerank table (pre-r11 store) and no "
-                "external source — pass rerank_path (the corpus the index "
-                "was built from) and/or output_path (the admitted sink)"
-            )
-        parts = []
-        if rerank_path is not None:
-            parts.append(spark.read.parquet(rerank_path).select(id_col, vec_col))
-        if output_path is not None and fs_exists(spark, output_path):
-            # the CURRENT batch's dir is excluded: a crashed prior
-            # attempt's partial files must not be read inputs of the very
-            # job that overwrites them; the batch union below supplies
-            # those rows instead
-            parts.append(
-                spark.read.option("basePath", output_path)
-                .parquet(output_path)
-                .where(F.col("ingest_batch") != batch_id)
-                .select(id_col, vec_col)
-            )
-        parts.append(_batch_kv(idx.params, batch_df))
-        return functools.reduce(DataFrame.unionByName, parts), False
 
     def _bootstrap(batch_df: DataFrame, batch_id: int) -> bool:
         if fs_exists(spark, os.path.join(path, "params")) and fs_exists(
@@ -858,13 +799,13 @@ def streaming_ann_ingest(
         fitted = _fit_model(batch_df, **bs)
         dim, cents, books = fitted
         params = _params_dict(dim, **bs)
+        kv = batch_df.select(params["id_col"], params["vec_col"])
         # the empty store: no postings (the pair generator reads only
         # vec_id, cell and, for flat stores, the embedding)
         idx0 = IvfIndex(
             params=params, centroids=cents, codebooks=books,
             postings=_postings_flat(
-                _batch_kv(params, batch_df).limit(0), cents,
-                params["id_col"], params["vec_col"],
+                kv.limit(0), cents, params["id_col"], params["vec_col"]
             ),
         )
         # a crash after the index write replays into the normal path,
@@ -872,7 +813,7 @@ def streaming_ann_ingest(
         store.admit_sink_append(
             delta_ann_admit_indexed(
                 idx0, batch_df, threshold, n_probe,
-                rerank=_batch_kv(params, batch_df) if params["pq"] else None,
+                rerank=kv if params["pq"] else None,
             ),
             batch_id,
             output_path,
@@ -882,18 +823,13 @@ def streaming_ann_ingest(
         )
         return True
 
-    def _admit(idx: IvfIndex, batch_df: DataFrame, _, batch_id: int):
-        rr, rr_aligned = _rerank_frame(idx, batch_df, batch_id)
-        return delta_ann_admit_indexed(
-            idx, batch_df, threshold, n_probe,
-            rerank=rr, _rerank_cell_aligned=rr_aligned,
-        )
-
     return store.ingest_loop(
         stream, checkpoint,
         read_model=lambda: _read_model(spark, path),
         open_index=lambda model: _open_index(spark, path, model),
-        admit_batch=_admit,
+        admit_batch=lambda idx, batch_df, *_: delta_ann_admit_indexed(
+            idx, batch_df, threshold, n_probe
+        ),
         append=lambda idx, _, admitted: _append_vectors(idx, path, admitted),
         compact=lambda: ivf_index_compact(spark, path),
         bootstrap=_bootstrap,

@@ -20,6 +20,8 @@ signatures at scale.
 
 from __future__ import annotations
 
+import functools
+from collections.abc import Callable
 from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -706,11 +708,20 @@ def _local_ranked_cells(
 class _Sides:
     """A side builder's output: ``probes``, one row per (row, probed
     cell); ``assigned``, each row in its nearest cell (:func:`_cell_sides`
-    only); and :attr:`cells`."""
+    only); and :attr:`cells`. Each side is built on its first read, so a
+    caller that reads one side pays no Arrow conversion for the other."""
 
-    probes: DataFrame
-    assigned: DataFrame | None = None
+    make_probes: Callable[[], DataFrame]
+    make_assigned: Callable[[], DataFrame] | None = None
     _cells: list[int] | None = None
+
+    @functools.cached_property
+    def probes(self) -> DataFrame:
+        return self.make_probes()
+
+    @functools.cached_property
+    def assigned(self) -> DataFrame:
+        return self.make_assigned()
 
     @property
     def cells(self) -> list[int]:
@@ -747,11 +758,10 @@ def _cell_sides(
     embedding, cell) — the :func:`annindex._postings_flat` rows — and
     ``probes`` (q_id, q_vec, cell) — one row per each of a row's
     ``n_probe`` nearest cells. The ONE place the index probe, the delta
-    admission, the append and the ingest loop's rerank source choose
-    between the two paths:
+    admission and the append choose between the two paths:
 
-    - bounded frames are ranked by :func:`_local_ranked_cells` and both
-      sides ship as Arrow LocalRelations (no centroid-literal argmax,
+    - bounded frames are ranked by :func:`_local_ranked_cells` and each
+      side read ships as an Arrow LocalRelation (no centroid-literal argmax,
       ~0.5 s of plan analysis per action at 32×64, and no probed-cells
       job). ``q_vec`` is double; the assigned embedding is cast back to
       the source type, which is exact (float32 widens to double
@@ -763,12 +773,12 @@ def _cell_sides(
         kv = _barrier(frame, id_col, vec_col)
         vec = F.col(vec_col)
         return _Sides(
-            assigned=kv.select(
+            make_assigned=lambda: kv.select(
                 F.col(id_col).alias("vec_id"),
                 vec.alias("embedding"),
                 _best_cells(vec, cents, 1)[0]["cell"].alias("cell"),
             ),
-            probes=kv.select(
+            make_probes=lambda: kv.select(
                 F.col(id_col).alias("q_id"),
                 vec.alias("q_vec"),
                 F.explode(
@@ -781,16 +791,15 @@ def _cell_sides(
     probes = [
         (rid, vec, cell) for rid, vec, _, pairs in ranked for _, cell in pairs[:n_probe]
     ]
-    assigned = local_frame(
-        spark,
-        [(rid, vec, pairs[0][1]) for rid, vec, _, pairs in ranked],
-        f"vec_id {id_type}, embedding array<double>, cell int",
-    )
     return _Sides(
-        probes=local_frame(
+        make_probes=lambda: local_frame(
             spark, probes, f"q_id {id_type}, q_vec array<double>, cell int"
         ),
-        assigned=assigned.withColumn(
+        make_assigned=lambda: local_frame(
+            spark,
+            [(rid, vec, pairs[0][1]) for rid, vec, _, pairs in ranked],
+            f"vec_id {id_type}, embedding array<double>, cell int",
+        ).withColumn(
             "embedding", F.col("embedding").cast(frame.schema[vec_col].dataType)
         ),
         _cells=sorted({c for _, _, c in probes}),
@@ -833,7 +842,7 @@ def _pq_query_side(
             ),
         )
         return _Sides(
-            probes=_barrier(queries, id_col, vec_col).select(
+            make_probes=lambda: _barrier(queries, id_col, vec_col).select(
                 F.col(id_col).alias("query_id"),
                 lut.alias("_lut"),
                 F.explode(_best_cells(F.col(vec_col), cents, n_probe)).alias("_p"),
@@ -860,7 +869,7 @@ def _pq_query_side(
             out.append((qid, lut, int(cell), float(score)))
     id_type = queries.schema[id_col].dataType.simpleString()
     return _Sides(
-        probes=local_frame(
+        make_probes=lambda: local_frame(
             queries.sparkSession,
             out,
             f"query_id {id_type}, _lut array<array<double>>, "

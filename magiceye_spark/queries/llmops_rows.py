@@ -1248,14 +1248,13 @@ def pq_ann_admit_indexed_exact_q(spark, sf_dir):
 
 @register("pq_ann_admit_store_exact", _SQL_ANN_ADMIT_EXACT)
 def pq_ann_admit_store_exact_q(spark, sf_dir):
-    """The r11 PQ-admission production path under the SAME exhaustive
+    """The PQ-admission production path under the SAME exhaustive
     oracle as `pq_ann_admit_indexed_exact`, with rerank=None: exact
     cosine is verified from the store's OWN cell-partitioned originals
-    table, whose scan the plan prunes to the probed cells exactly like
-    the code postings (the r10 verdict's one scale flag, closed — the
-    pre-r11 path assembled and deduplicated the full external corpus per
-    batch). Identical verdicts to the external-rerank row prove the
-    pruned table covers every stored candidate."""
+    table, which every PQ store has and whose scan the plan prunes to
+    the probed cells exactly like the code postings (the r10 verdict's
+    one scale flag, closed). Identical verdicts to the external-rerank
+    row prove the pruned table covers every stored candidate."""
     from magiceye_spark.llmops import annindex
 
     emb = _embs(spark, sf_dir).select("vec_id", "embedding")

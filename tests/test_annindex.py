@@ -8,6 +8,7 @@ import os
 import random
 import shutil
 
+import pytest
 from pyspark.sql import functions as F
 
 from magiceye_spark.io import local_frame
@@ -331,8 +332,8 @@ def test_delta_pairs_in_plan_equal_local(spark, sf_dir, tmp_path, monkeypatch):
 def test_pq_ingest_batch_in_plan_equal_local(spark, sf_dir, tmp_path, monkeypatch):
     """One streaming_ann_ingest PQ micro-batch admits the same ids and
     stores the same postings and rerank rows with every side in-plan
-    (cap 0: the rerank source, the delta pairs and the append) as on the
-    driver-side path."""
+    (cap 0: the delta pairs and the append) as on the driver-side
+    path."""
     from magiceye_spark.streaming import drain
 
     seen = _spy_ranking(monkeypatch)
@@ -370,6 +371,90 @@ def test_pq_ingest_batch_in_plan_equal_local(spark, sf_dir, tmp_path, monkeypatc
     admitted = runs["local"][0]
     assert 0 < len(admitted) < corpus.count() - 250 + 20
     assert all(r[0] < 1_000_000 for r in admitted)  # the copies are rejected
+
+
+def test_bounded_add_builds_only_the_assigned_side(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """The driver-side sides are built when read: a bounded
+    ivf_index_add reads only the assigned side, so it converts one
+    LocalRelation, not the probe side too."""
+    corpus = _embs(spark, sf_dir)
+    p = str(tmp_path / "pq")
+    _build(spark, corpus, p, pq=True)
+    schemas = []
+    real = simsearch.local_frame
+
+    def spy(spark_, rows, schema=None):
+        schemas.append(schema)
+        return real(spark_, rows, schema)
+
+    monkeypatch.setattr(simsearch, "local_frame", spy)
+    delta = corpus.where((F.col("vec_id") >= 250) & (F.col("vec_id") < 300))
+    assert annindex.ivf_index_add(spark, p, delta) == 50
+    assert len(schemas) == 1 and schemas[0].startswith("vec_id"), schemas
+
+
+# ------------------------------------------------------- build-order crash
+
+def test_pq_cold_start_crash_between_table_writes(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """A PQ cold start cut between its two table writes leaves the
+    rerank table but no postings (rerank is written first, and the
+    postings mark a complete store), so the restarted stream, with no
+    output_path, cold-starts again and ends where a clean run ends: same
+    postings, rerank ids and admitted ids."""
+    from magiceye_spark.streaming import drain
+
+    corpus = _embs(spark, sf_dir)
+    src = str(tmp_path / "src")
+    corpus.where(F.col("vec_id") < 200).coalesce(1).write.parquet(src)
+    corpus.where((F.col("vec_id") >= 200) & (F.col("vec_id") < 300)).unionByName(
+        corpus.where(F.col("vec_id") < 5).select(  # twins of batch 0
+            (F.col("vec_id") + 1_000_000).alias("vec_id"), "embedding"
+        )
+    ).coalesce(1).write.mode("append").parquet(src)
+
+    def run(name):
+        store = str(tmp_path / name)
+        stream = (
+            spark.readStream.schema(corpus.schema)
+            .option("maxFilesPerTrigger", "1")
+            .parquet(src)
+        )
+        drain(annindex.streaming_ann_ingest(
+            spark, store, stream, str(tmp_path / f"{name}-ckpt"),
+            threshold=0.95, n_probe=8,
+            bootstrap={"pq": True, "n_centroids": 8},
+        ), 600)
+        idx = annindex.read_ivf_index(spark, store)
+        return (
+            _rows(idx.postings),
+            _rows(idx.rerank.select("vec_id")),
+            _rows(idx.postings.select("vec_id")),
+        )
+
+    clean = run("clean")
+    admitted = {r[0] for r in clean[2]}
+    assert set(range(300)) <= admitted
+    assert admitted.isdisjoint(1_000_000 + i for i in range(5))
+
+    real = annindex._write_cells
+    writes = []
+
+    def crash_on_second(df, path, mode, obs=None):
+        writes.append(os.path.basename(path))
+        if len(writes) == 2:
+            raise RuntimeError("crash between the cold start's table writes")
+        return real(df, path, mode, obs)
+
+    monkeypatch.setattr(annindex, "_write_cells", crash_on_second)
+    with pytest.raises(Exception, match="crash between"):
+        run("crashed")
+    monkeypatch.setattr(annindex, "_write_cells", real)
+    assert run("crashed") == clean
+    assert writes == ["rerank", "postings"]
 
 
 # ------------------------------------------------------------ file layout

@@ -177,27 +177,46 @@ def _embs(spark, sf_dir):
 
 
 def test_pq_admission_requires_rerank(spark, sf_dir, tmp_path):
-    """A PRE-r11 PQ store (no rerank table) still refuses rerank-less
-    admission — silently verifying against ADC distances would admit
-    duplicates. r11 stores default to their own rerank table instead
-    (tests/test_r11_ops.py)."""
+    """A PQ store without its rerank table (the original vectors that
+    admission and probe rerank verify against) is refused at every
+    entry point — verifying against ADC distances instead would admit
+    duplicates: read_ivf_index raises, the ingest loop fails its first
+    batch, and the CLI ingest exits 2 before starting the stream."""
     import shutil
 
     from pyspark.sql import functions as F
 
+    from magiceye_spark import cli
     from magiceye_spark.llmops import annindex
+    from magiceye_spark.streaming import drain
 
     emb = _embs(spark, sf_dir)
+    store = str(tmp_path / "pq")
     annindex.write_ivf_index(
-        emb.where(F.col("vec_id") < 200), str(tmp_path / "pq"),
-        pq=True, n_centroids=8,
+        emb.where(F.col("vec_id") < 200), store, pq=True, n_centroids=8
     )
-    shutil.rmtree(str(tmp_path / "pq" / "rerank"))  # pre-r11 store shape
-    idx = annindex.read_ivf_index(spark, str(tmp_path / "pq"))
+    shutil.rmtree(os.path.join(store, "rerank"))
     with pytest.raises(ValueError, match="rerank"):
-        annindex.delta_ann_admit_indexed(
-            idx, emb.where(F.col("vec_id") >= 200), threshold=0.95
-        ).collect()
+        annindex.read_ivf_index(spark, store)
+    src = str(tmp_path / "src")
+    emb.where(F.col("vec_id") >= 200).coalesce(1).write.parquet(src)
+    q = annindex.streaming_ann_ingest(
+        spark, store, spark.readStream.schema(emb.schema).parquet(src),
+        str(tmp_path / "ckpt"), bootstrap={"pq": True},
+    )
+    with pytest.raises(Exception, match="rerank"):
+        drain(q, 300)
+    cli_args = [
+        "ingest", src, store, "--store", "ivf", "--pq",
+        "--checkpoint", str(tmp_path / "cli-ckpt"),
+    ]
+    assert cli.main(cli_args) == 2
+    assert not os.path.exists(os.path.join(store, "rerank"))
+    # without postings too, it is a build cut before its postings: the
+    # CLI cold-starts it again instead of refusing
+    shutil.rmtree(os.path.join(store, "postings"))
+    assert cli.main(cli_args) == 0
+    assert annindex.read_ivf_index(spark, store).rerank.count() > 0
 
 
 def test_pq_admission_equals_flat_path(spark, sf_dir, tmp_path):

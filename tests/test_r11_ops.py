@@ -7,9 +7,6 @@ and replay safety of the PQ loop across the add→commit crash window
 
 import os
 import re
-import shutil
-
-import pytest
 
 from pyspark.sql import functions as F
 
@@ -136,11 +133,6 @@ def test_probe_defaults_to_store_rerank_and_prunes(spark, sf_dir, tmp_path):
     plan = plans.formatted_plan(a)
     filters = re.findall(r"PartitionFilters: \[([^\]]*)\]", plan)
     assert len([f for f in filters if "cell" in f]) >= 2, plan
-    # pre-r11 store: corpus=None must refuse, not silently mis-rank
-    shutil.rmtree(str(tmp_path / "pq" / "rerank"))
-    legacy = annindex.read_ivf_index(spark, str(tmp_path / "pq"))
-    with pytest.raises(ValueError, match="rerank"):
-        annindex.ivf_pq_index_topk(legacy, q, k=5, n_probe=4)
 
 
 def test_pq_compaction_includes_rerank_table(spark, sf_dir, tmp_path):
@@ -201,10 +193,10 @@ def test_pq_loop_replay_after_add_before_commit(spark, sf_dir, tmp_path):
     """The r10 advice's replay-poison shape: crash AFTER the batch's rows
     are stored but BEFORE the streaming checkpoint commits (simulated by
     deleting the commit marker and re-draining). The replayed batch's
-    ids are already stored candidates; the rerank source must supply
-    their originals (store table ∪ the batch itself) instead of
-    raise_error-ing on every restart. End state identical to one clean
-    run."""
+    ids are already stored candidates; the store's rerank table holds
+    their originals, because every append writes it before the postings,
+    so the replay verifies them instead of raise_error-ing on every
+    restart. End state identical to one clean run."""
     emb = _embs(spark, sf_dir)
     src = str(tmp_path / "src")
     b0 = emb.where(F.col("vec_id") < 200)
@@ -244,38 +236,6 @@ def test_pq_loop_replay_after_add_before_commit(spark, sf_dir, tmp_path):
         r["vec_id"] for r in spark.read.parquet(out).select("vec_id").collect()
     )
     assert sink_ids == clean_post
-
-
-def test_cli_resume_pre_r11_pq_store_requires_seed(spark, sf_dir, tmp_path, capsys):
-    """Resuming a PRE-r11 PQ store (originals outside the store) without
-    --bootstrap-from refuses up front with exit 2 — the r10 advice's
-    resume trap, where admission raise_error'd mid-stream instead. With
-    the seed passed, the same resume drains clean."""
-    from magiceye_spark import cli
-
-    emb = _embs(spark, sf_dir)
-    seed_dir = str(tmp_path / "seed")
-    emb.where(F.col("vec_id") < 200).write.parquet(seed_dir)
-    store = str(tmp_path / "pq")
-    annindex.write_ivf_index(
-        spark.read.parquet(seed_dir), store, pq=True, n_centroids=8
-    )
-    shutil.rmtree(os.path.join(store, "rerank"))  # pre-r11 store shape
-    src = str(tmp_path / "src")
-    emb.where(F.col("vec_id") >= 200).coalesce(1).write.parquet(src)
-    rc = cli.main([
-        "ingest", src, store, "--store", "ivf", "--pq",
-        "--checkpoint", str(tmp_path / "ck0"),
-    ])
-    assert rc == 2
-    assert "--bootstrap-from" in capsys.readouterr().err
-    rc = cli.main([
-        "ingest", src, store, "--store", "ivf", "--pq",
-        "--checkpoint", str(tmp_path / "ck1"), "--out", str(tmp_path / "out"),
-        "--bootstrap-from", seed_dir,
-    ])
-    assert rc == 0
-    assert annindex.read_ivf_index(spark, store).postings.count() > 200
 
 
 def test_sig_loop_banding_covers_true_pairs(spark, sf_dir):

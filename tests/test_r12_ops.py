@@ -1,8 +1,7 @@
 """Round-12 regression tests for the r11 advice findings: the PQ
 dedupe_ids lockstep guard, external-rerank cell-column collision safety
-(vs the store's own pruned scan), the _loop_batches_to_stream mtime
-re-pinning fix at 3+ batches, and the cli legacy-PQ resume guard
-accepting --out as an originals source."""
+(vs the store's own pruned scan) and the _loop_batches_to_stream mtime
+re-pinning fix at 3+ batches."""
 
 import os
 
@@ -103,52 +102,3 @@ def test_loop_batches_to_stream_keeps_batch_order_at_three_batches(
     )
     # one batch per timestamp, strictly increasing 1e9, 1e9+1, 1e9+2
     assert mtimes == [1_000_000_000 + k for k in range(3)]
-
-
-def test_cli_legacy_pq_resume_guard_accepts_out(spark, sf_dir, tmp_path):
-    """A legacy (pre-r11) PQ store bootstrapped cold keeps its originals
-    ONLY in the admitted sink: resume with --out alone must pass the
-    guard (and drain correctly); resume with neither --out nor
-    --bootstrap-from must still refuse."""
-    import shutil
-
-    from magiceye_spark import cli
-
-    emb = _embs(spark, sf_dir)
-    store = str(tmp_path / "store")
-    out = str(tmp_path / "out")
-    seed_pq = annindex.write_ivf_index(
-        emb.where(F.col("vec_id") < 200), store, pq=True, n_centroids=4
-    )
-    assert seed_pq.rerank is not None
-    # forge a legacy store: drop the in-store rerank table, park the
-    # originals in the admitted sink (ingest_batch layout)
-    shutil.rmtree(os.path.join(store, "rerank"))
-    # batch ids restart at 0 on the fresh checkpoint and the CURRENT
-    # batch's dir is excluded from the rerank assembly — park the forged
-    # prior-era sink at a high batch id so it is always read
-    emb.where(F.col("vec_id") < 200).write.mode("overwrite").parquet(
-        os.path.join(out, "ingest_batch=999")
-    )
-    src = str(tmp_path / "src")
-    emb.where((F.col("vec_id") >= 200) & (F.col("vec_id") < 260)).coalesce(
-        1
-    ).write.parquet(src)
-    base = [
-        "ingest", src, store, "--store", "ivf", "--pq",
-        "--checkpoint", str(tmp_path / "ck"),
-    ]
-    # no --out, no --bootstrap-from: refuse up front
-    assert cli.main(base) == 2
-    # a PARTIALLY covering sink must also refuse (the guard verifies
-    # stored-id COVERAGE, not flag presence — a seeded legacy store
-    # resumed with only its sink would otherwise raise_error mid-stream)
-    partial = str(tmp_path / "partial_out")
-    emb.where(F.col("vec_id") < 100).write.mode("overwrite").parquet(
-        os.path.join(partial, "ingest_batch=999")
-    )
-    assert cli.main(base + ["--out", partial]) == 2
-    # --out covering every stored id: guard passes, the drain admits
-    assert cli.main(base + ["--out", out]) == 0
-    admitted = spark.read.option("basePath", out).parquet(out)
-    assert admitted.where(F.col("vec_id") >= 200).count() > 0

@@ -1,91 +1,16 @@
-"""Round-13 regression tests for the r12 advice findings: the legacy-PQ
-resume guard's batch-id-collision blind spot (a fresh checkpoint replays
-batch ids from 0, so prior sink partitions at colliding ingest_batch
-values are excluded from rerank assembly and then overwritten — they must
-NOT count as coverage), and local_frame's observable fallback."""
+"""Round-13 regression tests for the r12 advice findings: the driver
+window's structural invariants, embedding normalization, indexed hard
+negatives, and local_frame's observable fallback."""
 
 import logging
-import os
-import shutil
-
-from pyspark.sql import functions as F
 
 from magiceye_spark import io as meio
-from magiceye_spark.llmops import annindex
 
 
 def _embs(spark, sf_dir):
     return spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
         "vec_id", "embedding"
     )
-
-
-def _forge_legacy_pq_store(spark, sf_dir, tmp_path):
-    """Legacy (pre-r11) PQ store: 200 stored vectors, no in-store rerank
-    table, plus a single-file src dir of 60 new vectors."""
-    emb = _embs(spark, sf_dir)
-    store = str(tmp_path / "store")
-    idx = annindex.write_ivf_index(
-        emb.where(F.col("vec_id") < 200), store, pq=True, n_centroids=4
-    )
-    assert idx.rerank is not None
-    shutil.rmtree(os.path.join(store, "rerank"))
-    src = str(tmp_path / "src")
-    emb.where((F.col("vec_id") >= 200) & (F.col("vec_id") < 260)).coalesce(
-        1
-    ).write.parquet(src)
-    return emb, store, src
-
-
-def test_cli_legacy_pq_resume_guard_rejects_colliding_sink(
-    spark, sf_dir, tmp_path
-):
-    """A prior sink whose originals live at ingest_batch=0 must NOT pass
-    the coverage guard on a fresh checkpoint: batch 0 of the new drain
-    excludes (then overwrites) that exact partition, so counting it would
-    green-light the mid-stream raise_error the guard exists to prevent
-    (r12 advice — the r12 test sidestepped this by forging the sink at
-    ingest_batch=999)."""
-    from magiceye_spark import cli
-
-    emb, store, src = _forge_legacy_pq_store(spark, sf_dir, tmp_path)
-    out = str(tmp_path / "out")
-    emb.where(F.col("vec_id") < 200).write.mode("overwrite").parquet(
-        os.path.join(out, "ingest_batch=0")
-    )
-    base = [
-        "ingest", src, store, "--store", "ivf", "--pq",
-        "--checkpoint", str(tmp_path / "ck"), "--out", out,
-    ]
-    # full coverage by row count, zero coverage by collision-aware count
-    assert cli.main(base) == 2
-    # the same sink parked above the replay window passes and drains
-    # (src is one file, maxFilesPerTrigger=1 -> only batch id 0 replays)
-    safe = str(tmp_path / "safe_out")
-    emb.where(F.col("vec_id") < 200).write.mode("overwrite").parquet(
-        os.path.join(safe, "ingest_batch=999")
-    )
-    assert cli.main(base[:-1] + [safe]) == 0
-
-
-def test_cli_legacy_pq_resume_guard_follow_fresh_ckpt_ignores_sink(
-    spark, sf_dir, tmp_path
-):
-    """--follow on a fresh checkpoint replays an unbounded range of batch
-    ids, so NO prior sink partition is collision-safe: the guard must
-    refuse even a sink parked at a high ingest_batch."""
-    from magiceye_spark import cli
-
-    emb, store, src = _forge_legacy_pq_store(spark, sf_dir, tmp_path)
-    out = str(tmp_path / "out")
-    emb.where(F.col("vec_id") < 200).write.mode("overwrite").parquet(
-        os.path.join(out, "ingest_batch=999")
-    )
-    assert cli.main([
-        "ingest", src, store, "--store", "ivf", "--pq",
-        "--checkpoint", str(tmp_path / "ck"), "--out", out,
-        "--follow", "1 second",
-    ]) == 2
 
 
 def test_driver_window_structural_invariants():

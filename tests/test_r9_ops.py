@@ -222,8 +222,8 @@ def test_delta_ann_admit_pq_store_verifies_exactly(spark, sf_dir, tmp_path):
     """Historically (r9) a PQ store REFUSED rerank-less admission; since
     r11 the store carries its own originals, so the default succeeds —
     but it must still verify EXACT cosine, never ADC estimates: admission
-    against the PQ store equals admission against its flat twin. (The
-    refusal contract survives for pre-r11 stores —
+    against the PQ store equals admission against its flat twin. (A PQ
+    store without its rerank table is refused —
     test_r10_ops.test_pq_admission_requires_rerank.)"""
     from magiceye_spark.llmops import annindex
 
