@@ -8,7 +8,8 @@ Design for 100 TB:
   in session.py). No driver-side materialization ever.
 - Column compares are null-safe ``<=>`` expressions inside whole-stage
   codegen; the changed-column list is built with array/filter expressions,
-  not a UDF.
+  not a UDF, rendered as SQL text so building the plan costs a few py4j
+  calls, not a round trip per column and operator.
 - For very wide rows, :func:`diff_data_hash` compares one ``xxhash64`` per
   row first so unchanged rows never evaluate per-column predicates — the
   common fast path when diffing two nearly-identical 100 TB snapshots.
@@ -20,6 +21,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from magiceye_spark.sqltext import ident, lit
 
 #: diff_status values
 ADDED = "added"        # present only in target
@@ -40,15 +43,20 @@ def _compare_cols(base: DataFrame, target: DataFrame, keys: list[str],
     return [c for c in common if c not in set(keys)]
 
 
-def _canon(df: DataFrame, c: str):
-    """Comparison-safe view of a column: MapType has no ordering in Spark
-    (``<=>`` rejects it, and casting to string depends on entry order), so
-    maps are canonicalized to key-sorted entry arrays — content-equal maps
-    compare equal regardless of construction order. Other types pass
-    through."""
+def _canon_sql(df: DataFrame, c: str) -> str:
+    """Comparison-safe view of a column, as SQL text: MapType has no
+    ordering in Spark (``<=>`` rejects it, and casting to string depends on
+    entry order), so maps are canonicalized to key-sorted entry arrays —
+    content-equal maps compare equal regardless of construction order.
+    Other types pass through."""
     if dict(df.dtypes).get(c, "").startswith("map<"):
-        return F.sort_array(F.map_entries(F.col(c)))
-    return F.col(c)
+        return f"sort_array(map_entries({ident(c)}))"
+    return ident(c)
+
+
+def _canon(df: DataFrame, c: str):
+    """:func:`_canon_sql` as a Column."""
+    return F.expr(_canon_sql(df, c))
 
 
 def diff_data(
@@ -70,31 +78,27 @@ def diff_data(
     if how not in ("full", "left"):
         raise ValueError(f"how must be 'full' or 'left', got {how!r}")
     cols = _compare_cols(base, target, keys, compare_cols)
-
-    b = base.select(*keys, *[_canon(base, c).alias(c) for c in cols],
-                    F.lit(True).alias("_b_present"))
-    t = target.select(*keys, *[_canon(target, c).alias(f"{c}__t") for c in cols],
-                      F.lit(True).alias("_t_present"))
+    qk = [ident(k) for k in keys]
+    b = base.selectExpr(*qk, *[f"{_canon_sql(base, c)} AS {ident(c)}" for c in cols],
+                        "true AS _b_present")
+    t = target.selectExpr(*qk, *[f"{_canon_sql(target, c)} AS {ident(c + '__t')}" for c in cols],
+                          "true AS _t_present")
     j = b.join(t, keys, how == "full" and "full_outer" or "left")
 
-    changed_arr = F.filter(
-        F.array(*[
-            F.when(~F.col(c).eqNullSafe(F.col(f"{c}__t")), F.lit(c)) for c in cols
-        ]),
-        lambda x: x.isNotNull(),
-    )
+    changed_arr = "filter(array({}), x -> x IS NOT NULL)".format(", ".join(
+        f"IF(NOT ({ident(c)} <=> {ident(c + '__t')}), {lit(c)}, NULL)" for c in cols
+    ))
     status = (
-        F.when(F.col("_t_present").isNull(), F.lit(REMOVED))
-        .when(F.col("_b_present").isNull(), F.lit(ADDED))
-        .when(F.size(changed_arr) > 0, F.lit(CHANGED))
+        f"CASE WHEN _t_present IS NULL THEN '{REMOVED}' "
+        f"WHEN _b_present IS NULL THEN '{ADDED}' "
+        f"WHEN size({changed_arr}) > 0 THEN '{CHANGED}' END"
     )
-    out = j.withColumn("diff_status", status).where(F.col("diff_status").isNotNull())
-    return out.select(
-        *keys,
+    out = j.withColumn("diff_status", F.expr(status)).where("diff_status IS NOT NULL")
+    return out.selectExpr(
+        *qk,
         "diff_status",
-        F.when(
-            F.col("diff_status") == CHANGED, F.array_join(F.array_sort(changed_arr), ",")
-        ).otherwise(F.lit("")).alias("changed_columns"),
+        f"IF(diff_status = '{CHANGED}', array_join(array_sort({changed_arr}), ','), '')"
+        " AS changed_columns",
     )
 
 

@@ -14,25 +14,33 @@ Reference semantics (``/root/reference/src/action/run/steps/check.rs``):
   — local columns are NOT compared, matching the reference).
 
 The reference does all this with single-threaded HashMap probes and O(n²)
-linear scans (``check.rs:33,51,65,80``). Here every matcher is an equi-join
-Catalyst turns into a broadcast hash join (catalog snapshots are small
-relative to executors) and every property check is a codegen'd predicate —
-the same plan shape scales to a catalog with millions of objects by falling
-back to sort-merge join on the (table_name, object_name) shuffle key.
+linear scans (``check.rs:33,51,65,80``). Here D1 is one anti join, and
+D3-D17 are ONE matcher run once per child kind and fed by a table of
+checks (:data:`_CHECKS`): a row gives the check name, the properties it
+compares and the SQL rendering of one side's value. Per kind the matcher
+scopes the base objects to the target's tables (a semi join), left-joins
+the target objects on (table_name, object name), and builds the candidate
+finding array, the ``missing`` branch and the explode (``inline``) in one
+``selectExpr`` — so each matched object yields its findings in one pass,
+with no per-check re-join.
 
-Each matched object produces its findings in ONE pass: an array of candidate
-finding structs filtered and exploded, so there is exactly one join per
-object kind — no per-check re-join, no shuffle beyond the single left join
-(which itself is shuffle-free when the target side broadcasts).
+Both joins broadcast the target side by default (catalog snapshots are
+small next to executors); ``hint_broadcast=False`` leaves them to
+Catalyst, which turns them into sort-merge joins on the (table_name,
+object_name) key — shuffle-free when both snapshots are bucketed by
+table_name (``SchemaSnapshot.write_bucketed``). Every expression is SQL
+text: a Column tree costs a py4j round trip per node, and the diff is
+metadata-sized, so building it used to cost more than running it.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from magiceye_spark.schema import FINDINGS_SCHEMA
 from magiceye_spark.snapshot import SchemaSnapshot
+from magiceye_spark.sqltext import lit
 
 _FINDING_COLS = [f.name for f in FINDINGS_SCHEMA.fields]
 
@@ -41,55 +49,56 @@ _FINDING_COLS = [f.name for f in FINDINGS_SCHEMA.fields]
 #: empty properties" from "no match").
 _PRESENT = "_magiceye_target_present"
 
+#: kind -> (snapshot attribute, object-name column, checks). A check is
+#: (name, compared properties, SQL rendering of one side with ``{0}``,
+#: ``{1}``… standing for those properties). The order is the reference's:
+#: check.rs:137-233 (columns), :253-342 (indexes), :344-398 (FKs).
+_CHECKS = {
+    "column": ("columns", "column_name", (
+        ("data_type", ("data_type",), "{0}"),
+        ("comment", ("comment",), "{0}"),
+        ("nullable", ("is_nullable",), "IF({0}, 'NULL', 'NOT NULL')"),  # check.rs:171-178
+        ("default", ("column_default",), "{0}"),
+        ("auto_increment", ("is_auto_increment",),
+         "IF({0}, 'AUTO_INCREMENT', 'NOT AUTO_INCREMENT')"),  # check.rs:210-221
+    )),
+    "index": ("indexes", "index_name", (
+        # array <=> is element- AND order-wise, exactly the reference's
+        # Vec<String> compare (check.rs:267); rendered joined by ", " (:268)
+        ("index_columns", ("columns",), "array_join({0}, ', ')"),
+        ("index_predicate", ("predicate",), "{0}"),
+        ("index_unique", ("is_unique",), "IF({0}, 'UNIQUE', 'NOT UNIQUE')"),
+    )),
+    "fk": ("fks", "fk_name", (
+        # only the referenced side; the local column list is not compared
+        # (check.rs:358), rendered t.c (check.rs:371)
+        ("fk_ref", ("ref_table", "ref_column"), "concat_ws('.', {0}, {1})"),
+    )),
+}
 
-def _empty_str(c: Column) -> Column:
-    return F.coalesce(c, F.lit(""))
 
-
-def _finding(check: str, base_value: Column, target_value: Column) -> Column:
-    return F.struct(
-        F.lit(check).alias("check"),
-        _empty_str(base_value).alias("base_value"),
-        _empty_str(target_value).alias("target_value"),
+def _finding(check: str, base_value: str, target_value: str) -> str:
+    return (
+        f"named_struct('check', {lit(check)}, 'base_value', coalesce({base_value}, ''), "
+        f"'target_value', coalesce({target_value}, ''))"
     )
 
 
-def _check(cond: Column, check: str, base_value: Column, target_value: Column) -> Column:
-    """A candidate finding: the struct when the property differs, else NULL
-    (filtered out before explode)."""
-    return F.when(cond, _finding(check, base_value, target_value))
-
-
-def _explode_findings(
-    joined: DataFrame, kind: str, object_name_col: Column, checks: list[Column]
-) -> DataFrame:
-    """Shared tail for every matcher: one row in -> 0..n finding rows out.
-
-    Missing target object -> single 'missing' finding; matched object -> one
-    finding per differing property; identical object -> zero rows (explode of
-    an empty array drops the row, mirroring the reference's has_report flag,
-    check.rs:41-46,109-111).
-    """
-    candidates = F.filter(F.array(*checks), lambda x: x.isNotNull())
-    findings = F.when(
-        F.col(_PRESENT).isNull(),
-        F.array(_finding("missing", F.lit(""), F.lit(""))),
-    ).otherwise(candidates)
+def _findings_sql(checks) -> str:
+    """One row in -> its findings array: a missing target object -> the
+    single 'missing' finding; a matched object -> one finding per differing
+    property; an identical object -> an empty array, which ``inline`` drops
+    (mirroring the reference's has_report flag, check.rs:41-46,109-111)."""
+    candidates = []
+    for name, props, render in checks:
+        differs = " OR ".join(f"NOT ({p} <=> {p}_t)" for p in props)
+        base = render.format(*props)
+        target = render.format(*[f"{p}_t" for p in props])
+        candidates.append(f"IF({differs}, {_finding(name, base, target)}, NULL)")
+    missing = _finding("missing", "''", "''")
     return (
-        joined.select(
-            F.col("table_name"),
-            F.lit(kind).alias("object_kind"),
-            object_name_col.alias("object_name"),
-            F.explode(findings).alias("f"),
-        )
-        .select(
-            "table_name",
-            "object_kind",
-            "object_name",
-            F.col("f.check").alias("check"),
-            F.col("f.base_value").alias("base_value"),
-            F.col("f.target_value").alias("target_value"),
-        )
+        f"IF({_PRESENT} IS NULL, array({missing}), "
+        f"filter(array({', '.join(candidates)}), x -> x IS NOT NULL))"
     )
 
 
@@ -120,14 +129,31 @@ def _left_join(
     match marker. Broadcast hint on the target side by default — catalog
     snapshots are tiny next to the cluster; Catalyst falls back to SMJ when
     stats say otherwise."""
-    t = target_df.select(
-        *[F.col(k) for k in keys],
-        *[F.col(c).alias(f"{c}_t") for c in target_df.columns if c not in keys],
-        F.lit(True).alias(_PRESENT),
+    t = target_df.selectExpr(
+        *keys,
+        *[f"{c} AS {c}_t" for c in target_df.columns if c not in keys],
+        f"true AS {_PRESENT}",
     )
     if broadcast:
         t = F.broadcast(t)
     return base_df.join(t, keys, "left")
+
+
+def _match(
+    base: SchemaSnapshot, target: SchemaSnapshot, kind: str, hint_broadcast: bool
+) -> DataFrame:
+    """The D3-D17 matcher for one child kind (see :data:`_CHECKS`)."""
+    attr, name_col, checks = _CHECKS[kind]
+    scoped = _scope_to_target_tables(getattr(base, attr), target, hint_broadcast)
+    j = _left_join(
+        scoped, getattr(target, attr), ["table_name", name_col], broadcast=hint_broadcast
+    )
+    return j.selectExpr(
+        "table_name",
+        f"{lit(kind)} AS object_kind",
+        f"{name_col} AS object_name",
+        f"inline({_findings_sql(checks)})",
+    )
 
 
 def diff_tables(
@@ -136,103 +162,31 @@ def diff_tables(
     """D1: tables in base but not target (check.rs:94-107) — a left anti join."""
     t = F.broadcast(target.tables) if hint_broadcast else target.tables
     missing = base.tables.join(t, "table_name", "left_anti")
-    return missing.select(
+    return missing.selectExpr(
         "table_name",
-        F.lit("table").alias("object_kind"),
-        F.col("table_name").alias("object_name"),
-        F.lit("missing").alias("check"),
-        F.lit("").alias("base_value"),
-        F.lit("").alias("target_value"),
+        "'table' AS object_kind",
+        "table_name AS object_name",
+        "'missing' AS `check`",
+        "'' AS base_value",
+        "'' AS target_value",
     )
 
 
 def diff_columns(
     base: SchemaSnapshot, target: SchemaSnapshot, hint_broadcast: bool = True
 ) -> DataFrame:
-    """D3-D9: per-column presence + property checks (check.rs:122-251).
-
-    Rendered values follow the reference exactly: nullable as NULL/NOT NULL
-    (check.rs:171-178), auto_increment as AUTO_INCREMENT/NOT AUTO_INCREMENT
-    (check.rs:210-221); check order data_type, comment, nullable, default,
-    auto_increment matches check.rs:137-233.
-    """
-    scoped = _scope_to_target_tables(base.columns, target, hint_broadcast)
-    j = _left_join(
-        scoped, target.columns, ["table_name", "column_name"], broadcast=hint_broadcast
-    )
-    render_null = lambda c: F.when(c, F.lit("NULL")).otherwise(F.lit("NOT NULL"))
-    render_auto = lambda c: F.when(c, F.lit("AUTO_INCREMENT")).otherwise(
-        F.lit("NOT AUTO_INCREMENT")
-    )
-    checks = [
-        _check(
-            ~F.col("data_type").eqNullSafe(F.col("data_type_t")),
-            "data_type",
-            F.col("data_type"),
-            F.col("data_type_t"),
-        ),
-        _check(
-            ~F.col("comment").eqNullSafe(F.col("comment_t")),
-            "comment",
-            F.col("comment"),
-            F.col("comment_t"),
-        ),
-        _check(
-            ~F.col("is_nullable").eqNullSafe(F.col("is_nullable_t")),
-            "nullable",
-            render_null(F.col("is_nullable")),
-            render_null(F.col("is_nullable_t")),
-        ),
-        _check(
-            ~F.col("column_default").eqNullSafe(F.col("column_default_t")),
-            "default",
-            F.col("column_default"),
-            F.col("column_default_t"),
-        ),
-        _check(
-            ~F.col("is_auto_increment").eqNullSafe(F.col("is_auto_increment_t")),
-            "auto_increment",
-            render_auto(F.col("is_auto_increment")),
-            render_auto(F.col("is_auto_increment_t")),
-        ),
-    ]
-    return _explode_findings(j, "column", F.col("column_name"), checks)
+    """D3-D9: per-column presence + data_type/comment/nullable/default/
+    auto_increment checks (check.rs:122-251); nullable renders as
+    NULL/NOT NULL, auto_increment as AUTO_INCREMENT/NOT AUTO_INCREMENT."""
+    return _match(base, target, "column", hint_broadcast)
 
 
 def diff_indexes(
     base: SchemaSnapshot, target: SchemaSnapshot, hint_broadcast: bool = True
 ) -> DataFrame:
-    """D10-D14: index presence + columns/predicate/uniqueness
-    (check.rs:253-342). Array `!=` is element- AND order-wise, exactly the
-    reference's Vec<String> compare (check.rs:267) — no sort, no set-ify.
-    """
-    scoped = _scope_to_target_tables(base.indexes, target, hint_broadcast)
-    j = _left_join(
-        scoped, target.indexes, ["table_name", "index_name"], broadcast=hint_broadcast
-    )
-    render_cols = lambda c: F.array_join(c, ", ")  # check.rs:268 join(", ")
-    render_uniq = lambda c: F.when(c, F.lit("UNIQUE")).otherwise(F.lit("NOT UNIQUE"))
-    checks = [
-        _check(
-            ~(F.col("columns").eqNullSafe(F.col("columns_t"))),
-            "index_columns",
-            render_cols(F.col("columns")),
-            render_cols(F.col("columns_t")),
-        ),
-        _check(
-            ~F.col("predicate").eqNullSafe(F.col("predicate_t")),
-            "index_predicate",
-            F.col("predicate"),
-            F.col("predicate_t"),
-        ),
-        _check(
-            ~F.col("is_unique").eqNullSafe(F.col("is_unique_t")),
-            "index_unique",
-            render_uniq(F.col("is_unique")),
-            render_uniq(F.col("is_unique_t")),
-        ),
-    ]
-    return _explode_findings(j, "index", F.col("index_name"), checks)
+    """D10-D14: index presence + columns (order-sensitive, no sort, no
+    set-ify)/predicate/uniqueness (check.rs:253-342)."""
+    return _match(base, target, "index", hint_broadcast)
 
 
 def diff_foreign_keys(
@@ -242,21 +196,7 @@ def diff_foreign_keys(
     (check.rs:344-398). Only the referenced side is compared; the local
     column list is deliberately ignored, matching the reference
     (check.rs:358 compares `foreign_column` only)."""
-    scoped = _scope_to_target_tables(base.fks, target, hint_broadcast)
-    j = _left_join(
-        scoped, target.fks, ["table_name", "fk_name"], broadcast=hint_broadcast
-    )
-    render_ref = lambda t, c: F.concat_ws(".", t, c)  # check.rs:371 t.c rendering
-    checks = [
-        _check(
-            ~F.col("ref_table").eqNullSafe(F.col("ref_table_t"))
-            | ~F.col("ref_column").eqNullSafe(F.col("ref_column_t")),
-            "fk_ref",
-            render_ref(F.col("ref_table"), F.col("ref_column")),
-            render_ref(F.col("ref_table_t"), F.col("ref_column_t")),
-        ),
-    ]
-    return _explode_findings(j, "fk", F.col("fk_name"), checks)
+    return _match(base, target, "fk", hint_broadcast)
 
 
 def diff_timeline(snapshots: list[tuple[str, SchemaSnapshot]]) -> DataFrame:
@@ -287,8 +227,8 @@ def diff_schemas(
     The findings SET is deterministic; row order is left to the engine here
     (a global orderBy would add a range-partitioner sampling pass that
     re-executes the whole union). Deterministic ORDER is applied where a
-    human reads it — ``report.grouped_report`` sorts tables and sorts each
-    table's findings — fixing the reference's nondeterministic HashMap
+    human reads it — ``report.write_report`` sorts tables and each table's
+    findings on the driver — fixing the reference's nondeterministic HashMap
     iteration (check.rs:33) without taxing the operator layer."""
     findings = (
         diff_tables(base, target, hint_broadcast)

@@ -7,6 +7,12 @@ Message templates reproduce the reference byte-for-byte (English and Korean;
 renders strings inline inside every predicate arm; we render at the edge from
 the structured findings DF so the operator layer stays language-neutral.
 
+Two sinks group the rendered findings per table: :func:`write_report`
+collects them once and groups and orders them on the driver (a catalog
+diff is metadata-sized), and :func:`grouped_report` does the same in Spark
+for lake-scale reports written with ``write.json``. Both order by one key
+(:func:`_ranked`), so they produce the same document.
+
 Report envelope matches ``ReportSchema { report_table_list: [ { table_name,
 report_list } ] }`` (check.rs:6-15) with one deliberate improvement: output
 is sorted by table_name and by (object kind, object name, check) within a
@@ -17,12 +23,14 @@ table — the reference's HashMap iteration order is nondeterministic
 from __future__ import annotations
 
 import json
-from itertools import chain
+from itertools import groupby
+from operator import itemgetter
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from magiceye_spark.schema import CHECK_RANK, OBJECT_KIND_RANK
+from magiceye_spark.sqltext import lit
 
 _KIND_LABEL = {
     "table": "Table",
@@ -57,35 +65,47 @@ _PHRASES = {
 }
 
 
-def _map_literal(mapping: dict[str, str]) -> Column:
-    return F.create_map(*[F.lit(x) for x in chain.from_iterable(mapping.items())])
+def _case(col: str, mapping: dict) -> str:
+    """SQL ``CASE col WHEN k THEN v … END`` (NULL for an unknown key)."""
+    arms = " ".join(f"WHEN {lit(k)} THEN {lit(str(v))}" for k, v in mapping.items())
+    return f"CASE {col} {arms} END"
 
 
 def render_findings(findings: DataFrame, language: str = "english") -> DataFrame:
     """Add a localized ``report`` string column to a findings DataFrame.
 
-    Pure column expressions (map lookup + concat) — whole-stage codegen,
-    no UDF, no driver round-trip.
+    One SQL expression (CASE lookups + concat) — whole-stage codegen, no
+    UDF, one py4j call to build.
     """
     lang_idx = {"english": 0, "korean": 1}[language.lower()]
-    label = _map_literal(_KIND_LABEL)[F.col("object_kind")]
-    phrase = _map_literal({k: v[lang_idx] for k, v in _PHRASES.items()})[F.col("check")]
-    qualname = F.when(
-        F.col("object_kind") == "table", F.col("object_name")
-    ).otherwise(F.concat_ws(".", F.col("table_name"), F.col("object_name")))
-    head = F.concat(label, F.lit(": "), qualname, phrase)
-    message = F.when(F.col("check") == "missing", head).otherwise(
-        F.concat(head, F.lit(" => "), F.col("base_value"), F.lit(" != "), F.col("target_value"))
+    label = _case("object_kind", _KIND_LABEL)
+    phrase = _case("`check`", {k: v[lang_idx] for k, v in _PHRASES.items()})
+    qualname = "IF(object_kind = 'table', object_name, concat_ws('.', table_name, object_name))"
+    head = f"{label}, ': ', {qualname}, {phrase}"
+    message = (
+        f"IF(`check` = 'missing', concat({head}), "
+        f"concat({head}, ' => ', base_value, ' != ', target_value))"
     )
-    return findings.withColumn("report", message)
+    return findings.withColumn("report", F.expr(message))
 
 
-def _rank(col: str, ranks: dict[str, int]) -> Column:
-    return F.coalesce(_map_literal({k: str(v) for k, v in ranks.items()})[F.col(col)], F.lit("9"))
+def _ranked(findings: DataFrame, language: str) -> DataFrame:
+    """Rendered findings as (table_name, k, o, c, report): the report's
+    order key is (table_name, kind rank, object name, check rank, message),
+    compared field by field. Spark compares strings by UTF-8 bytes and
+    Python by code points; the two orders agree."""
+    return render_findings(findings, language).selectExpr(
+        "table_name",
+        f"coalesce({_case('object_kind', OBJECT_KIND_RANK)}, '9') AS k",
+        "object_name AS o",
+        f"coalesce({_case('`check`', CHECK_RANK)}, '9') AS c",
+        "report",
+    )
 
 
 def grouped_report(findings: DataFrame, language: str = "english") -> DataFrame:
-    """R2: group rendered findings per table → (table_name, report_list).
+    """R2: group rendered findings per table → (table_name, report_list), in
+    Spark — the lake-scale path (``grouped_report(f).write.json(path)``).
 
     Ordering inside the list is made deterministic by sorting an array of
     (rank…, message) structs AFTER the aggregation — ``sort_array`` over
@@ -94,22 +114,12 @@ def grouped_report(findings: DataFrame, language: str = "english") -> DataFrame:
     naturally (no group), matching the reference's has_report flag
     (check.rs:41-46,109-111).
     """
-    rendered = render_findings(findings, language)
     return (
-        rendered.groupBy("table_name")
+        _ranked(findings, language)
+        .groupBy("table_name")
         .agg(
-            F.transform(
-                F.sort_array(
-                    F.collect_list(
-                        F.struct(
-                            _rank("object_kind", OBJECT_KIND_RANK).alias("k"),
-                            F.col("object_name").alias("o"),
-                            _rank("check", CHECK_RANK).alias("c"),
-                            F.col("report").alias("report"),
-                        )
-                    )
-                ),
-                lambda x: x["report"],
+            F.expr(
+                "transform(sort_array(collect_list(struct(k, o, c, report))), x -> x.report)"
             ).alias("report_list")
         )
         .orderBy("table_name")
@@ -122,15 +132,21 @@ def write_report(findings: DataFrame, path: str, language: str = "english") -> d
     background.rs:58-66 writes pretty JSON to a timestamped file — the path
     is the caller's choice here).
 
-    The grouped report is metadata-sized (one row per *changed table*), so a
-    driver-side collect is appropriate; for lake-scale reports use
+    The findings of a catalog diff are metadata-sized, so they are collected
+    once, rendered and with their order key, and grouped and ordered on the
+    driver: one job, no groupBy shuffle, no range sort. The document equals
+    ``grouped_report(findings).collect()``; for lake-scale reports use
     ``grouped_report(f).write.json(path)`` instead.
     """
-    rows = grouped_report(findings, language).collect()
+    # NULL sorts first, as in Spark's ascending sorts
+    rows = sorted(
+        _ranked(findings, language).collect(),
+        key=lambda r: tuple((v is not None, v or "") for v in r),
+    )
     doc = {
         "report_table_list": [
-            {"table_name": r["table_name"], "report_list": list(r["report_list"])}
-            for r in rows
+            {"table_name": table, "report_list": [r[-1] for r in group]}
+            for table, group in groupby(rows, key=itemgetter(0))
         ]
     }
     with open(path, "w", encoding="utf-8") as fh:

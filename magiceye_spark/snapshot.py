@@ -12,7 +12,6 @@ from dataclasses import dataclass
 from typing import Iterable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from magiceye_spark.schema import (
     COLUMNS_SCHEMA,
@@ -20,6 +19,7 @@ from magiceye_spark.schema import (
     INDEXES_SCHEMA,
     TABLES_SCHEMA,
 )
+from magiceye_spark.sqltext import ident
 
 _KINDS = ("tables", "columns", "indexes", "fks")
 _SCHEMAS = {
@@ -30,22 +30,47 @@ _SCHEMAS = {
 }
 
 
+#: SQL default per property type: NULL text is '', NULL bool is false, a
+#: NULL list is empty
+_EMPTY = {"string": "''", "boolean": "false", "array": "array()"}
+_NORMALIZED = {
+    kind: [
+        f"coalesce({ident(f.name)}, {_EMPTY[f.dataType.typeName()]}) AS {ident(f.name)}"
+        for f in schema.fields
+    ]
+    for kind, schema in _SCHEMAS.items()
+}
+
+
 def _normalize(df: DataFrame, kind: str) -> DataFrame:
     """Coalesce NULL text properties to '' and NULL bools to False, matching
     the reference's scan-time normalization (src/sql/postgres.rs:54-56,
-    src/sql/mysql.rs:42-44) so inequality checks never hit SQL NULL traps."""
-    schema = _SCHEMAS[kind]
-    cols = []
-    for field in schema.fields:
-        c = F.col(field.name)
-        if field.dataType.typeName() == "string":
-            c = F.coalesce(c, F.lit(""))
-        elif field.dataType.typeName() == "boolean":
-            c = F.coalesce(c, F.lit(False))
-        elif field.dataType.typeName() == "array":
-            c = F.coalesce(c, F.array().cast(field.dataType))
-        cols.append(c.alias(field.name))
-    return df.select(*cols)
+    src/sql/mysql.rs:42-44) so inequality checks never hit SQL NULL traps.
+    One ``selectExpr`` of SQL text: one py4j call, not a Column tree."""
+    return df.selectExpr(*_NORMALIZED[kind])
+
+
+def _require_columns(spark: SparkSession, df: DataFrame, path: str, kind: str) -> None:
+    """Fail loudly when a kind directory's files lack a snapshot column.
+
+    A read with a declared schema turns an absent column into NULL, and
+    :func:`_normalize` would then turn that into ''. So the footer of the
+    first data file is read through the session's Hadoop ``FileSystem``,
+    on the driver — the same file schema inference would open, but no
+    Spark job."""
+    files = sorted(df.inputFiles())
+    if not files:
+        raise ValueError(f"snapshot directory {path} holds no parquet file")
+    jvm = spark._jvm
+    footer = jvm.org.apache.parquet.hadoop.ParquetFileReader.readFooter(
+        spark._jsc.hadoopConfiguration(), jvm.org.apache.hadoop.fs.Path(files[0])
+    )
+    schema = footer.getFileMetaData().getSchema()
+    # the scan resolves columns case-insensitively (spark.sql.caseSensitive)
+    present = {schema.getFieldName(i).lower() for i in range(schema.getFieldCount())}
+    missing = [f.name for f in _SCHEMAS[kind].fields if f.name.lower() not in present]
+    if missing:
+        raise ValueError(f"snapshot file {files[0]} lacks column(s) {missing}")
 
 
 @dataclass(frozen=True)
@@ -89,10 +114,15 @@ class SchemaSnapshot:
     def read_parquet(cls, spark: SparkSession, path: str) -> "SchemaSnapshot":
         """Read a snapshot previously persisted with :meth:`write_parquet`.
 
-        Parquet is the snapshot interchange format (self-describing schema,
-        column-pruned scans); layout is ``{path}/{tables,columns,indexes,fks}``.
+        Parquet is the snapshot interchange format (column-pruned scans);
+        layout is ``{path}/{tables,columns,indexes,fks}``. Each kind is read
+        with its declared schema, so no schema-inference job runs; a kind
+        whose files lack a snapshot column raises ``ValueError``.
         """
-        dfs = {k: spark.read.parquet(f"{path}/{k}") for k in _KINDS}
+        dfs = {}
+        for k in _KINDS:
+            dfs[k] = spark.read.schema(_SCHEMAS[k]).parquet(f"{path}/{k}")
+            _require_columns(spark, dfs[k], f"{path}/{k}", k)
         return cls.from_dataframes(dfs["tables"], dfs["columns"], dfs["indexes"], dfs["fks"])
 
     def write_parquet(self, path: str, mode: str = "overwrite") -> None:

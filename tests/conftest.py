@@ -45,3 +45,35 @@ def registry_sweep(spark, sf_dir):
         }
 
     return compare(spark, sf_dir, inspect=inspect), facts
+
+
+@pytest.fixture
+def jobs_started(spark):
+    """``jobs_started(fn)`` runs ``fn`` under a job group of its own and
+    returns the number of Spark jobs it started.
+
+    The status tracker is fed by the listener bus, asynchronously; a fence
+    job started after ``fn`` shows up only after every event before it, so
+    the count is read once the fence is seen."""
+    import time
+    import uuid
+
+    sc = spark.sparkContext
+    st = sc.statusTracker()
+
+    def run(fn) -> int:
+        tag = uuid.uuid4().hex
+        group, fence = f"jobs-started-{tag}", f"jobs-fence-{tag}"
+        sc.setJobGroup(group, "counted")
+        try:
+            fn()
+        finally:
+            sc.setJobGroup(fence, "fence")
+            sc.parallelize([0], 1).count()
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        deadline = time.time() + 30
+        while not st.getJobIdsForGroup(fence) and time.time() < deadline:
+            time.sleep(0.05)
+        return len(st.getJobIdsForGroup(group))
+
+    return run

@@ -15,6 +15,7 @@ from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
 from magiceye_spark.diff.core import diff_schemas
+from magiceye_spark.report import grouped_report, write_report
 from magiceye_spark.snapshot import SchemaSnapshot
 
 TABLES = [f"t{i}" for i in range(4)]
@@ -156,3 +157,31 @@ def test_diff_matches_reference_algorithm(spark, pair):
         ).collect()
     }
     assert got == _expected(base, target)
+
+
+@settings(
+    max_examples=10,
+    deadline=None,
+    suppress_health_check=[
+        HealthCheck.too_slow,
+        HealthCheck.data_too_large,
+        HealthCheck.function_scoped_fixture,
+    ],
+)
+@given(pair=snapshot_pairs)
+def test_driver_grouped_report_equals_spark_grouped(spark, tmp_path, pair):
+    """``write_report`` groups and orders on the driver; the lake-scale
+    ``grouped_report`` does it in Spark. Same document, same order, in
+    both languages."""
+    base, target = pair
+    diffed = diff_schemas(_to_snapshot(spark, base), _to_snapshot(spark, target))
+    # both sinks read the same findings, held as a local relation so each
+    # report does not re-run the diff's joins
+    findings = spark.createDataFrame(diffed.collect(), diffed.schema)
+    for language in ("english", "korean"):
+        doc = write_report(findings, str(tmp_path / "report.json"), language)
+        grouped = [
+            {"table_name": r["table_name"], "report_list": list(r["report_list"])}
+            for r in grouped_report(findings, language).collect()
+        ]
+        assert doc == {"report_table_list": grouped}

@@ -57,3 +57,28 @@ def test_render_findings_is_pure_column_expr(spark):
     findings = diff_schemas(mysql_base(spark), mysql_target(spark))
     plan = render_findings(findings)._jdf.queryExecution().executedPlan().toString()
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
+
+
+def test_write_report_equals_grouped_report_with_nulls(spark, tmp_path):
+    """A findings frame from outside ``diff_schemas`` may hold NULLs (here a
+    NULL table and an unknown check, whose message is NULL): the driver-side
+    grouping orders them first, as ``grouped_report`` does in Spark."""
+    from magiceye_spark.schema import FINDINGS_SCHEMA
+
+    findings = spark.createDataFrame(
+        [
+            ("b", "column", "x", "data_type", "int", "text"),
+            ("b", "column", "x", "renamed", "", ""),
+            ("b", "column", "x", "comment", "", "c"),
+            (None, "table", "t", "missing", "", ""),
+            ("a", "fk", "f", "fk_ref", "r.id", "s.id"),
+        ],
+        FINDINGS_SCHEMA,
+    )
+    doc = write_report(findings, str(tmp_path / "report.json"))
+    grouped = [
+        {"table_name": r["table_name"], "report_list": list(r["report_list"])}
+        for r in grouped_report(findings).collect()
+    ]
+    assert doc == {"report_table_list": grouped}
+    assert [t["table_name"] for t in doc["report_table_list"]] == [None, "a", "b"]
