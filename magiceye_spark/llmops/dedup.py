@@ -687,23 +687,19 @@ def _lsh_pairs_from_sigs(
 
 # --------------------------------------------- near-dup clusters → keep-set
 
-def cluster_pairs(pairs: DataFrame, max_iter: int = 20) -> DataFrame:
+def cluster_pairs(pairs: DataFrame) -> DataFrame:
     """Connected components over a near-dup pair graph: (id, cluster)
     where cluster is the smallest doc_id reachable through the pair
     edges. Thin adapter over
-    :func:`magiceye_spark.llmops.graph.connected_components` — the
-    pointer-jumped min-label propagation (O(log diameter) rounds,
-    lineage truncated per round), which superseded this module's original
-    plain O(diameter) loop so the repo has ONE iterative-closure engine.
+    :func:`magiceye_spark.llmops.graph.connected_components`, the ONE
+    iterative-closure engine of the package (driver-side union-find for
+    small graphs, the pointer-jumped min-label fixpoint above the cap);
+    :func:`bucket_components` feeds it too.
     """
     from magiceye_spark.llmops.graph import connected_components
 
     return connected_components(
-        pairs.select("doc_a", "doc_b"),
-        src="doc_a",
-        dst="doc_b",
-        comp_col="cluster",
-        max_iter=max_iter,
+        pairs.select("doc_a", "doc_b"), src="doc_a", dst="doc_b", comp_col="cluster"
     ).select(F.col("node").alias("id"), "cluster")
 
 
@@ -728,56 +724,33 @@ def dedup_near(
 # --------------------------------------- fused LSH clustering (no pair join)
 
 def bucket_components(
-    banded: DataFrame, id_col: str = "doc_id", bucket_col: str = "bkey",
-    max_iter: int = 10,
+    banded: DataFrame, id_col: str = "doc_id", bucket_col: str = "bkey"
 ) -> DataFrame:
-    """Connected components of the id↔bucket BIPARTITE graph by min-label
-    propagation: (id_col, cluster) where cluster is the smallest id
-    reachable through shared buckets — WITHOUT ever materializing candidate
-    pairs.
+    """Connected components of the id↔bucket BIPARTITE graph: (id_col,
+    cluster) where cluster is the smallest id reachable through shared
+    buckets — WITHOUT ever materializing candidate pairs.
 
-    Per iteration: one groupBy(bucket) + one groupBy(id) over the banded
-    rows — linear in corpus size regardless of duplication factor (the
-    band-bucket self-join is O(cluster²) per bucket). Iterations are
-    driver-side loops over lazy plans with ``localCheckpoint`` truncating
-    lineage each round; convergence in O(component diameter) rounds, tiny
-    for dense near-dup clusters.
+    Each (id, bucket) row becomes one STAR edge (id, min id of its
+    bucket): one window over the bucket, linear in the banded rows
+    regardless of duplication factor (the band-bucket self-join is
+    O(cluster²) per bucket). Every member of a bucket is joined to the
+    bucket's minimum, so the star graph has the bipartite graph's
+    connectivity. The distinct edges go to
+    :func:`magiceye_spark.llmops.graph.connected_components`; a bucket's
+    minimum keeps its self-edge, so ids that share no bucket come out as
+    singletons. Ids are compared as longs, and both output columns are
+    long.
     """
-    banded = banded.select(id_col, bucket_col).localCheckpoint()
-    labels = banded.select(id_col).distinct().withColumn(
-        "cluster", F.col(id_col)
-    ).localCheckpoint()
-    for _ in range(max_iter):
-        bucket_min = (
-            banded.join(labels, id_col)
-            .groupBy(bucket_col)
-            .agg(F.min("cluster").alias("bmin"))
-        )
-        doc_min = (
-            banded.join(bucket_min, bucket_col)
-            .groupBy(id_col)
-            .agg(F.min("bmin").alias("cand"))
-        )
-        new_labels = (
-            labels.join(doc_min, id_col, "left")
-            .select(
-                id_col,
-                F.least(
-                    F.col("cluster"), F.coalesce(F.col("cand"), F.col("cluster"))
-                ).alias("cluster"),
-            )
-            .localCheckpoint()
-        )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), id_col)
-            .where(F.col("n.cluster") != F.col("o.cluster"))
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            break
-    return labels
+    from magiceye_spark.llmops.graph import connected_components
+
+    ids = F.col(id_col).cast("long")
+    star = banded.select(
+        ids.alias("src"),
+        F.min(ids).over(Window.partitionBy(bucket_col)).alias("dst"),
+    ).distinct()
+    return connected_components(star, comp_col="cluster").select(
+        F.col("node").alias(id_col), "cluster"
+    )
 
 
 def minhash_cluster_reps(
@@ -786,7 +759,6 @@ def minhash_cluster_reps(
     bands: int = 8,
     shingle_n: int = 3,
     text_col: str = "text",
-    max_iter: int = 10,
 ) -> DataFrame:
     """Near-dup clusters straight from MinHash LSH buckets — no pair join.
     (doc_id, cluster) with cluster = min doc_id of the bucket-connected
@@ -814,7 +786,7 @@ def minhash_cluster_reps(
             )
         ).alias("bkey"),
     )
-    return bucket_components(banded, "doc_id", "bkey", max_iter)
+    return bucket_components(banded, "doc_id", "bkey")
 
 
 def dedup_near_fused(

@@ -12,27 +12,34 @@ Reference parity: the reference (a schema-diff engine,
 src/action/run/steps/check.rs:17-398) has no graph operators; this module
 is part of the §2.4 LLM-pipeline mandate (dedup → clusters → keepers).
 
-Algorithm: iterative min-label propagation with pointer jumping
-(path compression), the DataFrame rendering of Pregel-style connected
-components:
+Algorithm: one closure engine, :func:`connected_components`, which every
+closure in the package calls — the Jaccard cluster operators below, the
+store admission verdict (:func:`indexed_admission_rejects`), and the
+pair and LSH-bucket clustering of :mod:`.dedup`. It has two paths, picked
+by the edge count against ``SMALL_GRAPH_EDGE_CAP``:
 
-* each node starts labeled with itself;
-* each round every node takes the min label across itself and its
-  neighbors (one hash join edge⋈label + one groupBy min — both shuffle
-  on node id, so AQE reuses the exchange);
-* then labels are compressed through themselves (``comp ← comp(comp)``),
-  which makes label information travel 2^k hops after k rounds instead
-  of k — O(log diameter) rounds instead of O(diameter).
+* small graphs: union-find over the collected edge list on the driver,
+  returned as a LocalRelation;
+* larger graphs: iterative min-label propagation with pointer jumping
+  (path compression), the DataFrame rendering of Pregel-style connected
+  components. Each node starts labeled with itself; each round every
+  node takes the min label across itself and its neighbors (one hash
+  join edge⋈label + one groupBy min — both shuffle on node id, so AQE
+  reuses the exchange); then labels are compressed through themselves
+  (``comp ← comp(comp)``), which makes label information travel 2^k hops
+  after k rounds instead of k — O(log diameter) rounds instead of
+  O(diameter).
 
-Near-dup graphs are shallow (duplicates cluster around source templates;
-the shipped corpus measures diameter 7 at sf0.001 AND sf0.01), but the
-pointer jump is what makes the loop safe at 100 TB where chains through
-hub documents can be arbitrarily deep: 20 rounds cover diameter ~2^20.
-Each round is two bounded shuffles over the EDGE list plus one over the
-(smaller) label list; the driver sees only one scalar per round (the
-Σlabel convergence witness — labels are min-monotone, so the sum
-strictly decreases until the fixpoint) — no row data ever leaves the
-executors.
+Both paths label a node with the minimum node id of its component, and
+``tests/test_r10_ops.py`` pins them equal. Near-dup graphs are shallow
+(duplicates cluster around source templates; the shipped corpus measures
+diameter 7 at sf0.001 AND sf0.01), but the pointer jump is what makes the
+loop safe at 100 TB where chains through hub documents can be arbitrarily
+deep: 20 rounds cover diameter ~2^20. Each round is two bounded shuffles
+over the EDGE list plus one over the (smaller) label list; the driver
+sees only one scalar per round (the Σlabel convergence witness — labels
+are min-monotone, so the sum strictly decreases until the fixpoint) — no
+row data ever leaves the executors.
 """
 
 from __future__ import annotations
@@ -40,21 +47,19 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from magiceye_spark.io import local_frame
 
-#: Directed-symmetric-edge count below which the closure runs driver-side
-#: (union-find over the collected edge list) instead of as a distributed
-#: fixpoint. Per-batch admission graphs (~16k edges) were paying ~5 s of
-#: O(log diameter) pointer-jump ROUNDS — each round a Spark job — for data
-#: that fits in one task. r13 (optimization round) re-measured the
-#: crossover at the sf0.1 corpus graph (272,690 pairs → 545k directed
-#: edges): driver union-find 0.36 s + 1.4 s bounded collect vs 10.7 s of
-#: distributed rounds — the fixpoint's per-round fixed cost keeps the
-#: true crossover far above the old 200k cap, so the cap is now 2M
-#: directed edges (collect ≤1M pair rows × 16 B ≈ 16 MB, still strictly
-#: bounded and far under driver memory / maxResultSize). Corpus-scale
-#: graphs above the cap keep the exact distributed plan (the 10×-edges
-#: flatness pin is unaffected; labels are parity-pinned between the two
-#: paths in tests/test_r10_ops.py).
+
+#: Directed-symmetric-edge count at or below which the closure runs
+#: driver-side (union-find over the collected edge list) instead of as a
+#: distributed fixpoint. The fixpoint pays O(log diameter) rounds, each a
+#: Spark job of fixed scheduling latency; at the sf0.1 corpus graph
+#: (272,690 pairs → 545k directed edges) driver union-find took 0.36 s plus
+#: a 1.4 s bounded collect against 10.7 s of distributed rounds. The cap
+#: bounds the collect at ≤1M pair rows × 16 B ≈ 16 MB, far under driver
+#: memory and maxResultSize; corpus-scale graphs above it keep the
+#: distributed plan. Read at call time, so a test forces the distributed
+#: path with ``monkeypatch.setattr(graph, "SMALL_GRAPH_EDGE_CAP", 0)``.
 SMALL_GRAPH_EDGE_CAP = 2_000_000
 
 
@@ -68,7 +73,7 @@ def _edge_tuples(und: DataFrame) -> list[tuple[int, int]]:
     return list(zip(tbl.column(0).to_pylist(), tbl.column(1).to_pylist()))
 
 
-def _unionfind_components(edge_rows, comp_col: str):
+def _unionfind_components(edge_rows):
     """Driver-side exact closure for small graphs: union-find with path
     compression + union by size over the collected symmetric edge list,
     then per-component min-node labels — BYTE-IDENTICAL to the
@@ -112,82 +117,73 @@ def connected_components(
     dst: str = "dst",
     comp_col: str = "comp_id",
     max_iter: int = 20,
-    pointer_jump: bool = True,
-    small_graph_cap: int = SMALL_GRAPH_EDGE_CAP,
 ) -> DataFrame:
     """Connected components of the undirected graph given as an edge list.
 
     Returns one row per node that appears in ``edges`` (nodes with no
     edges are singletons by definition and are not emitted — callers
-    wanting them can union an anti-join of the vertex table afterwards):
-    ``(node, comp_col)`` where ``comp_col`` is the MINIMUM node id in the
-    component — deterministic, and directly usable as the "keeper" id in
-    keep-one-per-cluster dedup.
+    wanting them can union an anti-join of the vertex table afterwards,
+    or add a self-edge per node): ``(node, comp_col)``, both long, where
+    ``comp_col`` is the MINIMUM node id in the component — deterministic,
+    and directly usable as the "keeper" id in keep-one-per-cluster dedup.
+    Ids are compared as longs (``cast("long")``), so they must be
+    integral.
 
     EAGER: convergence is data-dependent, so this runs Spark jobs at call
-    time (one scalar agg per round) and returns the final materialized
-    label frame. Converges in O(log diameter) rounds with
-    ``pointer_jump`` (default), O(diameter) without; raises
-    ``RuntimeError`` if ``max_iter`` rounds don't reach the fixpoint
-    rather than returning silently wrong labels.
+    time and returns the final materialized label frame: a LocalRelation
+    from driver-side union-find when the graph is within
+    ``SMALL_GRAPH_EDGE_CAP``, else the distributed fixpoint, which
+    converges in O(log diameter) rounds and raises ``RuntimeError`` if
+    ``max_iter`` rounds don't reach it rather than returning silently
+    wrong labels. Every persisted frame is released on every exit, the
+    raising ones included.
     """
     spark = edges.sparkSession
     par = spark.sparkContext.defaultParallelism
     # Materialize the RAW directed edge list once (one cache, one count):
     # the small-graph test and the driver-side collect both run over it
-    # directly, so the pre-r13 union+distinct+repartition shuffles — two
-    # extra exchanges paid by EVERY per-batch admission closure before its
-    # first byte of useful work — exist only on the distributed path, where
-    # they are amortized over the fixpoint rounds. Union-find is
-    # orientation- and multiplicity-agnostic, so collecting the raw pairs
-    # (instead of the symmetrized distinct edges) yields identical labels.
+    # directly, so the union+distinct+repartition shuffles exist only on
+    # the distributed path, where the fixpoint rounds amortize them.
+    # Union-find is orientation- and multiplicity-agnostic, so collecting
+    # the raw pairs (instead of the symmetrized distinct edges) yields
+    # identical labels.
     und = edges.select(
         F.col(src).cast("long").alias("u"), F.col(dst).cast("long").alias("v")
     ).persist()
-    n_und = und.count()
-    if 2 * n_und <= small_graph_cap:
-        # Small-graph fast path (r10; restructured + re-capped r13): the
-        # distributed fixpoint costs O(log diameter) Spark JOBS of fixed
-        # scheduling latency — measured 10.7 s at 545k directed edges
-        # where the driver union-find closure is 0.36 s. The collect is
-        # BOUNDED by the cap and arrives as ONE Arrow batch of two long
-        # columns (~16 MB of payload at the 1M-pair cap; raw non-distinct
-        # edges, so duplicate-heavy lists collect every copy — still
-        # cap-bounded. This is the one deliberate driver materialization
-        # in the graph family, cap-guarded and label-parity-pinned against
-        # the distributed path in tests/test_r10_ops.py); anything bigger
-        # takes the distributed loop below, so 100 TB corpora never hit
-        # this branch.
-        edge_rows = _edge_tuples(und)
-        und.unpersist()
-        out = _unionfind_components(edge_rows, comp_col)
-        # Arrow LocalRelation: the plain createDataFrame path would ship
-        # the label rows back through parallelize + a Python worker per
-        # consuming job (io.local_frame docstring)
-        from magiceye_spark.io import local_frame
-
-        return local_frame(spark, out, f"node long, {comp_col} long")
-    fwd = und.select("u", "v")
-    rev = und.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    # Size the ROUNDS to the graph: each round is joins + a checkpoint,
-    # and near-cap graphs at full session width pay pure scheduling
-    # overhead per round. One partition per ~4k directed edges (sized
-    # from the 2·n_und upper bound of the symmetrized count — sizing
-    # only, labels unaffected), capped at session parallelism.
-    par_eff = max(2, min(par, 2 * n_und // 4000 + 1))
-    # symmetrize + dedup parallel edges (keeps join fan-out minimal),
-    # partition by join key once (from the cached raw edges), reuse every
-    # round; materialized here so `und` can be released before the rounds
-    sym = fwd.union(rev).distinct().repartition(par_eff, "u").persist()
-    sym.count()
-    und.unpersist()
-    labels = (
-        sym.select(F.col("u").alias("node"))
-        .distinct()
-        .withColumn("comp", F.col("node"))
-        .persist()
-    )
+    sym = seed = None
     try:
+        n_und = und.count()
+        if 2 * n_und <= SMALL_GRAPH_EDGE_CAP:
+            # The collect is BOUNDED by the cap and arrives as ONE Arrow
+            # batch of two long columns (raw non-distinct edges, so
+            # duplicate-heavy lists collect every copy — still
+            # cap-bounded). The labels go back as an Arrow LocalRelation:
+            # the plain createDataFrame path would ship them through
+            # parallelize + a Python worker per consuming job
+            # (io.local_frame docstring).
+            out = _unionfind_components(_edge_tuples(und))
+            return local_frame(spark, out, f"node long, {comp_col} long")
+        fwd = und.select("u", "v")
+        rev = und.select(F.col("v").alias("u"), F.col("u").alias("v"))
+        # Size the ROUNDS to the graph: each round is joins + a checkpoint,
+        # and near-cap graphs at full session width pay pure scheduling
+        # overhead per round. One partition per ~4k directed edges (sized
+        # from the 2·n_und upper bound of the symmetrized count — sizing
+        # only, labels unaffected), capped at session parallelism.
+        par_eff = max(2, min(par, 2 * n_und // 4000 + 1))
+        # symmetrize + dedup parallel edges (keeps join fan-out minimal),
+        # partition by join key once (from the cached raw edges), reuse
+        # every round; materialized here so `und` can be released before
+        # the rounds
+        sym = fwd.union(rev).distinct().repartition(par_eff, "u").persist()
+        sym.count()
+        und.unpersist()
+        seed = labels = (
+            sym.select(F.col("u").alias("node"))
+            .distinct()
+            .withColumn("comp", F.col("node"))
+            .persist()
+        )
         prev_sum = None
         for _ in range(max_iter):
             nb_min = (
@@ -201,21 +197,20 @@ def connected_components(
                     "comp"
                 ),
             )
-            if pointer_jump:
-                # comp ← comp(comp): label values are node ids (mins over
-                # the node set), so every comp has a row in `new` — inner
-                # join is total. After k rounds labels travel 2^k hops.
-                # (A second jump per round was tried in r9 and measured
-                # flat: convergence here is bound by min-label PROPAGATION
-                # through the graph — the nb_min step — not by label-chain
-                # depth, so deeper jumping buys nothing and costs a shuffle
-                # join at corpus scale.)
-                thru = new.select(
-                    F.col("node").alias("p_node"), F.col("comp").alias("p_comp")
-                )
-                new = new.join(thru, new["comp"] == thru["p_node"]).select(
-                    "node", F.col("p_comp").alias("comp")
-                )
+            # comp ← comp(comp): label values are node ids (mins over the
+            # node set), so every comp has a row in `new` — inner join is
+            # total. After k rounds labels travel 2^k hops. (A second jump
+            # per round was tried in r9 and measured flat: convergence
+            # here is bound by min-label PROPAGATION through the graph —
+            # the nb_min step — not by label-chain depth, so deeper
+            # jumping buys nothing and costs a shuffle join at corpus
+            # scale.)
+            thru = new.select(
+                F.col("node").alias("p_node"), F.col("comp").alias("p_comp")
+            )
+            new = new.join(thru, new["comp"] == thru["p_node"]).select(
+                "node", F.col("p_comp").alias("comp")
+            )
             # localCheckpoint, not persist: persist() caches *results* but
             # the logical plan still grows — the pointer-jump self-join
             # DOUBLES it every round, which is exponential in iterations
@@ -225,15 +220,16 @@ def connected_components(
             # executors, swap for reliable `checkpoint()` + checkpointDir;
             # recomputing a lost localCheckpoint block is impossible
             # because the lineage is gone.)
-            new = new.repartition(par_eff, "node").localCheckpoint(eager=True)
+            labels = new.repartition(par_eff, "node").localCheckpoint(eager=True)
+            seed.unpersist()  # the checkpoint holds the labels now
             # convergence witness: every step takes a MIN across self +
             # neighbors (+ pointer jump, also a min), so per-node labels
             # never increase — Σcomp strictly decreases until the fixpoint.
             # One scalar agg over the checkpointed frame per round, instead
             # of a join+count against the previous labels.
-            new_sum = new.agg(F.sum(F.col("comp").cast("decimal(38,0)"))).collect()[0][0]
-            labels.unpersist()
-            labels = new
+            new_sum = labels.agg(
+                F.sum(F.col("comp").cast("decimal(38,0)"))
+            ).collect()[0][0]
             if new_sum == prev_sum:
                 return labels.select("node", F.col("comp").alias(comp_col))
             prev_sum = new_sum
@@ -244,7 +240,9 @@ def connected_components(
             "nondeterministic input, not a deep graph)"
         )
     finally:
-        sym.unpersist()
+        for frame in (und, sym, seed):
+            if frame is not None:
+                frame.unpersist()
 
 
 # ------------------------------------------------- dup-cluster operators
@@ -717,47 +715,6 @@ r0 AS (SELECT node, deg, 1.0 / (SELECT n FROM nn) AS pagerank FROM deg),"""
 
 # ------------------------------------------------- delta-ingest admission
 
-def _admission_rejects_local(und: DataFrame, stored_ids: DataFrame) -> DataFrame:
-    """The small-graph verdict of :func:`indexed_admission_rejects`, run
-    driver-side over the (persisted, cap-bounded) edge frame ``und``."""
-    from magiceye_spark.io import local_frame
-
-    spark = und.sparkSession
-    labels = _unionfind_components(_edge_tuples(und), "comp_id")
-    if not labels:  # no edges → no components → nothing rejected
-        return local_frame(spark, [], "doc_id long")
-    # stored-membership of the graph's nodes: one bounded semi-join
-    # job (node count ≤ 2·edges ≤ the cap; the scan of stored ids is
-    # the same column the distributed path's labeled-join reads)
-    nodes_f = local_frame(
-        spark, [(int(n),) for n, _ in labels], "doc_id long"
-    )
-    stored = {
-        r[0]
-        for r in stored_ids.select(
-            F.col("doc_id").cast("long").alias("doc_id")
-        )
-        .join(nodes_f, "doc_id", "left_semi")
-        .collect()
-    }
-    has_existing: set = set()
-    min_incoming: dict = {}
-    for node, comp in labels:
-        if node in stored:
-            has_existing.add(comp)
-        else:
-            m = min_incoming.get(comp)
-            if m is None or node < m:
-                min_incoming[comp] = node
-    rejected = [
-        (node,)
-        for node, comp in labels
-        if node not in stored
-        and (comp in has_existing or node != min_incoming[comp])
-    ]
-    return local_frame(spark, sorted(rejected), "doc_id long")
-
-
 def indexed_admission_rejects(pairs: DataFrame, stored_ids: DataFrame) -> DataFrame:
     """The shared closure-verdict core of persistent-store delta admission
     (:func:`sigstore.delta_dedup_admit_indexed`,
@@ -772,58 +729,35 @@ def indexed_admission_rejects(pairs: DataFrame, stored_ids: DataFrame) -> DataFr
     from ``pairs`` are singletons and are never rejected (the caller's
     anti-join admits them).
 
-    Ids are compared as longs: both paths cast ``doc_a``/``doc_b`` (and
-    the driver-side path the stored ids) with ``cast("long")``, so int
-    and long id columns give the same verdict, and the result is a
-    ``doc_id long`` column either way. Ids must therefore be integral;
-    the anti-join on the caller's id column casts back as needed.
-
-    Small-graph fast path (r14): per-batch admission graphs are tiny
-    (delta-touching edges only), yet the label/verdict joins below cost
-    4-6 shuffle stages of pure scheduling latency per micro-batch — the
-    fixed cost the r13 c8 bench surfaced on every ingest-loop seat.
-    When the edge list fits the closure's driver cap, the WHOLE verdict
-    runs driver-side: collect the edges once (the same bounded collect
-    the closure fast path already pays), union-find in Python, resolve
-    stored-membership of the graph's nodes with ONE semi-join job, and
-    return the rejected ids as a LocalRelation. Same rule, same math,
-    byte-identical output (the rule is integer set logic — no floats);
-    corpus-scale graphs keep the distributed plan unchanged. The cap is
-    read from ``SMALL_GRAPH_EDGE_CAP`` at call time, so a test can force
-    either path; tests/test_graph.py pins both on the same graphs."""
-    und = pairs.select(
-        F.col("doc_a").cast("long").alias("doc_a"),
-        F.col("doc_b").cast("long").alias("doc_b"),
-    ).persist()
-    try:
-        if 2 * und.count() <= SMALL_GRAPH_EDGE_CAP:
-            return _admission_rejects_local(und, stored_ids)
-        # corpus-scale graph: the distributed closure + verdict joins.
-        # connected_components' own select/persist lands on top of the
-        # already-persisted edge frame, so its count reads the cache.
-        comps = connected_components(
-            und, src="doc_a", dst="doc_b"
-        ).select(F.col("node").alias("doc_id"), "comp_id")
-    finally:
-        # every exit — verdict returned, distributed closure built, or a
-        # raise from the collect / semi-join — releases the edge cache
-        und.unpersist()
-    labeled = comps.join(
-        stored_ids.select("doc_id").withColumn("_stored", F.lit(1)),
-        "doc_id",
-        "left",
-    ).withColumn("is_incoming", F.col("_stored").isNull())
-    verdicts = labeled.groupBy("comp_id").agg(
-        F.max(F.when(~F.col("is_incoming"), 1).otherwise(0)).alias("has_existing"),
-        F.min(F.when(F.col("is_incoming"), F.col("doc_id"))).alias("min_incoming"),
+    The labels come from :func:`connected_components` (a LocalRelation
+    for the small per-batch graphs), and the rule is applied once,
+    in-plan: the stored ids are semi-joined to the graph's nodes, so the
+    store scan streams past a small build side, and ``has_existing`` /
+    ``min_incoming`` are window aggregates over ``comp_id``. Ids are
+    compared as longs (``cast("long")`` on both the pairs and the stored
+    ids), so int and long id columns give the same verdict, and the result
+    is a ``doc_id long`` column either way. Ids must therefore be
+    integral; the anti-join on the caller's id column casts back as
+    needed."""
+    comps = connected_components(pairs, "doc_a", "doc_b").withColumnRenamed(
+        "node", "doc_id"
+    )
+    stored = (
+        stored_ids.select(F.col("doc_id").cast("long").alias("doc_id"))
+        .join(comps, "doc_id", "left_semi")
+        .withColumn("_stored", F.lit(True))
     )
     return (
-        labeled.where(F.col("is_incoming"))
-        .join(verdicts, "comp_id")
-        .where(
-            (F.col("has_existing") == 1)
-            | (F.col("doc_id") != F.col("min_incoming"))
+        comps.join(stored, "doc_id", "left")
+        .selectExpr("doc_id", "comp_id", "_stored IS NULL AS is_incoming")
+        .selectExpr(
+            "doc_id",
+            "is_incoming",
+            "bool_or(NOT is_incoming) OVER (PARTITION BY comp_id) AS has_existing",
+            "min(IF(is_incoming, doc_id, NULL)) OVER (PARTITION BY comp_id)"
+            " AS min_incoming",
         )
+        .where("is_incoming AND (has_existing OR doc_id != min_incoming)")
         .select("doc_id")
     )
 

@@ -29,7 +29,9 @@ The lifecycle contract:
   component over the delta-touching pair graph holds no stored item and
   it is the minimum-id incoming member. The rule is
   :func:`graph.indexed_admission_rejects`, applied once here for all
-  three stores, followed by the anti-join of the batch.
+  three stores, followed by the anti-join of the batch. It is written
+  once, in-plan, over labels from :func:`graph.connected_components`
+  (driver-side union-find for per-batch graphs within its edge cap).
 - **Overwrite sink on replay.** foreachBatch re-runs a batch after a
   crash before its checkpoint commits. Signing or encoding is a pure
   function of content and the frozen model, admission is deterministic

@@ -923,10 +923,12 @@ def events_psi_stream_twin_q(spark, sf_dir):
 def dup_graph_components_q(spark, sf_dir):
     """Transitive closure of the Jaccard near-dup pair relation:
     (doc_id, comp_id) with comp_id = min doc_id of the cluster (the
-    keep-one keeper). Spark side is iterative min-label propagation with
-    pointer jumping (O(log diameter) rounds, lineage truncated per round
-    via localCheckpoint); oracle is a DuckDB recursive CTE over the same
-    pair SQL — an iterative algorithm with an exact SQL oracle."""
+    keep-one keeper). Spark side is graph.connected_components:
+    driver-side union-find within its edge cap, else iterative min-label
+    propagation with pointer jumping (O(log diameter) rounds, lineage
+    truncated per round via localCheckpoint); oracle is a DuckDB
+    recursive CTE over the same pair SQL — an iterative algorithm with an
+    exact SQL oracle."""
     return graph.dup_graph_components(_docs(spark, sf_dir))
 
 

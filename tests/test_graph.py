@@ -11,6 +11,10 @@ def _persisted(spark):
     return len(spark.sparkContext._jsc.getPersistentRDDs())
 
 
+def _persisted_ids(spark):
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+
 def test_admission_rejects_unpersists_edges_on_raise(spark, monkeypatch):
     """A raise inside the small-graph verdict (here: the edge collect)
     must still unpersist the edge frame: a streaming driver calls this
@@ -32,6 +36,26 @@ def test_admission_rejects_unpersists_edges_on_raise(spark, monkeypatch):
     with pytest.raises(RuntimeError, match="edge collect failed"):
         graph.indexed_admission_rejects(pairs, stored)
     assert _persisted(spark) == before
+
+
+def test_admission_rejects_unpersists_on_raise_distributed(spark, monkeypatch):
+    """The same guarantee on the distributed closure (forced by a zero
+    cap): a raise inside the fixpoint rounds must release the cached
+    symmetrized edges and seed labels. Compared by RDD id, since
+    checkpoints of earlier calls may be cleaned meanwhile."""
+    pairs = local_frame(spark, [(1, 2), (2, 3), (10, 11)], "doc_a long, doc_b long")
+    stored = local_frame(spark, [(1,)], "doc_id long")
+    monkeypatch.setattr(graph, "SMALL_GRAPH_EDGE_CAP", 0)
+    before = _persisted_ids(spark)
+
+    def boom(self, eager=True):
+        assert _persisted_ids(spark) - before  # the edge cache is live
+        raise RuntimeError("fixpoint round failed")
+
+    monkeypatch.setattr(type(pairs), "localCheckpoint", boom)
+    with pytest.raises(RuntimeError, match="fixpoint round failed"):
+        graph.indexed_admission_rejects(pairs, stored)
+    assert not _persisted_ids(spark) - before
 
 
 def _seeded_admission_graph(seed):

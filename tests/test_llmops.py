@@ -340,6 +340,17 @@ def test_fused_cluster_reps_cover_verified_pairs(spark, sf_dir):
         assert labels[r["doc_a"]] == labels[r["doc_b"]]
 
 
+def test_bucket_components_long_chain_and_singleton(spark):
+    """A 30-doc bucket chain (doc i and i+1 share bucket 1000+i) is one
+    cluster however many hops it spans, and a doc that shares no bucket
+    is its own cluster."""
+    rows = [(i, 1000 + i) for i in range(29)] + [(i + 1, 1000 + i) for i in range(29)]
+    rows.append((500, 9000))
+    banded = spark.createDataFrame(rows, "doc_id long, bkey long")
+    got = {r["doc_id"]: r["cluster"] for r in dedup.bucket_components(banded).collect()}
+    assert got == {**{i: 0 for i in range(30)}, 500: 500}
+
+
 def test_language_id_deterministic_argmax(spark):
     rows = [
         (1, "the cat and the dog of the house is big", "en", "s", 1),

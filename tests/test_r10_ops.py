@@ -105,13 +105,14 @@ def test_drain_raises_on_timeout(spark, tmp_path):
 
 # ------------------- small-graph union-find fast path: label parity
 
-def test_unionfind_fast_path_label_parity(spark):
+def test_unionfind_fast_path_label_parity(spark, monkeypatch):
     """The r10 driver-side union-find fast path must produce labels
     BYTE-IDENTICAL to the distributed fixpoint (min node id per
     component) on a randomized graph mixing chains, cliques, islands and
     hubs — the admission-graph shapes it exists for."""
     import random
 
+    from magiceye_spark.llmops import graph
     from magiceye_spark.llmops.graph import connected_components
 
     rng = random.Random(20260815)
@@ -134,10 +135,8 @@ def test_unionfind_fast_path_label_parity(spark):
     fast = {
         r.node: r.comp_id for r in connected_components(df).collect()
     }
-    dist = {
-        r.node: r.comp_id
-        for r in connected_components(df, small_graph_cap=0).collect()
-    }
+    monkeypatch.setattr(graph, "SMALL_GRAPH_EDGE_CAP", 0)
+    dist = {r.node: r.comp_id for r in connected_components(df).collect()}
     assert fast == dist
     assert len(fast) == len({n for e in edges for n in e})
 

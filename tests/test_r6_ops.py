@@ -439,12 +439,15 @@ def test_scd2_point_in_time_semantics(spark):
     assert "CartesianProduct" not in plan and "BroadcastNestedLoop" not in plan
 
 
-def test_connected_components_mechanism(spark):
+def test_connected_components_mechanism(spark, monkeypatch):
     """Min-label propagation on a hand-built graph: a 6-node chain (the
     transitive case pair filters miss), a 2-node island, and a triangle —
-    every node must land on its component's MINIMUM id, with and without
-    pointer jumping."""
+    every node must land on its component's MINIMUM id on the distributed
+    path (forced by a zero small-graph cap)."""
+    from magiceye_spark.llmops import graph
     from magiceye_spark.llmops.graph import connected_components
+
+    monkeypatch.setattr(graph, "SMALL_GRAPH_EDGE_CAP", 0)
 
     edges = spark.createDataFrame(
         # chain 10-11-12-13-14-15, island {20,21}, triangle {30,31,32}
@@ -453,9 +456,8 @@ def test_connected_components_mechanism(spark):
         "src long, dst long",
     )
     expect = {n: 10 for n in range(10, 16)} | {20: 20, 21: 20} | {n: 30 for n in (30, 31, 32)}
-    for pj in (True, False):
-        got = {r.node: r.comp_id for r in connected_components(edges, pointer_jump=pj, small_graph_cap=0).collect()}
-        assert got == expect, f"pointer_jump={pj}"
+    got = {r.node: r.comp_id for r in connected_components(edges).collect()}
+    assert got == expect
 
 
 def test_triangle_stats_planted_graph(spark):
@@ -488,25 +490,28 @@ def test_triangle_stats_planted_graph(spark):
     assert sum(t for (_, t, _) in got.values()) == 3 * 4
 
 
-def test_connected_components_deep_chain_log_rounds(spark):
-    """A 64-node path graph: pointer jumping must converge within
-    O(log diameter) rounds (max_iter=8 covers 2^8 hops ≫ 63), while plain
-    propagation needs O(diameter) rounds and must raise — not return
-    wrong labels — when capped below that."""
+def test_connected_components_deep_chain_log_rounds(spark, monkeypatch):
+    """A 64-node path graph on the distributed path: pointer jumping must
+    converge within O(log diameter) rounds (max_iter=8 covers 2^8 hops ≫
+    63), and must raise — not return wrong labels — when capped at two
+    rounds, which cannot close the path."""
     import pytest as _pytest
 
+    from magiceye_spark.llmops import graph
     from magiceye_spark.llmops.graph import connected_components
+
+    monkeypatch.setattr(graph, "SMALL_GRAPH_EDGE_CAP", 0)
 
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(63)], "src long, dst long"
     )
     got = {
         r.node: r.comp_id
-        for r in connected_components(edges, max_iter=8, small_graph_cap=0).collect()
+        for r in connected_components(edges, max_iter=8).collect()
     }
     assert got == {n: 0 for n in range(64)}
     with _pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(edges, max_iter=5, pointer_jump=False, small_graph_cap=0)
+        connected_components(edges, max_iter=2)
 
 
 def test_keep_per_cluster_drops_chain_middles(spark):
